@@ -44,7 +44,7 @@ Methodology:
   fixed driver-side cost, irrelevant at cluster scale); the min is the
   reproducible plan cost.
 - COLD-TRIAL ACCOUNTING (r12, VERDICT r11 #1/#3): every trial starts with
-  the query's ``persist_scoped`` cache generation released, so each trial
+  the query's cache generation (``cache.generation``) released, so each trial
   rebuilds its persists and the recorded min is the honest cold cost — a
   measurement fix, not an optimization: pre-r12 a scoped-persist query's
   trial 2 read trial 1's cache blocks and min-of-N recorded a warm cache
@@ -228,7 +228,7 @@ def timed_min(
 
     ``pre``: run OUTSIDE the timed region before every trial. The headline
     loop passes the scoped-cache release (VERDICT r11 #1/#3 cold-trial
-    accounting): a query whose plan registers ``persist_scoped`` caches
+    accounting): a query whose cache generation holds persists
     rebuilds them in every trial, so min-of-N records the reproducible COLD
     cost — pre-r12 trial 2 read trial 1's still-registered cache blocks and
     the recorded min measured a cache read, not the query. The RERUN thunk
@@ -1174,7 +1174,7 @@ def main() -> None:
         # single-shot served timings)
         "served_trials": SERVED_TRIALS,
         # the warm-capable set (VERDICT r11 #3): these queries registered
-        # persist_scoped caches, which the r12 cold-trial accounting
+        # persists in their cache generation, which the cold-trial accounting
         # releases between trials — their recorded numbers are honest COLD
         # costs; a steady-state same-sf rerun (caches warm) is cheaper.
         "scoped_cache_queries": warm_capable,

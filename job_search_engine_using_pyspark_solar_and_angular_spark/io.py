@@ -36,18 +36,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # fixture tables' schemas are part of the testdata contract, so a path's
 # schema never changes within a process. Data is still read fresh from
 # parquet on every action — only the SCHEMA resolution is reused.
-# Keyed on (path, mtime) (ADVICE r11): a fixture regenerated in-process at
+# Keyed on (path, mtime_ns) (ADVICE r11): a fixture regenerated in-process at
 # the same path with a different schema misses the cache instead of
 # silently reading with the stale pinned schema. The mtime probe is one
 # os.stat — noise next to the ~70 ms footer read it avoids; stale
 # (path, old_mtime) entries are dropped on sight so the dict stays one
 # entry per live path.
-_SCHEMA_CACHE: dict[str, tuple[float, "object"]] = {}
+_SCHEMA_CACHE: dict[str, tuple[int, "object"]] = {}
 
 
 def _pinned_schema(spark: SparkSession, path: str):
     try:
-        mtime = os.stat(path).st_mtime
+        mtime = os.stat(path).st_mtime_ns
     except OSError:
         # path missing/unstatable: let spark.read raise its own error
         return spark.read.parquet(path).schema

@@ -32,6 +32,10 @@ checkpoint files are written (the classic RDD-checkpoint double-compute),
 and a fault-tolerance cut that hasn't happened yet protects nothing — so
 the reliable path always materializes now.
 
+Local cuts are owned like persists (``cache.own_cut``): the enclosing
+registry query's generation or ``cache.scope`` releases their blocks;
+outside any owner Spark's ContextCleaner reclaims them.
+
 Retention cost of reliable mode: each cut leaves one materialized copy of
 that round's output under ``checkpoint_dir``, and Spark does NOT delete
 superseded checkpoints by default (``spark.cleaner.referenceTracking.
@@ -47,6 +51,9 @@ algorithms, budget dir size ≈ rounds × round-output-size up front.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ..cache import own_cut
 
 
 def lineage_cut(
@@ -58,9 +65,30 @@ def lineage_cut(
     result (see module docstring); reliable mode is always eager.
     """
     if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
+        return own_cut(df.localCheckpoint(eager=eager))
     sc = df.sparkSession.sparkContext
     # setCheckpointDir is idempotent and cheap; set it per cut so callers
     # need no session-level setup and two jobs can use different dirs.
     sc.setCheckpointDir(checkpoint_dir)
     return df.checkpoint(eager=True)
+
+
+def symmetric_edge_cut(
+    pairs: DataFrame, src: str, dst: str, checkpoint_dir: str | None = None
+) -> DataFrame:
+    """The undirected edge list ``(a, b)`` of a pair table — both
+    orientations, distinct — cut eagerly so no later round's plan reaches
+    back into the pair pipeline. ``pairs`` is persisted only for the cut
+    (the union reads it twice), so the cut must be eager: a deferred one
+    would recompute the pair pipeline uncached, once per union branch. The
+    cut belongs to the enclosing owner."""
+    pairs_p = pairs.persist()
+    try:
+        return lineage_cut(
+            pairs_p.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(pairs_p.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct(),
+            checkpoint_dir,
+        )
+    finally:
+        pairs_p.unpersist()

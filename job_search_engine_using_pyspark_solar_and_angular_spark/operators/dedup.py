@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_61, md5_long, token_ngrams
 from ..functions.text import tokenize_normalized
-from .checkpointing import lineage_cut
+from ..cache import persist
+from .checkpointing import lineage_cut, symmetric_edge_cut
 
 # Deterministic universal-hash parameters for MinHash permutations (small odd
 # constants; see functions.hashing.minhash_value for the exactness argument).
@@ -218,7 +219,7 @@ def minhash_lsh_candidates(
     # RUNTIME via AQE's exchange reuse (the static plan shows two Exchange
     # subtrees, no ReusedExchange node) — disabling AQE/exchange reuse
     # silently doubles the pipeline cost. Pinned by
-    # tests/test_dedup.py::test_lsh_self_join_reuses_exchange_at_runtime.
+    # tests/test_operators.py::test_lsh_self_join_reuses_exchange_at_runtime.
     banded = minhash_bucket_table(
         df, id_col, text_col, shingle_n, num_perm, bands,
         shingle_hashes=shingle_hashes,
@@ -337,10 +338,8 @@ def refresh_lsh_buckets(
     shingled and hashed."""
     from .pipeline import snapshot_diff
 
-    # lineage_cut (eager localCheckpoint), not persist: the delta feeds two
-    # downstream branches, and a persist here is never unpersisted by the
-    # lazy caller — leaked cache blocks in long-running maintenance loops.
-    # Checkpoint blocks are dropped when the DataFrame is garbage-collected.
+    # lineage_cut (eager localCheckpoint): the delta feeds two downstream
+    # branches from one materialization.
     delta = lineage_cut(
         snapshot_diff(
             old_docs.select(id_col, text_col),
@@ -390,20 +389,7 @@ def connected_components(
     pipeline (LSH pairs -> closure) is oracle-checked against a DuckDB
     recursive CTE (queries/oracles.py ext_dedup_clusters).
     """
-    # one materialization of the (possibly expensive) pair-generation plan:
-    # persist pairs so the symmetric union reads it once, then checkpoint
-    # edges so NO later round's plan reaches back into the pair pipeline.
-    # The edges cut MUST stay eager: pairs_p is unpersisted right after, so
-    # a deferred cut would recompute the whole pair pipeline uncached (and
-    # twice — both union branches) at first use.
-    pairs_p = pairs.persist()
-    edges = lineage_cut(
-        pairs_p.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(pairs_p.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        checkpoint_dir,
-    )
-    pairs_p.unpersist()
+    edges = symmetric_edge_cut(pairs, src, dst, checkpoint_dir)
     return _cc_label_loop(edges, checkpoint_dir, max_iter, stats=stats)
 
 
@@ -605,13 +591,12 @@ def ngram_jaccard_pairs(
         toks = ensure_parallelism(df).select(
             F.col(id_col).alias("doc_id"), tokenize_normalized(text_col).alias("tk")
         )
-        sh = (
+        sh = persist(  # feeds sizes + both join sides: 3 subtrees, 1 computation
             toks.select(
                 "doc_id", F.explode(token_ngrams(F.col("tk"), shingle_n)).alias("sh")
             )
             .select("doc_id", md5_long(F.col("sh")).alias("h"))
             .distinct()
-            .persist()  # feeds sizes + both join sides: 3 subtrees, 1 computation
         )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     sha = sh.select(F.col("doc_id").alias("doc_a"), "h")
@@ -703,7 +688,7 @@ def simhash_near_dups(
     width = bits // blocks
     mask = (1 << width) - 1
     # persist: the chunked fingerprints feed both sides of the block self-join
-    sh = simhash(df, id_col, text_col, bits).persist()
+    sh = persist(simhash(df, id_col, text_col, bits))
     chunk_exprs = F.array(
         *[
             F.shiftright(F.col("simhash"), i * width).bitwiseAND(F.lit(mask))
@@ -773,7 +758,7 @@ def repeated_spans(
     toks = ensure_parallelism(df).select(
         F.col(id_col).alias("doc_id"), tokenize_normalized(text_col).alias("tk")
     )
-    grams = (
+    grams = persist(
         toks.filter(F.size("tk") >= k)
         .select(
             "doc_id",
@@ -786,7 +771,6 @@ def repeated_spans(
         )
         # posexplode is 0-based; token positions below are 1-based
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "h")
-        .persist()
     )
     rep = (
         grams.groupBy("h")
@@ -851,14 +835,7 @@ def connected_components_star(
     hash sums between consecutive rounds of a deterministic contraction;
     treat it as the driver-side fixpoint test it is).
     """
-    pairs_p = pairs.persist()
-    edges = lineage_cut(
-        pairs_p.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(pairs_p.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        checkpoint_dir,
-    )
-    pairs_p.unpersist()
+    edges = symmetric_edge_cut(pairs, src, dst, checkpoint_dir)
 
     def sym(e):
         und = e.filter(F.col("a") != F.col("b")).select(

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpointing import lineage_cut
+from ..cache import persist
+from .checkpointing import lineage_cut, symmetric_edge_cut
 
 SCALE = 10**12
 
@@ -64,7 +65,7 @@ def triangle_stats(
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not assume_distinct:
         e = e.distinct()
-    e = e.persist()
+    e = persist(e)
     e1 = e.select(F.col("a"), F.col("b").alias("m"))
     e2 = e.select(F.col("a").alias("m"), F.col("b").alias("c"))
     wedges = e1.join(e2, "m").select("a", "c", F.col("m").alias("b"))
@@ -149,14 +150,7 @@ def pagerank_int(
     than it wants 5 driver planning passes."""
     _require_exactly_one_edge_source(pairs, edges)
     if edges is None:
-        pairs_p = pairs.persist()
-        edges = lineage_cut(
-            pairs_p.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .union(pairs_p.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-            .distinct(),
-            checkpoint_dir,
-        )
-        pairs_p.unpersist()
+        edges = symmetric_edge_cut(pairs, src, dst, checkpoint_dir)
     deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
     if checkpoint_dir is None:
         # fused fixed-round plan: one planning pass, no barrier jobs
@@ -239,14 +233,7 @@ def pagerank_personalized_int(
     ``edges``: pre-cut symmetric edge table (see :func:`pagerank_int`)."""
     _require_exactly_one_edge_source(pairs, edges)
     if edges is None:
-        pairs_p = pairs.persist()
-        edges = lineage_cut(
-            pairs_p.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .union(pairs_p.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-            .distinct(),
-            checkpoint_dir,
-        )
-        pairs_p.unpersist()
+        edges = symmetric_edge_cut(pairs, src, dst, checkpoint_dir)
     deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
     if checkpoint_dir is not None:
         deg = lineage_cut(deg, checkpoint_dir, eager=False)

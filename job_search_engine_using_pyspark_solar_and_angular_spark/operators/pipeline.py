@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..functions.hashing import md5_long, token_ngrams
 from ..functions.text import tokenize_normalized
 
@@ -113,7 +114,7 @@ def decontaminate(
         # the broadcast build reads the relation exactly once anyway)
         bench_sh = F.broadcast(bench_sh)
     else:
-        bench_sh = bench_sh.persist()  # the guardrail count() materializes
+        bench_sh = persist(bench_sh)  # the guardrail count() materializes
         # the cache the join reuses
         if bench_sh.count() <= broadcast_limit_rows:
             bench_sh = F.broadcast(bench_sh)

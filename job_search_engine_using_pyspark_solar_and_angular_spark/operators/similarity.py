@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
 from ..functions.vectors import cosine, dot
+from .checkpointing import lineage_cut
 
 
 def cosine_topk(
@@ -178,7 +179,7 @@ def ivf_train_kmeans(
     (cent_id, pos) mean agg + array re-pack via ``array_agg`` sorted by pos —
     never a collect_list of whole vectors into one task. Empty clusters keep
     their previous centroid (left-join + coalesce). ``checkpoint`` truncates
-    lineage each round with ``localCheckpoint`` — without it, iteration N
+    lineage each round with ``lineage_cut`` — without it, iteration N
     re-derives every earlier round under each broadcast (the classic
     iterative-algorithm trap).
 
@@ -188,7 +189,7 @@ def ivf_train_kmeans(
     """
     cents = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
     if checkpoint:
-        cents = cents.localCheckpoint(eager=True)
+        cents = lineage_cut(cents)
     for _ in range(iters):
         assigned = ivf_assign(embeddings, cents, id_col, vec_col)
         dimwise = assigned.select(
@@ -216,7 +217,7 @@ def ivf_train_kmeans(
             )
         )
         if checkpoint:
-            cents = cents.localCheckpoint(eager=True)
+            cents = lineage_cut(cents)
     return cents
 
 
@@ -847,8 +848,6 @@ def pq_adc_topk(
     serving scale the encode runs once at index time and ADC reads m
     SMALL-int columns per candidate — the bytes/candidate that make PQ the
     RAM-resident tier when even int8 full codes blow the budget."""
-    from .checkpointing import lineage_cut
-
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible into m={m} subspaces")
     dsub = dim // m
@@ -968,8 +967,6 @@ def write_vector_index_pq(
     lineage_cut: codebook selection and the encode pass both consume it,
     and an uncut plan re-quantized the whole corpus for each."""
     from pyspark.sql import Window
-
-    from .checkpointing import lineage_cut
 
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible into m={m} subspaces")
@@ -1241,8 +1238,6 @@ def cluster_assign_int8(
     id tie-break as the SQL oracle's ROW_NUMBER. ``checkpoint_dir``:
     reliable materialization on a cluster (same contract as the
     iterative algorithms)."""
-    from .checkpointing import lineage_cut
-
     codes = lineage_cut(
         quantize_int8_corpus(embeddings, id_col, vec_col), checkpoint_dir
     )

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..functions.hashing import md5_long
 
 
@@ -83,7 +84,7 @@ def cms_estimate(
     # persist: the sketch feeds ``depth`` broadcast exchanges below; without
     # it each broadcast re-executes the full build scan (measured: 4 extra
     # corpus scans per estimate). The cached table is ≤ depth×width rows.
-    sketch = sketch.persist()
+    sketch = persist(sketch)
     out = probes
     for i in range(depth):
         s_i = sketch.filter(F.col("row") == i).select(

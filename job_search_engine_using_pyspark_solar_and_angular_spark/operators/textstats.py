@@ -11,8 +11,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..functions.hashing import md5_long
 from ..functions.text import tokenize_normalized, tokenize_ws
+from .checkpointing import lineage_cut
 
 # Tiny deterministic stopword profiles for the n-gram/stopword language
 # heuristic. Real pipelines swap in fastText etc. via the pandas_udf hook; the
@@ -225,13 +227,11 @@ def unigram_logprob(
     hot keys."""
     from ..io import ensure_parallelism
 
-    toks = (
-        ensure_parallelism(df)
-        .select(
+    toks = persist(  # both passes read the same exploded stream
+        ensure_parallelism(df).select(
             F.col(id_col).alias("doc_id"),
             F.explode(tokenize_normalized(text_col)).alias("token"),
         )
-        .persist()  # both passes read the same exploded stream
     )
     freqs = toks.groupBy("token").agg(F.count("*").alias("c"))
     total = freqs.agg(F.sum("c").alias("total"))
@@ -491,16 +491,16 @@ def pmi_collocations(
     TakeOrderedAndProject top-k. Deterministic: ties break on the pair."""
     from ..io import ensure_parallelism
 
-    toks = ensure_parallelism(df).select(
+    toks = persist(ensure_parallelism(df).select(
         F.col(id_col).alias("doc_id"), tokenize_normalized(text_col).alias("tk")
-    ).persist()
+    ))
     from ..functions.hashing import token_ngrams
 
-    uni = (
+    uni = persist(
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cw"))
-    ).persist()
+    )
     bi = (
         toks.select(F.explode(token_ngrams(F.col("tk"), 2)).alias("pair"))
         .groupBy("pair")
@@ -681,20 +681,18 @@ def bigram_surprisal(
     """
     from ..io import ensure_parallelism
 
-    toks = (
-        ensure_parallelism(df)
-        .select(
+    toks = persist(
+        ensure_parallelism(df).select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(tokenize_normalized(text_col)).alias("pos", "w"),
         )
-        .persist()
     )
     nxt = toks.select(
         "doc_id", (F.col("pos") - 1).alias("pos"), F.col("w").alias("w2")
     )
-    bigrams = toks.join(nxt, ["doc_id", "pos"]).select(
+    bigrams = persist(toks.join(nxt, ["doc_id", "pos"]).select(
         "doc_id", F.col("w").alias("w1"), "w2"
-    ).persist()
+    ))
     big_c = bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     ctx_c = bigrams.groupBy("w1").agg(F.count("*").alias("c1"))
     vocab = toks.select("w").distinct().agg(F.count("*").alias("v"))
@@ -777,7 +775,11 @@ def _bpe_learn(df: DataFrame, text_col: str, rounds: int):
 
     from ..io import ensure_parallelism
 
-    words = (
+    # lazy cut: round 1's argmax job materializes the vocab blocks in the
+    # same job instead of paying a separate fill job first (measured ~0.1 s
+    # off the train path at sf0.1; rounds 2+ read the cached blocks either
+    # way)
+    words = lineage_cut(
         ensure_parallelism(df)
         .select(F.explode(tokenize_normalized(text_col)).alias("word"))
         .groupBy("word")
@@ -792,12 +794,8 @@ def _bpe_learn(df: DataFrame, text_col: str, rounds: int):
                 ),
             ).alias("sym"),
             "wc",
-        )
-        # lazy cut: round 1's argmax job materializes the vocab blocks in
-        # the same job instead of paying a separate fill job first
-        # (measured ~0.1 s off the train path at sf0.1; rounds 2+ read
-        # the cached blocks either way)
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     merge_rows: list[tuple] = []
     for r in range(1, rounds + 1):

@@ -215,10 +215,10 @@ def write_outputs(
     the exact rows the CSV needs. One compute, two writes — at 100 TB the
     difference between reading the raw corpus once and twice; the re-read
     touches only the (post-filter, output-sized) parquet. Values are
-    lossless round-trips (parquet is typed); partition columns come back
-    UNINFERRED (type inference disabled for the read-back — directory-name
-    re-parsing is lossy for string values like '00123') and every column is
-    cast to ``df``'s own schema before the stringify projection.
+    lossless round-trips (parquet is typed), and the read-back takes
+    ``df``'s own schema, so partition columns keep their declared types
+    instead of types re-inferred from directory names (lossy for string
+    values like '00123').
 
     ``stage_times``: optional dict that receives the per-sink wall seconds
     ({"parquet_sec", "csv_sec"}) — the parquet stage is the whole
@@ -237,26 +237,10 @@ def write_outputs(
         stage_times["parquet_sec"] = round(_time.perf_counter() - t0, 3)
     t0 = _time.perf_counter()
     if csv_path:
-        spark = df.sparkSession
-        # partition values must come back EXACTLY as written (ADVICE r11):
-        # type inference re-parses directory names, which is lossy for
-        # string partition values ('00123' -> int 123 -> '123'), so it is
-        # disabled for the read-back — columns surface as strings and the
-        # cast to df's own schema below restores the declared types.
-        _infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        _infer_prev = spark.conf.get(_infer_key, "true")
-        spark.conf.set(_infer_key, "false")
-        try:
-            # partition discovery happens at read-DataFrame creation
-            back = spark.read.parquet(parquet_path)
-        finally:
-            spark.conf.set(_infer_key, _infer_prev)
-        back = back.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in df.schema.fields
-            ]
-        )
+        # a user-specified schema gives partition columns their declared
+        # types: inferring them from directory names would turn the string
+        # '00123' into int 123 -> '123' (ADVICE r11)
+        back = df.sparkSession.read.schema(df.schema).parquet(parquet_path)
         arr_cols = {"org_media_url", "org_media_type", "org_attached_links",
                     "org_hashtags", "org_user_metions"}
         id_cols = {"org_id", "samp_id", "user_id"}

@@ -11,11 +11,13 @@ and a 100 TB result should never pay a full sort for cosmetics.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import generation, release_query_caches  # noqa: F401 (re-export)
 from ..io import load_table
 from ..functions.text import tokenize_normalized
 from ..operators.dedup import latest_wins, split_tag_union
@@ -30,107 +32,19 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 Q24_USER = "Customer#000000001"
 
 
-# (query name, sf_dir) of the registry query currently CONSTRUCTING its
-# DataFrame — a stack because a query may compose another query's builder.
-# THREAD-LOCAL (ADVICE r10): a threaded harness or serving layer building
-# two queries concurrently must not attach one query's persists to the
-# other's generation. The cache registry itself is shared (generations are
-# per query NAME) and guarded by a lock.
-import threading as _threading
-
-_TLS = _threading.local()
-
-
-def _active_query() -> list:
-    stack = getattr(_TLS, "stack", None)
-    if stack is None:
-        stack = _TLS.stack = []
-    return stack
-
-
-# per-query scoped caches: name -> (sf_dir, [persisted DataFrames])
-_SCOPED_CACHES: dict[str, tuple[str, list]] = {}
-_SCOPED_LOCK = _threading.Lock()
-
-
 def query(name: str):
-    def deco(fn):
-        import functools
+    """Register ``fn`` as query ``name``, owning its ``cache.generation``."""
 
+    def deco(fn):
         @functools.wraps(fn)
         def wrapper(spark, sf_dir, *a, **kw):
-            # one cache GENERATION per query: invoking the same query
-            # against a DIFFERENT sf_dir releases the previous
-            # invocation's persist_scoped blocks (their plans can never
-            # be cache-matched again), while same-sf_dir reruns keep the
-            # warm cache alive (Spark's CacheManager matches by analyzed
-            # plan, so the rerun's persist() aliases the same entry).
-            # Bounds the lazy-caller cache leak (ADVICE r9) without a
-            # listener: long mixed-sf sessions — certify + parity sweeps —
-            # hold at most one generation per query.
-            with _SCOPED_LOCK:
-                prev = _SCOPED_CACHES.get(name)
-                stale = None
-                if prev is not None and prev[0] != sf_dir:
-                    stale = prev[1]
-                    _SCOPED_CACHES.pop(name, None)
-                elif prev is not None:
-                    # same sf_dir: the rerun's persists alias the same cache
-                    # entries (plan identity) — drop the stale handles so the
-                    # list doesn't grow across reruns, WITHOUT unpersisting
-                    prev[1].clear()
-            for d in stale or ():
-                try:
-                    d.unpersist()
-                except Exception:
-                    pass
-            stack = _active_query()
-            stack.append((name, sf_dir))
-            try:
+            with generation(name, sf_dir):
                 return fn(spark, sf_dir, *a, **kw)
-            finally:
-                stack.pop()
 
         QUERIES[name] = wrapper
         return wrapper
 
     return deco
-
-
-def persist_scoped(df: DataFrame) -> DataFrame:
-    """``df.persist()`` whose blocks are RELEASED when the enclosing
-    registry query is next invoked against a different sf_dir (see
-    ``query``), or explicitly via :func:`release_query_caches`. Outside a
-    registry query construction it degrades to a plain persist
-    (operator-level callers manage their own lifecycle)."""
-    df = df.persist()
-    stack = _active_query()
-    if stack:
-        name, sf_dir = stack[-1]
-        with _SCOPED_LOCK:
-            entry = _SCOPED_CACHES.get(name)
-            if entry is None or entry[0] != sf_dir:
-                entry = (sf_dir, [])
-                _SCOPED_CACHES[name] = entry
-            entry[1].append(df)
-    return df
-
-
-def release_query_caches(name: str) -> bool:
-    """Unpersist and drop ``name``'s scoped-cache generation NOW (instead
-    of waiting for the next different-sf invocation). The bench's
-    cold-trial accounting (VERDICT r11 #1/#3): releasing between trials
-    makes every trial rebuild the query's persists, so min-of-N records
-    the reproducible COLD plan cost rather than a warm cache read.
-    Returns True when a generation existed (the query is warm-capable)."""
-    with _SCOPED_LOCK:
-        entry = _SCOPED_CACHES.pop(name, None)
-    for d in entry[1] if entry is not None else ():
-        try:
-            d.unpersist()
-        except Exception:
-            pass
-    return entry is not None
 
 
 @query("q01_scan_project")

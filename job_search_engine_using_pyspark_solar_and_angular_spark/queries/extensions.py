@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from ..functions.vectors import cosine
 from ..operators import dedup, multimodal, pipeline, similarity, textstats
-from .declared import QUERIES, persist_scoped, query
+from ..cache import persist
+from .declared import QUERIES, query
 
 # N5 lemma dictionary (tiny deterministic sample; production swaps in a full
 # AntBNC-style dictionary table — the plan shape is identical).
@@ -137,12 +138,9 @@ def ext_simhash(spark, sf_dir):
 @query("ext_minhash_candidates")
 def ext_minhash_candidates(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    # the bucket table is persisted at QUERY level via persist_scoped
-    # (r11): minhash_lsh_candidates' old internal persist leaked (never
-    # unpersisted, never released on sf change); the scoped persist keeps
-    # the same warm-rerun behavior every persist_scoped query has while
-    # the registry owns the release
-    banded = persist_scoped(dedup.minhash_bucket_table(d))
+    # the bucket table is persisted at QUERY level, in the query's cache
+    # generation (warm on a same-sf rerun)
+    banded = persist(dedup.minhash_bucket_table(d))
     return dedup.candidates_from_buckets(banded)
 
 
@@ -161,7 +159,7 @@ def ext_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard over the MinHash candidate pairs."""
     d = load_table(spark, sf_dir, "documents")
     # ONE corpus shingle pass feeds candidates AND the exact verify
-    sh = persist_scoped(pipeline._shingle_hashes(d, "doc_id", "text", 3))
+    sh = persist(pipeline._shingle_hashes(d, "doc_id", "text", 3))
     cand = dedup.minhash_lsh_candidates(d, shingle_hashes=sh)
     out = dedup.ngram_jaccard_pairs(d, cand, shingle_hashes=sh)
     return out.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
@@ -1040,7 +1038,7 @@ def ext_typo_pairs(spark, sf_dir):
     from ..operators.joins import fuzzy_join
 
     d = load_table(spark, sf_dir, "documents")
-    tf = persist_scoped(
+    tf = persist(
         d.select(F.explode(tokenize_normalized("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
@@ -1608,12 +1606,10 @@ def ext_curation_verdict(spark, sf_dir):
     # the standard stage-once trade)
     from ..functions.text import tokenize_normalized, tokenize_ws
 
-    # persist_scoped (not localCheckpoint): blocks are released when this
-    # query next runs against a different sf_dir (ADVICE r9 — long mixed-sf
-    # sessions hold one generation per query), and a same-sf rerun reuses
-    # the warm cache by plan identity. The checkpoint alternative is
-    # cleaner-lifecycled but measured 1.0 s slower per run (row-format
-    # blocks, no column pruning into the four consumers).
+    # persist (not localCheckpoint): a same-sf rerun reuses the warm cache
+    # by plan identity. The checkpoint alternative measured 1.0 s slower
+    # per run (row-format blocks, no column pruning into the four
+    # consumers).
     # The TEXT column is NOT cached (VERDICT r9 #3): every
     # text-derived input quality needs is a scalar count, so the counts are
     # staged in the fill projection and the cache blocks shrink by the
@@ -1668,12 +1664,12 @@ def ext_curation_verdict(spark, sf_dir):
             ).alias("repetitive"),
         )
     )
-    staged = persist_scoped(staged)
+    staged = persist(staged)
     base = staged.select("doc_id", "lang_pred", "quality", "repetitive")
     # ONE corpus tokenize+shingle+md5 pass feeds BOTH the LSH clustering and
     # both sides of decontamination (values identical to computing each
     # independently — same oracle; at 100 TB this removes a full extra scan)
-    sh = persist_scoped(
+    sh = persist(
         pipeline._shingle_hashes(
             docs, "doc_id", "text", 3,
             toks=staged.select("doc_id", F.col("__toks").alias("tk")),
@@ -2235,7 +2231,7 @@ def ext_minhash_est_jaccard(spark, sf_dir):
     from ..operators.pipeline import _shingle_hashes
 
     d = load_table(spark, sf_dir, "documents")
-    sh = persist_scoped(_shingle_hashes(d, "doc_id", "text", 3))
+    sh = persist(_shingle_hashes(d, "doc_id", "text", 3))
     sig = dedup.minhash_signatures(d, shingle_hashes=sh)
     cand = dedup.minhash_lsh_candidates(d, shingle_hashes=sh)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
@@ -2483,7 +2479,7 @@ def ext_containment(spark, sf_dir):
     Same single shingle-join pass as ext_ngram_jaccard (keep_counts=True);
     ratios are exact rationals of shingle counts, rounded 4."""
     d = load_table(spark, sf_dir, "documents")
-    sh = persist_scoped(pipeline._shingle_hashes(d, "doc_id", "text", 3))
+    sh = persist(pipeline._shingle_hashes(d, "doc_id", "text", 3))
     cand = dedup.minhash_lsh_candidates(d, shingle_hashes=sh)
     j = dedup.ngram_jaccard_pairs(d, cand, keep_counts=True, shingle_hashes=sh)
     return j.select(
@@ -2502,7 +2498,7 @@ def ext_verified_clusters(spark, sf_dir):
     otherwise chain unrelated docs into one mega-cluster. Same iterative
     closure as ext_dedup_clusters over the verified edge set."""
     d = load_table(spark, sf_dir, "documents")
-    sh = persist_scoped(pipeline._shingle_hashes(d, "doc_id", "text", 3))
+    sh = persist(pipeline._shingle_hashes(d, "doc_id", "text", 3))
     cand = dedup.minhash_lsh_candidates(d, shingle_hashes=sh)
     verified = dedup.ngram_jaccard_pairs(
         d, cand, threshold=0.5, shingle_hashes=sh
@@ -4963,7 +4959,7 @@ def ext_tpch_q15(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    rev = persist_scoped(li.groupBy("l_suppkey").agg(F.sum(_disc_cents()).alias("rc")))
+    rev = persist(li.groupBy("l_suppkey").agg(F.sum(_disc_cents()).alias("rc")))
     mx = rev.agg(F.max("rc").alias("mx"))
     return (
         rev.join(F.broadcast(mx), F.col("rc") == F.col("mx"))
@@ -5799,7 +5795,7 @@ def ext_vocab_topk_coverage(spark, sf_dir):
     from ..functions.text import tokenize_normalized as _tokn
 
     d = load_table(spark, sf_dir, "documents")
-    counts = persist_scoped(
+    counts = persist(
         d.select(F.explode(_tokn("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
@@ -5883,7 +5879,7 @@ def ext_source_vocab_overlap(spark, sf_dir):
         .agg(F.count("*").alias("c"))
     )
     w = Window.partitionBy("source").orderBy(F.col("c").desc(), "tok")
-    head = persist_scoped(
+    head = persist(
         counts.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= 100)
         .select("source", "tok")

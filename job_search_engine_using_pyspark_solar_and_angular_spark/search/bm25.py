@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from .index import SearchIndex
 
 K1 = 1.2
@@ -193,7 +194,7 @@ def more_like_this(
 
     idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
     n_docs = idx.doc_stats.agg(F.count("*").alias("n"))
-    w = (
+    w = persist(
         idx.postings.join(F.broadcast(idx.term_stats), "token")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -205,7 +206,6 @@ def more_like_this(
             .cast("long")
             .alias("w"),
         )
-        .persist()
     )
     target = w.filter(F.col("doc_id") == target_id).select(
         "token", F.col("w").alias("wq")

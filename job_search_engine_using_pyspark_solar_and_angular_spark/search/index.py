@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..functions.text import tokenize_normalized
 
 
@@ -63,13 +64,8 @@ def build_index(
     re-deriving it per subtree — the in-session analog of the materialized
     index ``write_index`` produces. Without it a single BM25 action scans the
     corpus up to 4x (postings/doc_stats/term_stats/corpus_stats subtrees).
-    The persists route through ``queries.declared.persist_scoped``: inside a
-    registry query the blocks join that query's scoped generation (released
-    on sf change or by the bench's between-trial release — pre-r12 they were
-    plain persists that leaked for the session and silently warmed trial 2);
-    outside query construction it degrades to the same plain persist."""
+    The persists belong to the enclosing cache owner (``cache.persist``)."""
     from ..io import ensure_parallelism
-    from ..queries.declared import persist_scoped
 
     if isinstance(text_col, (list, tuple)):
         text_expr = F.concat_ws(
@@ -92,11 +88,11 @@ def build_index(
         F.count("*").alias("tf")
     )
     if cache:
-        postings = persist_scoped(postings)
+        postings = persist(postings)
     doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     if cache:
         # doc_stats feeds corpus_stats (avg/count) and non-search consumers
-        doc_stats = persist_scoped(doc_stats)
+        doc_stats = persist(doc_stats)
     term_stats = postings.groupBy("token").agg(F.count("*").alias("df"))
     return SearchIndex(postings=postings, doc_stats=doc_stats, term_stats=term_stats)
 
@@ -142,11 +138,13 @@ def delta_refresh(
     broadcasts, and only changed text is re-tokenized."""
     from ..operators.pipeline import snapshot_diff
 
-    diff = snapshot_diff(
-        old_docs.select(id_col, text_col),
-        new_docs.select(id_col, text_col),
-        [id_col],
-    ).persist()  # feeds both the drop set and the rebuild set
+    diff = persist(  # feeds both the drop set and the rebuild set
+        snapshot_diff(
+            old_docs.select(id_col, text_col),
+            new_docs.select(id_col, text_col),
+            [id_col],
+        )
+    )
     to_drop = diff.select(F.col(id_col).alias("doc_id"))
     rebuild = new_docs.join(
         diff.filter(F.col("change") != "removed").select(id_col), id_col, "left_semi"

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import persist, scope
 from ..operators.dedup import minhash_bucket_table
 from ..streaming.state_store import commit_state, read_state
 from .index import SearchIndex, build_index
@@ -159,14 +160,15 @@ def serve_batch(
         if failpoint is not None:
             failpoint(label)
 
-    batch = batch.persist()
-    nb = minhash_bucket_table(
-        batch, id_col, text_col, shingle_n, num_perm, bands
-    ).persist()
-    survivors = None
-    replaced_stats = None
-    fresh_post = None
-    try:
+    # the batch's persists are released on exit, crashed attempts included:
+    # Structured Streaming retries a failed batch, and each attempt would
+    # otherwise leak its cached blocks
+    with scope():
+        batch = persist(batch)
+        nb = persist(
+            minhash_bucket_table(batch, id_col, text_col, shingle_n, num_perm, bands)
+        )
+        replaced_stats = None
         # ---- 1. gate: vs live corpus buckets, then earlier-id batch docs ---
         sup_parts = []
         if prior_segs:
@@ -194,10 +196,10 @@ def serve_batch(
         suppressed = sup_parts[0]
         for s in sup_parts[1:]:
             suppressed = suppressed.unionByName(s)
-        suppressed = suppressed.distinct().persist()
-        survivors = batch.join(
+        suppressed = persist(suppressed.distinct())
+        survivors = persist(batch.join(
             suppressed.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-        ).persist()
+        ))
         surv_ids = survivors.select(F.col(id_col).alias("doc_id"))
         _fp("gated")
 
@@ -222,7 +224,7 @@ def serve_batch(
         # arrivals plus the survivor semi-join cost more than the overlap
         # saved — 3.30 s -> 3.68 s per delta batch at sf0.1.)
         fresh = build_index(survivors, id_col, text_col)
-        fresh_post = fresh.postings.persist()
+        fresh_post = persist(fresh.postings)
         seg_table = f"{table_prefix}_seg{seg}"
 
         def _write_postings() -> None:
@@ -258,9 +260,9 @@ def serve_batch(
             )
             # churn-sized: the replaced docs' OLD rows (for tombstones and
             # the retraction side of this segment's scalar partial)
-            replaced_stats = alive_stats.join(
-                surv_ids, "doc_id", "left_semi"
-            ).persist()
+            replaced_stats = persist(
+                alive_stats.join(surv_ids, "doc_id", "left_semi")
+            )
 
         def _write_doc_stats() -> None:
             new_stats.withColumn("seg", F.lit(seg)).write.mode(
@@ -412,15 +414,6 @@ def serve_batch(
             "suppressed": n_arrived - n_indexed,
             "indexed": n_indexed,
         }
-    finally:
-        nb.unpersist()
-        batch.unpersist()
-        if survivors is not None:
-            survivors.unpersist()
-        if replaced_stats is not None:
-            replaced_stats.unpersist()
-        if fresh_post is not None:
-            fresh_post.unpersist()
 
 
 def _alive(

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..cache import persist
+
 # -- nested building blocks (subset of the Twitter v1.1 status payload the
 # reference actually touches; SURVEY.md §1.2) ------------------------------
 
@@ -234,12 +236,13 @@ def read_tweets_with_quarantine(
     JSON Lines (not multiLine arrays) keeps the input splittable — at
     100 TB one bad byte quarantines ONE line, not a whole file."""
     schema = tweet_schema().add("_corrupt_record", T.StringType())
-    df = (
+    # Spark requires materializing before referencing _corrupt_record
+    df = persist(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-    ).cache()  # Spark requires materializing before referencing _corrupt_record
+    )
     from pyspark.sql import functions as F
 
     bad = F.col("_corrupt_record").isNotNull()

@@ -335,22 +335,21 @@ def dedup_gate_batch(
     re-running the batch after a crash at ANY point — including between
     the two commit_state flips — converges to the same state as a clean
     run (pinned by the crash-injection test)."""
+    from ..cache import persist, scope
     from ..operators.dedup import minhash_bucket_table
     from .state_store import commit_state, read_state
 
-    nb = minhash_bucket_table(
-        batch, id_col, text_col, shingle_n, num_perm, bands
-    ).persist()
-    # try/finally: a crash between the two commit_state flips is the
-    # documented retry window — without the finally, Structured Streaming's
-    # automatic retries would re-persist on every attempt and leak cached
-    # blocks from each failed one.
-    merged = None
-    try:
+    # a crash between the two commit_state flips is the documented retry
+    # window — the scope releases each failed attempt's cached blocks, which
+    # Structured Streaming's automatic retries would otherwise leak
+    with scope():
+        nb = persist(
+            minhash_bucket_table(batch, id_col, text_col, shingle_n, num_perm, bands)
+        )
         existing = read_state(spark, state_path)
-        merged = (
-            nb if existing is None else existing.unionByName(nb)
-        ).distinct().persist()
+        merged = persist(
+            (nb if existing is None else existing.unionByName(nb)).distinct()
+        )
         new_sides = nb.select(F.col("doc_id").alias("new_id"), "band", "band_key")
         cand = (
             new_sides.join(
@@ -370,10 +369,6 @@ def dedup_gate_batch(
         ).distinct()
         commit_state(all_pairs, pairs_path)
         commit_state(merged, state_path)
-    finally:
-        nb.unpersist()
-        if merged is not None:
-            merged.unpersist()
 
 
 def dedup_gate_sink(

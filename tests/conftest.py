@@ -25,6 +25,13 @@ def spark():
     yield s
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs that hold persisted blocks: cached DataFrames and
+    local lineage cuts. Compare id sets, not counts — Spark's ContextCleaner
+    may drop ids at any time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

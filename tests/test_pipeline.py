@@ -806,21 +806,21 @@ def test_persist_scoped_releases_on_sf_dir_switch(spark):
     invoking the same query against a different sf_dir releases the
     previous generation's blocks, while a same-sf rerun keeps the warm
     cache (plan-identity match) alive."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.cache import _GENERATIONS
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
-        _SCOPED_CACHES,
         QUERIES,
     )
 
     name = "ext_ngram_jaccard"
     QUERIES[name](spark, "/root/testdata/sf0.001").count()
-    gen1 = list(_SCOPED_CACHES[name][1])
+    gen1 = list(_GENERATIONS[name][1].persists)
     assert gen1, "query did not register scoped caches"
     assert all(d.is_cached for d in gen1)
     QUERIES[name](spark, "/root/testdata/sf0.01").count()
     assert all(not d.is_cached for d in gen1), (
         "previous sf_dir generation not released"
     )
-    gen2 = list(_SCOPED_CACHES[name][1])
+    gen2 = list(_GENERATIONS[name][1].persists)
     assert gen2 and all(d.is_cached for d in gen2)
     QUERIES[name](spark, "/root/testdata/sf0.01").count()
     assert all(d.is_cached for d in gen2), "same-sf rerun must keep the cache"
@@ -832,22 +832,54 @@ def test_release_query_caches_unpersists_now(spark):
     between trials so every trial rebuilds the persists and min-of-N
     records the cold cost. Returns whether a generation existed (the
     bench's warm-capable detection)."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.cache import _GENERATIONS
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
-        _SCOPED_CACHES,
         QUERIES,
         release_query_caches,
     )
 
     name = "ext_ngram_jaccard"
     QUERIES[name](spark, "/root/testdata/sf0.001").count()
-    gen = list(_SCOPED_CACHES[name][1])
+    gen = list(_GENERATIONS[name][1].persists)
     assert gen and all(d.is_cached for d in gen)
     assert release_query_caches(name) is True
-    assert name not in _SCOPED_CACHES
+    assert name not in _GENERATIONS
     assert all(not d.is_cached for d in gen), "blocks not released"
     # idempotent / no-generation case
     assert release_query_caches(name) is False
     assert release_query_caches("never_a_query") is False
+
+
+def test_cache_owner_logs_release_failure_and_releases_the_rest(caplog):
+    """A handle whose release raises is logged with its traceback, and the
+    owner still releases every other handle it holds."""
+    import logging
+
+    from job_search_engine_using_pyspark_solar_and_angular_spark.cache import (
+        persist,
+        scope,
+    )
+
+    class Handle:
+        def __init__(self, fail):
+            self.fail, self.released = fail, False
+
+        def persist(self):
+            return self
+
+        def unpersist(self, blocking):
+            if self.fail:
+                raise RuntimeError("release failed")
+            self.released = True
+
+    ok, bad = Handle(False), Handle(True)
+    with caplog.at_level(logging.WARNING):
+        with scope():
+            persist(ok)
+            persist(bad)  # released first: newest first
+    assert ok.released
+    logged = [r for r in caplog.records if r.name == persist.__module__]
+    assert [r.exc_info[1].args for r in logged] == [("release failed",)]
 
 
 def test_repetition_signals_expr_path_equals_column_path(spark):

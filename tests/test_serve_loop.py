@@ -20,6 +20,8 @@ from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import
     build_index,
 )
 
+from .conftest import persisted_rdd_ids
+
 DOCS = [
     (1, "spark shuffles partition data across executors for wide dependencies always"),
     (2, "bm25 ranks documents by term frequency and inverse document frequency weights"),
@@ -453,6 +455,7 @@ def test_crash_sweep_every_failpoint_converges(spark, tmp_path, crash_ref, label
         spark, _df(spark, DOCS), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=0,
     )
+    before = persisted_rdd_ids(spark)
 
     def fp(lbl):
         if lbl == label:
@@ -467,6 +470,8 @@ def test_crash_sweep_every_failpoint_converges(spark, tmp_path, crash_ref, label
         spark, _df(spark, B2), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=1,
     )
+    # neither the crashed attempt nor the retry leaves cached blocks behind
+    assert not persisted_rdd_ids(spark) - before
     if label == "published":
         # the crash hit AFTER the manifest flip: the batch is live, and the
         # retry must NOT re-apply (re-gating against the post-batch corpus

@@ -28,7 +28,7 @@ from job_search_engine_using_pyspark_solar_and_angular_spark.streaming.jobs impo
     topk_per_window,
 )
 
-from .conftest import SF_DIR, canon_rows
+from .conftest import SF_DIR, canon_rows, persisted_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -1068,6 +1068,7 @@ def test_dedup_gate_crash_between_commits_converges(spark, tmp_path):
     # buckets not), then the batch retries in full
     ks, kp = str(tmp_path / "ks"), str(tmp_path / "kp")
     sj.dedup_gate_batch(spark, b1, ks, kp)
+    before = persisted_rdd_ids(spark)
 
     real_commit = state_store.commit_state
     calls = {"n": 0}
@@ -1088,6 +1089,8 @@ def test_dedup_gate_crash_between_commits_converges(spark, tmp_path):
 
     # retry the whole micro-batch (what Structured Streaming does)
     sj.dedup_gate_batch(spark, b2, ks, kp)
+    # neither the crashed attempt nor the retry leaves cached blocks behind
+    assert not persisted_rdd_ids(spark) - before
 
     got_pairs = sorted(map(tuple, state_store.read_state(spark, kp).collect()))
     got_buckets = sorted(map(tuple, state_store.read_state(spark, ks).collect()))
