@@ -289,10 +289,10 @@ def bench_bm25_served(spark, sf_dir: str) -> float:
 def bench_http_served(spark, sf_dir: str) -> float:
     """End-to-end HTTP request latency for the reference's /api/search/query
     route (search/http_server.py): socket in → BM25 against the on-disk
-    bucketed index → doc rows joined back → broadcast user join → envelope
-    JSON out. Reuses bench_bm25_served's cached index, so the delta over
-    q20_bm25_served is the doc/user join-back + k-row marshaling + HTTP —
-    the full serving stack the Angular client sees."""
+    bucketed index → the page's doc and user rows fetched → envelope JSON
+    out. Reuses bench_bm25_served's cached index, so the delta over
+    q20_bm25_served is the k-row doc/user fetch + marshaling + HTTP — the
+    full serving stack the Angular client sees."""
     import json as _json
     import urllib.request
 

@@ -1,11 +1,16 @@
 """Query-surface functions mirroring the reference's three REST endpoints
 (``Ranking Model/src/main/java/api/Handler.java:33-161`` and
-``Main/SolrRanker.java:66-160``), re-expressed as single Catalyst plans.
+``Main/SolrRanker.java:66-160``), re-expressed as Catalyst plans.
 
-The reference's N+1 per-row Solr lookups (``SolrRanker.java:80-84,107-110``)
-become one broadcast hash join; the ``{count, data:[{tweet,user}]}`` envelope
-(``api/Handler.java:42-64``) is built by ``to_envelope`` from the collected
-top-k only (k rows cross the driver boundary, never the corpus).
+Keyword search is rank, then fetch — Solr's shape: :func:`rank_keyword`
+returns the <= k (doc_id, score) page, and only those k doc and user rows
+are read back. :func:`search_keyword` does that fetch as one lazy join of
+the page; the served route collects the page and filters the doc and user
+tables to its ids (``http_server.SearchService.query``). Either way the
+reference's N+1 per-row Solr lookups (``SolrRanker.java:80-84,107-110``)
+become one read per table, and the ``{count, data:[{tweet,user}]}``
+envelope (``api/Handler.java:42-64``) is built from the collected top-k
+only (k rows cross the driver boundary, never the corpus).
 """
 
 from __future__ import annotations
@@ -20,6 +25,46 @@ from .bm25 import bm25_search
 from .index import SearchIndex
 
 
+def rank_keyword(
+    spark: SparkSession,
+    index: SearchIndex,
+    query: str,
+    k: int = 10,
+    start: int = 0,
+    after: tuple[float, int] | None = None,
+) -> DataFrame:
+    """The ranked page of a free-text query: (doc_id, score), BM25 order
+    (score desc, doc_id). The query passes through the SAME analyzer as the
+    corpus (tokenize_query mirrors tokenize_normalized) — otherwise
+    punctuated queries would never match.
+
+    Pagination (reference O5 — the skip/limit the reference controller
+    accepted but ignored, ``api/Handler.java:34``): ``start`` is Solr-style
+    numeric offset (the retrieval pool deepens to ``start+k`` and the page
+    is sliced via :func:`operators.topk.paginate`); ``after=(score,
+    doc_id)`` is the KEYSET cursor — constant per-page cost, preferred for
+    deep paging. ``start`` and ``after`` are mutually exclusive: they define
+    different page boundaries, and silently preferring one (the pre-r9
+    behavior ignored ``start``) hides a caller bug — reject the
+    combination."""
+    terms = tokenize_query(query)
+    if after is not None and start > 0:
+        raise ValueError(
+            "start and after are mutually exclusive pagination modes; "
+            "pass a numeric offset OR a keyset cursor, not both"
+        )
+    if after is not None:
+        return bm25_search(spark, index, terms, k=k, after=after)
+    if start > 0:
+        from ..operators.topk import paginate
+
+        pool = bm25_search(spark, index, terms, k=start + k)
+        return paginate(
+            pool, [F.col("score").desc(), F.col("doc_id")], start, k
+        )
+    return bm25_search(spark, index, terms, k=k)
+
+
 def search_keyword(
     spark: SparkSession,
     index: SearchIndex,
@@ -31,41 +76,17 @@ def search_keyword(
     start: int = 0,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """BM25 top-k for a free-text query, joined back to full docs (and
-    optionally the user dimension — reference J1 broadcast join). The query
-    passes through the SAME analyzer as the corpus (tokenize_query mirrors
-    tokenize_normalized) — otherwise punctuated queries would never match.
-
-    Pagination (reference O5 — the skip/limit the reference controller
-    accepted but ignored, ``api/Handler.java:34``): ``start`` is Solr-style
-    numeric offset (the retrieval pool deepens to ``start+k`` and the page
-    is sliced via :func:`operators.topk.paginate`); ``after=(score,
-    doc_id)`` is the KEYSET cursor — constant per-page cost, preferred for
-    deep paging. The join-back and ordering are identical either way.
-    ``start`` and ``after`` are mutually exclusive: they define different
-    page boundaries, and silently preferring one (the pre-r9 behavior
-    ignored ``start``) hides a caller bug — reject the combination."""
-    terms = tokenize_query(query)
-    if after is not None and start > 0:
-        raise ValueError(
-            "start and after are mutually exclusive pagination modes; "
-            "pass a numeric offset OR a keyset cursor, not both"
-        )
-    if after is not None:
-        hits = bm25_search(spark, index, terms, k=k, after=after)
-    elif start > 0:
-        from ..operators.topk import paginate
-
-        pool = bm25_search(spark, index, terms, k=start + k)
-        hits = paginate(
-            pool, [F.col("score").desc(), F.col("doc_id")], start, k
-        )
-    else:
-        hits = bm25_search(spark, index, terms, k=k)
+    """:func:`rank_keyword`'s page joined back to the full doc rows (and
+    optionally left-joined to the user dimension, reference J1), ordered
+    (score desc, doc_id) — one lazy plan for library callers. The served
+    route (``http_server.SearchService.query``) instead collects the page
+    and fetches its <= k stored rows, the way Solr ranks and then reads the
+    stored fields of its ``rows`` hits; both give the same rows."""
+    hits = rank_keyword(spark, index, query, k=k, start=start, after=after)
     out = hits.join(docs, "doc_id")  # hits is tiny: Catalyst broadcasts it
     if users is not None and doc_user_key is not None:
         dcol, ucol = doc_user_key
-        out = out.join(F.broadcast(users), out[dcol] == users[ucol], "left")
+        out = out.join(users, out[dcol] == users[ucol], "left")
     return out.orderBy(F.col("score").desc(), F.col("doc_id"))
 
 

@@ -75,7 +75,6 @@ def bm25_search(
     # posting lists.
     q_postings = index.postings.filter(F.col("token").isin(uniq))
     q_stats = q_postings.groupBy("token").agg(F.count("*").alias("df"))
-    stats = index.corpus_stats()  # 1 row
 
     # doc_len: denormalized into the postings at build time (Lucene-norms
     # analog) — the query touches ONLY its pruned posting lists, never the
@@ -86,21 +85,25 @@ def bm25_search(
     else:
         with_len = q_postings.join(index.doc_stats, "doc_id")
 
-    scored = (
-        with_len.join(F.broadcast(q_stats), "token")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "partial",
-            bm25_score_terms(
-                F.col("tf"),
-                F.col("df"),
-                F.col("n_docs"),
-                F.col("doc_len").cast("double"),
-                F.col("avg_dl"),
-                k1=k1,
-                b=b,
-            ),
-        )
+    scored = with_len.join(F.broadcast(q_stats), "token")
+    if index.corpus_values is None:
+        scored = scored.crossJoin(F.broadcast(index.corpus_stats()))  # 1 row
+        n_docs, avg_dl = F.col("n_docs"), F.col("avg_dl")
+    else:
+        # a resolved snapshot: the same long and double, as literals
+        n, avg = index.corpus_values
+        n_docs, avg_dl = F.lit(n).cast("long"), F.lit(avg).cast("double")
+    scored = scored.withColumn(
+        "partial",
+        bm25_score_terms(
+            F.col("tf"),
+            F.col("df"),
+            n_docs,
+            F.col("doc_len").cast("double"),
+            avg_dl,
+            k1=k1,
+            b=b,
+        ),
     )
     per_doc = scored.groupBy("doc_id").agg(F.sum("partial").alias("raw_score"))
     ranked = per_doc.select(

@@ -11,11 +11,16 @@ same envelope field names (``constants/APIConstants.java:5-17``), the same
 always-HTTP-200-with-in-band-``status_code`` error convention
 (``Handler.java:66-72`` returns the error JSON as the 200 body).
 
-What changes under the hood is the engine: each request is ONE Catalyst
-plan (posting-list reads + a broadcast join back to the doc/user rows —
-``search.api.search_keyword``) instead of the reference's Solr query plus
-an N+1 per-row user lookup loop (``Main/SolrRanker.java:80-84,107-110``).
-Only the ≤k result rows ever cross the driver boundary.
+What changes under the hood is the engine. A keyword request ranks, then
+fetches — the way Solr reads the stored fields of its ``rows`` hits: the
+≤k (doc_id, score) page is ranked from the posting lists
+(``search.api.rank_keyword``) and collected, then the doc and user tables
+are filtered to the page's ids (:func:`_fetch_rows`). Over a served index
+(``serve_loop.read_served_index``) the snapshot constants are already
+resolved, so a request reads only its posting lists and k stored rows.
+That replaces the reference's Solr query plus an N+1 per-row user lookup
+loop (``Main/SolrRanker.java:80-84,107-110``); only the ≤k result rows
+ever cross the driver boundary.
 
 Concurrency: Spark supports concurrent actions from multiple driver
 threads (each HTTP handler thread submits independent jobs scheduled by
@@ -28,16 +33,19 @@ session over the bucketed on-disk index (``search.index.read_index`` /
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from .api import (
+from .api import (  # noqa: F401 (search_keyword: the one-plan form of /query)
     autocomplete,
     phrase_search,
+    rank_keyword,
     related_docs,
     search_facets,
     search_hashtag,
@@ -47,6 +55,8 @@ from .api import (
     suggest_next_token,
     tokenize_query,
 )
+
+_log = logging.getLogger(__name__)
 
 # constants/APIConstants.java:5-17 — same names, same codes, same messages.
 STATUS_CODE = "status_code"
@@ -64,6 +74,32 @@ ERROR_MESSAGE = "Internal Server Error"
 
 def _rows(df: DataFrame) -> list[dict[str, Any]]:
     return [r.asDict(recursive=True) for r in df.collect()]
+
+
+def _fetch_rows(
+    hits: list[dict[str, Any]],
+    key: str,
+    table: DataFrame,
+    table_key: str,
+    how: str,
+) -> list[dict[str, Any]]:
+    """The k-row fetch: each hit extended with the fields of its
+    ``table`` rows (``hit[key] == row[table_key]``), read by ONE filter of
+    ``table`` to the hits' keys — never a join or broadcast of the whole
+    table. Hit order is kept; a hit matching several rows repeats, like a
+    join. ``how="inner"`` drops a hit with no row, ``"left"`` gives it
+    all-None table fields."""
+    keys = sorted({h[key] for h in hits if h[key] is not None})
+    found: dict[Any, list[dict[str, Any]]] = {}
+    if keys:
+        for r in _rows(table.filter(F.col(table_key).isin(keys))):
+            found.setdefault(r[table_key], []).append(r)
+    missing = [dict.fromkeys(table.columns)] if how == "left" else []
+    out = []
+    for h in hits:
+        for r in found.get(h[key], missing):
+            out.append({**h, **{c: v for c, v in r.items() if c not in h}})
+    return out
 
 
 def _split_tweet_user(
@@ -214,18 +250,23 @@ class SearchService:
         unpaged responses keep the reference envelope byte-for-byte."""
         snap = self._snap
         paged = start > 0 or rows is not None or after is not None
-        hits = search_keyword(
+        page = rank_keyword(
             self.spark,
             snap.index,
-            snap.docs,
-            snap.users,
             query,
             k=rows if rows is not None else self.k,
-            doc_user_key=self.doc_user_key,
             start=start,
             after=after,
         )
-        data = [_split_tweet_user(r, snap.user_cols) for r in _rows(hits)]
+        # rank, then fetch: the <= k hits in (score desc, doc_id) order,
+        # then their doc rows, then their users — the rows and field order
+        # of search_keyword's one-plan join
+        hits = sorted(_rows(page), key=lambda h: (-h["score"], h["doc_id"]))
+        found = _fetch_rows(hits, "doc_id", snap.docs, "doc_id", "inner")
+        data = [
+            _split_tweet_user(r, snap.user_cols)
+            for r in self._with_users(snap, found)
+        ]
         out: dict[str, Any] = {COUNT: len(data), DATA: data}
         if paged and data:
             last = data[-1][TWEET]
@@ -241,15 +282,21 @@ class SearchService:
         hits = search_hashtag(
             snap.docs, tag, tags_col=self.tags_col, order_col=self.doc_time_col
         )
-        if snap.users is not None and self.doc_user_key is not None:
-            from pyspark.sql import functions as F
-
-            dcol, ucol = self.doc_user_key
-            hits = hits.join(
-                F.broadcast(snap.users), hits[dcol] == snap.users[ucol], "left"
-            )
-        data = [_split_tweet_user(r, snap.user_cols) for r in _rows(hits)]
+        data = [
+            _split_tweet_user(r, snap.user_cols)
+            for r in self._with_users(snap, _rows(hits))
+        ]
         return _ok({COUNT: len(data), DATA: data})
+
+    def _with_users(
+        self, snap: _ServedSnapshot, rows: list[dict[str, Any]]
+    ) -> list[dict[str, Any]]:
+        """The rows' users, left-joined by the k-row fetch (a hit with no
+        users row keeps all-None user fields)."""
+        if snap.users is None or self.doc_user_key is None:
+            return rows
+        dcol, ucol = self.doc_user_key
+        return _fetch_rows(rows, dcol, snap.users, ucol, "left")
 
     def user(self, name: str) -> dict[str, Any]:
         """``GET /api/search/user?id=`` (Handler.java:119-161): the user
@@ -319,8 +366,6 @@ class SearchService:
         terms = tokenize_query(query)
         df = search_facets(snap.index, snap.docs, terms, cols, top=top)
         if start > 0 or rows is not None:
-            from pyspark.sql import functions as F
-
             from ..operators.topk import paginate
 
             df = paginate(
@@ -404,6 +449,8 @@ class _Handler(BaseHTTPRequestHandler):
                 self._write(404, {STATUS_CODE: 404, MESSAGE: "Not Found"})
                 return
         except Exception:
+            # the body stays opaque (Handler.java:66-72); the log keeps why
+            _log.exception("GET %s failed", self.path)
             body = _err()
         self._write(200, body)
 
@@ -418,8 +465,9 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(payload)
 
-    def log_message(self, fmt: str, *args: Any) -> None:  # silence stderr
-        pass
+    def log_message(self, fmt: str, *args: Any) -> None:
+        # the access log goes to logging at DEBUG, not to stderr
+        _log.debug("%s - " + fmt, self.address_string(), *args)
 
 
 def make_server(

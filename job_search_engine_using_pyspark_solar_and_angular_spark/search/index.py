@@ -37,6 +37,10 @@ class SearchIndex:
     # precomputed 1-row (n_docs, avg_dl), set by read_index: a served query
     # must not re-aggregate the corpus-sized doc_stats table per request.
     corpus: DataFrame | None = None
+    # the same (n_docs, avg_dl) as Python values, set when a served snapshot
+    # is resolved (serve_loop.read_served_index): bm25_search then scores
+    # with literals instead of joining the 1-row corpus table per request
+    corpus_values: tuple[int, float | None] | None = None
 
     def corpus_stats(self) -> DataFrame:
         """1-row DataFrame (n_docs, avg_dl) — kept in-plan, never collected."""

@@ -43,10 +43,12 @@ Per micro-batch (:func:`serve_batch`):
    idempotent (see :func:`serve_batch`). Pinned by the every-failpoint
    crash sweep in tests/test_serve_loop.py.
 
-Served reads (:func:`read_served_index` / :func:`vector_search_served`)
-union the manifest's segments and drop tombstoned rows (seg < the doc's
-latest ``before_seg``) via a broadcast anti-filter — churn-sized until
-:func:`compact_segments` folds everything back into one base segment.
+Served reads union the manifest's segments and drop tombstoned rows (seg <
+the doc's latest ``before_seg``) with a literal filter built from the
+collected tombstones — churn-sized until :func:`compact_segments` folds
+everything back into one base segment. :func:`read_served_index` resolves
+a snapshot once: it collects the tombstones and the corpus partials, so a
+request only ranks its posting lists.
 Compaction deletes nothing; :func:`vacuum_segments` reclaims unreferenced
 segments and inert tombstones after the read grace window, so a reader
 that resolved the previous manifest mid-query stays consistent.
@@ -172,10 +174,9 @@ def serve_batch(
         # ---- 1. gate: vs live corpus buckets, then earlier-id batch docs ---
         sup_parts = []
         if prior_segs:
+            cuts = _tombstone_cuts(tombs_df, max_committed)
             corpus_buckets = _alive(
-                _union_segments(spark, p["lsh"], prior_segs),
-                tombs_df,
-                max_committed,
+                _union_segments(spark, p["lsh"], prior_segs), cuts
             )
             sup_parts.append(
                 nb.join(
@@ -254,9 +255,7 @@ def serve_batch(
         )
         if prior_segs:
             alive_stats = _alive(
-                _union_segments(spark, p["doc_stats"], prior_segs),
-                tombs_df,
-                max_committed,
+                _union_segments(spark, p["doc_stats"], prior_segs), cuts
             )
             # churn-sized: the replaced docs' OLD rows (for tombstones and
             # the retraction side of this segment's scalar partial)
@@ -416,29 +415,37 @@ def serve_batch(
         }
 
 
-def _alive(
-    rows: DataFrame, tombstones: DataFrame | None, max_seg: int | None = None
-) -> DataFrame:
-    """Drop tombstoned rows: a row of segment s for doc d is dead iff d has
-    a tombstone with s < before_seg (the re-index segment's own rows
-    survive). Tombstones aggregate to one (doc_id, cut) row per doc and
-    broadcast — churn-sized between compactions.
+def _tombstone_cuts(tombstones: DataFrame | None, max_seg: int) -> dict:
+    """doc_id -> cut (its latest ``before_seg``), collected once: the
+    tombstones are churn-sized between compactions.
 
     ``max_seg``: ignore tombstones with before_seg > max_seg. A crashed
     attempt may have committed tombstones for a segment whose manifest
     entry never published; clamping to the max COMMITTED seg makes both the
     retry and every concurrent reader see exactly the pre-batch live
     state."""
-    if tombstones is None:
-        return rows
-    if max_seg is not None:
-        tombstones = tombstones.filter(F.col("before_seg") <= max_seg)
-    cut = tombstones.groupBy("doc_id").agg(F.max("before_seg").alias("__cut"))
-    return (
-        rows.join(F.broadcast(cut), "doc_id", "left")
-        .filter(F.col("seg") >= F.coalesce(F.col("__cut"), F.lit(0)))
-        .drop("__cut")
-    )
+    cuts: dict = {}
+    if tombstones is not None:
+        for r in tombstones.filter(F.col("before_seg") <= max_seg).collect():
+            cuts[r["doc_id"]] = max(r["before_seg"], cuts.get(r["doc_id"], 0))
+    return cuts
+
+
+def _alive(rows: DataFrame, cuts: dict) -> DataFrame:
+    """Drop tombstoned rows: a row of segment s for doc d is dead iff
+    ``s < cuts[d]`` (the re-index segment's own rows survive). One literal
+    clause per distinct cut value c (<= n_segments clauses, each tombstoned
+    doc named once): NOT (seg < c AND doc_id IN docs cut at c) — a map-side
+    filter, no aggregate or broadcast."""
+    by_cut: dict[int, list] = {}
+    for doc, cut in cuts.items():
+        by_cut.setdefault(cut, []).append(doc)
+    # sorted: the same tombstones always give the same plan
+    for cut, docs in sorted(by_cut.items()):
+        rows = rows.filter(
+            ~((F.col("seg") < F.lit(cut)) & F.col("doc_id").isin(sorted(docs)))
+        )
+    return rows
 
 
 def _union_segments(spark: SparkSession, base_path: str, segs: list[int]) -> DataFrame:
@@ -456,13 +463,23 @@ def _union_segments(spark: SparkSession, base_path: str, segs: list[int]) -> Dat
 def read_served_index(
     spark: SparkSession, base: str, manifest_version: int | None = None
 ) -> SearchIndex:
-    """The live SearchIndex: manifest segments unioned (each token-bucketed,
-    so a term lookup still prunes to the query terms' buckets per segment),
-    tombstone-filtered. Corpus constants derive from the per-segment scalar
-    PARTIALS — an agg over <= n_segments rows, never a corpus re-aggregation
-    — with bit-identical results (integer sums; one double division).
-    term_stats derives lazily from alive postings (BM25 never touches it —
-    per-term df comes from the pruned posting lists).
+    """The live SearchIndex, resolved ONCE per snapshot: everything that is
+    constant for the manifest is collected here, so a request only ranks.
+
+    - Corpus constants: the <= n_segments scalar PARTIAL rows are collected
+      and folded in Python — exact integer sums, one double division,
+      bit-identical to an in-plan long-to-double divide. ``corpus_values``
+      carries the pair (bm25_search scores with literals); ``corpus`` keeps
+      it as a 1-row DataFrame.
+    - Tombstones: collected once (clamped to this manifest) and applied as
+      literal filters (:func:`_alive`), so the snapshot no longer
+      reads the tombstone state after this call returns.
+    - Postings: the segments' files read as one parquet relation; the
+      query-term filter prunes the token-sorted files.
+
+    doc_stats and term_stats stay lazy (BM25 never touches them — per-term
+    df comes from the pruned posting lists). Call again after a publish:
+    a resolved snapshot never sees later segments.
 
     ``manifest_version`` pins a previously committed manifest (state-store
     time travel): valid until :func:`vacuum_segments` reclaims that
@@ -475,34 +492,32 @@ def read_served_index(
         raise FileNotFoundError(f"no serving manifest committed under {base}")
     rows = man.orderBy("seg").collect()
     segs = [r["seg"] for r in rows]
-    tombs = read_state(spark, p["tombstones"])
     max_seg = segs[-1]
-    postings = spark.table(rows[0]["table"])
-    for r in rows[1:]:
-        postings = postings.unionByName(spark.table(r["table"]))
-    alive = _alive(postings, tombs, max_seg).drop("seg")
-    doc_stats = _alive(
-        _union_segments(spark, p["doc_stats"], segs), tombs, max_seg
-    ).drop("seg")
-    corpus = (
-        _union_segments(spark, p["scalar"], segs)
-        .agg(
-            (F.sum("n_new") - F.sum("n_rep")).alias("__n"),
-            (F.sum("sum_new") - F.sum("sum_rep")).alias("__s"),
-        )
-        .select(
-            F.col("__n").cast("long").alias("n_docs"),
-            (F.col("__s").cast("double") / F.col("__n").cast("double")).alias(
-                "avg_dl"
-            ),
-        )
+    cuts = _tombstone_cuts(read_state(spark, p["tombstones"]), max_seg)
+    # the segments' files as ONE plain parquet relation: a bucketed table
+    # scan schedules a task per bucket; the token filter still prunes the
+    # token-sorted files through their parquet dictionaries and statistics
+    postings = spark.read.schema(spark.table(rows[-1]["table"]).schema).parquet(
+        *[f"{p['postings']}_seg{s}" for s in segs]
     )
+    alive = _alive(postings, cuts).drop("seg")
+    doc_stats = _alive(_union_segments(spark, p["doc_stats"], segs), cuts).drop(
+        "seg"
+    )
+    # exact integer sums of the <= n_segments partial rows, then ONE double
+    # division: bit-identical to Spark's long-to-double cast and divide
+    parts = _union_segments(spark, p["scalar"], segs).collect()
+    n = sum(r["n_new"] for r in parts) - sum(r["n_rep"] for r in parts)
+    s = sum(r["sum_new"] for r in parts) - sum(r["sum_rep"] for r in parts)
+    avg_dl = float(s) / float(n) if n else None  # an empty corpus has none
+    corpus = spark.createDataFrame([(n, avg_dl)], "n_docs long, avg_dl double")
     term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
     return SearchIndex(
         postings=alive,
         doc_stats=doc_stats,
         term_stats=term_stats,
         corpus=corpus,
+        corpus_values=(n, avg_dl),
     )
 
 
@@ -585,8 +600,7 @@ def vector_search_served(
     probes = _python_probe_buckets(query_vec, num_planes, dim, multiprobe)
     cands = _alive(
         vecs.filter(F.col("bucket").isin(probes)),
-        read_state(spark, p["tombstones"]),
-        segs[-1],
+        _tombstone_cuts(read_state(spark, p["tombstones"]), segs[-1]),
     )
     qv = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
@@ -608,8 +622,8 @@ def compact_segments(
 ) -> None:
     """Fold all live postings, doc-grain segments, and vectors into fresh
     base segments — Lucene's merge policy. Run off the serving path on a
-    cadence sized by churn; between compactions served reads pay one
-    broadcast tombstone filter and a per-segment union.
+    cadence sized by churn; between compactions a served snapshot carries
+    a literal tombstone filter over the union of its segments.
 
     Crash-safe ordering: every folded segment is written FIRST, then the
     manifest flips to [new_seg] (folded rows carry seg=new_seg so old
@@ -664,16 +678,16 @@ def compact_segments(
         F.lit(0).cast("long").alias("n_rep"),
         F.lit(0).cast("long").alias("sum_rep"),
     ).write.mode("overwrite").parquet(f"{p['scalar']}/seg{new_seg}")
-    tombs = read_state(spark, p["tombstones"])
     old_seg_ids = [s for s, _ in old_segs]
-    _alive(
-        _union_segments(spark, p["lsh"], old_seg_ids), tombs, old_seg_ids[-1]
-    ).drop("seg").withColumn("seg", F.lit(new_seg).cast("int")).write.mode(
+    cuts = _tombstone_cuts(read_state(spark, p["tombstones"]), old_seg_ids[-1])
+    _alive(_union_segments(spark, p["lsh"], old_seg_ids), cuts).drop(
+        "seg"
+    ).withColumn("seg", F.lit(new_seg).cast("int")).write.mode(
         "overwrite"
     ).parquet(f"{p['lsh']}/seg{new_seg}")
     vecs = _read_vector_segments(spark, p, old_seg_ids)
     if vecs is not None:
-        alive_vecs = _alive(vecs, tombs, old_seg_ids[-1])
+        alive_vecs = _alive(vecs, cuts)
         (
             alive_vecs.select(
                 "doc_id", "embedding", F.lit(new_seg).cast("int").alias("seg"), "bucket"

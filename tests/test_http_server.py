@@ -383,3 +383,145 @@ def test_vector_route(spark, tmp_path):
     sims = [h["sim"] for h in body["data"]]
     assert sims == sorted(sims, reverse=True)
     assert body["data"][0]["sim"] >= 0.99  # the query vector finds itself
+
+
+def test_failed_request_is_logged_and_keeps_the_envelope(server, caplog):
+    """A route that raises is logged once, with its traceback, through the
+    module's logger — and still answers the reference's in-band error body
+    (HTTP 200, status_code 500). The access log goes to DEBUG."""
+    import logging
+
+    name = "job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server"
+    with caplog.at_level(logging.DEBUG, logger=name):
+        status, _, body = _get(server.url + "/api/search/vector?vec=0.1,0.2")
+    assert status == 200
+    assert body == {"status_code": 500, "message": "Internal Server Error"}
+    mine = [r for r in caplog.records if r.name == name]
+    errors = [r for r in mine if r.levelno >= logging.ERROR]
+    assert len(errors) == 1
+    assert errors[0].exc_info is not None and errors[0].exc_info[0] is ValueError
+    assert "/api/search/vector" in errors[0].getMessage()
+    assert any(
+        r.levelno == logging.DEBUG and "GET /api/search/vector" in r.getMessage()
+        for r in mine
+    )
+
+
+# two served segments: doc 1 replaced in segment 2 (a live tombstone), doc 9
+# new in segment 2 with a user_id that has no users row
+_SEG1 = [
+    (1, "kafka stream ingest kafka offsets commit"),
+    (2, "kafka consumer groups rebalance partitions"),
+    (3, "stream joins need watermarks on both kafka sides"),
+    (4, "batch jobs read parquet not kafka"),
+    (5, "kafka kafka kafka retention tuning"),
+    (6, "exactly once kafka stream sinks"),
+    (7, "kafka connect moves tables into topics"),
+]
+_SEG2 = [
+    (1, "kafka replaced text for the first doc stream"),
+    (9, "kafka schema registry for stream contracts"),
+]
+
+
+def _served_two_phase(spark, tmp_path):
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search import (
+        serve_loop,
+    )
+
+    def _df(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    base = str(tmp_path / "serving")
+    prefix = "http_tp_" + tmp_path.name.replace("-", "_").lower()
+    serve_loop.serve_batch(spark, _df(_SEG1), base, prefix, postings_buckets=4)
+    serve_loop.serve_batch(spark, _df(_SEG2), base, prefix, postings_buckets=4)
+    latest = dict(_SEG1)
+    latest.update(dict(_SEG2))
+    docs_path, users_path = str(tmp_path / "docs"), str(tmp_path / "users")
+    spark.createDataFrame(
+        [(i, t, 100 + i, t.split()[:2]) for i, t in sorted(latest.items())],
+        "doc_id long, text string, user_id long, tags array<string>",
+    ).write.parquet(docs_path)
+    spark.createDataFrame(
+        [(100 + i, f"user{i}", i % 2 == 0) for i in range(1, 8)],  # no uid 109
+        "uid long, screen_name string, verified boolean",
+    ).write.parquet(users_path)
+    return SearchService(
+        spark,
+        serve_loop.read_served_index(spark, base),
+        spark.read.parquet(docs_path),
+        users=spark.read.parquet(users_path),
+        doc_user_key=("user_id", "uid"),
+        user_name_col="screen_name",
+        k=3,
+    )
+
+
+def test_two_phase_envelope_equals_one_plan_join(spark, tmp_path):
+    """SearchService.query ranks, collects the page, then fetches its doc
+    and user rows. Its envelope must be byte-identical to the one built
+    from search_keyword's one-plan join — for an unpaged request, a
+    ``start`` page and an ``after`` page, over a served index with a live
+    tombstone and a doc whose user is missing."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
+        _ok,
+        _split_tweet_user,
+        search_keyword,
+    )
+
+    svc = _served_two_phase(spark, tmp_path)
+
+    def one_plan(query, start=0, rows=None, after=None):
+        df = search_keyword(
+            spark, svc.index, svc.docs, svc.users, query,
+            k=rows if rows is not None else svc.k,
+            doc_user_key=svc.doc_user_key, start=start, after=after,
+        )
+        data = [
+            _split_tweet_user(r.asDict(recursive=True), svc._user_cols)
+            for r in df.collect()
+        ]
+        out = {"count": len(data), "data": data}
+        if (start > 0 or rows is not None or after is not None) and data:
+            last = data[-1]["tweet"]
+            out["next_after"] = {"score": last["score"], "doc_id": last["doc_id"]}
+        return _ok(out)
+
+    first = svc.query("kafka stream")
+    cursor = (first["data"][-1]["tweet"]["score"], first["data"][-1]["tweet"]["doc_id"])
+    hits = {}
+    for kw in ({}, {"start": 3, "rows": 3}, {"rows": 3, "after": cursor}, {"start": 6}):
+        got = svc.query("kafka stream", **kw)
+        assert got["count"] == (2 if kw.get("start") == 6 else 3), kw
+        assert json.dumps(got, default=str) == json.dumps(
+            one_plan("kafka stream", **kw), default=str
+        ), kw
+        hits.update((h["tweet"]["doc_id"], h) for h in got["data"])
+    # every matching doc was compared, the cases the fetch must get right
+    # among them
+    assert set(hits) == {1, 2, 3, 4, 5, 6, 7, 9}
+    assert hits[9]["user"] is None  # uid 109 has no users row
+    assert hits[1]["tweet"]["text"] == dict(_SEG2)[1]  # the replacing text
+    assert hits[2]["user"] == {"uid": 102, "screen_name": "user2", "verified": True}
+
+
+def test_served_keyword_request_job_count(spark, tmp_path):
+    """Deterministic cost counter for one served keyword request (the way
+    plan_baseline_declared.json pins plans): under its own job group, the
+    request runs 6 Spark jobs — the ranking plan (df aggregate, its
+    broadcast, per-doc aggregate, top-k) plus one fetch each of the page's
+    doc rows and user rows. The one-plan join over an unresolved snapshot
+    ran 12."""
+    svc = _served_two_phase(spark, tmp_path)
+    svc.query("kafka stream")  # warm: the same jobs, first-call planning
+    sc = spark.sparkContext
+    group = "pin-served-keyword-" + tmp_path.name
+    sc.setJobGroup(group, "one served keyword request")
+    try:
+        body = svc.query("kafka stream")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert body["count"] == 3 and body["data"][0]["user"] is not None
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6

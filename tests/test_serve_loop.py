@@ -129,6 +129,34 @@ def test_replace_by_id_update_tombstones_old_postings(spark, served):
     assert all(not (r["doc_id"] == 1 and r["sim"] == 1.0) for r in old_hits)
 
 
+def test_resolved_snapshot_outlives_tombstone_versions(spark, served):
+    """read_served_index resolves a snapshot: its tombstones are collected
+    when it is called, not re-read per request. Two later batches each
+    commit a tombstone version, and commit_state keeps only 2 — so the
+    version this snapshot resolved is pruned from disk. The old snapshot
+    must still answer, with its own point-in-time results."""
+    import os
+
+    base, prefix = served
+    _serve(spark, _df(spark, [(1, "kubernetes schedules containers onto nodes")]), base, prefix)
+    old = serve_loop.read_served_index(spark, base)
+    terms = (["kubernetes"], ["shuffles"], ["bm25", "documents"], ["parquet"])
+    want = {tuple(t): _bm25_rows(spark, old, t) for t in terms}
+    assert want[("shuffles",)] == []  # doc 1's old text is tombstoned
+    assert want[("kubernetes",)][0][0] == 1
+    assert want[("bm25", "documents")][0][0] == 2
+
+    _serve(spark, _df(spark, [(2, "zookeeper elects a leader among ensemble nodes")]), base, prefix)
+    _serve(spark, _df(spark, [(3, "iceberg snapshots isolate concurrent table readers")]), base, prefix)
+    assert not os.path.isdir(f"{base}/tombstones/v=1")  # pruned
+
+    for t in terms:
+        assert _bm25_rows(spark, old, list(t)) == want[tuple(t)]
+    # the live snapshot moved on: doc 2's old text is gone there
+    live = serve_loop.read_served_index(spark, base)
+    assert 2 not in {h[0] for h in _bm25_rows(spark, live, ["bm25", "documents"])}
+
+
 def test_crash_before_manifest_publish_retry_converges(spark, tmp_path):
     """Kill the batch at the LAST commit (everything updated, manifest not
     published), retry it in full: the served state must equal a clean run's
