@@ -240,9 +240,9 @@ def autocomplete(
     docs, prefix: str, k: int = 10, id_col: str = "doc_id", text_col: str = "text"
 ):
     """Prefix autocomplete over the corpus vocabulary: top-``k`` tokens
-    starting with ``prefix`` by frequency. On a served deployment this
-    reads the bucketed postings/term table instead of re-tokenizing —
-    same shape as the BM25 served path."""
+    starting with ``prefix`` by frequency. A served deployment would read
+    the token-sorted postings (``search.index.write_index``) instead of
+    re-tokenizing: a prefix is a token range in those sorted files."""
     from pyspark.sql import functions as F
 
     from ..functions.text import tokenize_normalized
@@ -489,10 +489,9 @@ def search_hybrid_served(
     query_vec: list[float],
     k: int = 10,
     pool: int = 20,
-    table: str = "jse_postings",
     num_planes: int = 4,
 ) -> DataFrame:
-    """The fully-SERVED hybrid front door: BM25 from the on-disk bucketed
+    """The fully-SERVED hybrid front door: BM25 from the on-disk token-sorted
     postings index (``search.index.read_index``) fused with multiprobe
     vector search from the on-disk LSH index (``search_vector``) by the
     same RRF arithmetic as :func:`search_hybrid`. Per-request cost is
@@ -503,7 +502,7 @@ def search_hybrid_served(
     from .bm25 import bm25_search
     from .index import read_index
 
-    idx = read_index(spark, index_base, table=table)
+    idx = read_index(spark, index_base)
     bm = bm25_search(spark, idx, tokenize_query(query), k=pool)
     wb = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     bmr = bm.select("doc_id", F.row_number().over(wb).cast("long").alias("rb"))

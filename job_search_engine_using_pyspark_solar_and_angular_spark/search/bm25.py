@@ -14,9 +14,10 @@ repr), the fold over query terms is a sum of <= a handful of doubles, and ties
 break on doc_id — so scores hash-match exactly at ROUND(...,4).
 
 Scale: query terms and term_stats-for-the-query are tiny -> broadcast; the only
-shuffle is the per-doc score aggregation, keyed by doc_id. With the bucketed
-postings table (index.write_index) the postings lookup prunes to the query
-terms' buckets — the Spark analog of reading a few posting lists.
+shuffle is the per-doc score aggregation, keyed by doc_id. Over the
+token-sorted on-disk postings (index.write_index) the postings lookup prunes
+to the query terms' row groups — the Spark analog of reading a few posting
+lists.
 """
 
 from __future__ import annotations
@@ -70,22 +71,16 @@ def bm25_search(
     # df for just the query terms, computed from postings pruned to those
     # tokens — NOT from term_stats, which would aggregate the full token space
     # (a shuffle over every distinct term in the corpus) to answer a 2-term
-    # query. On the bucketed on-disk postings (write_index) the isin filter
-    # prunes to the query terms' buckets, the Spark analog of reading a few
-    # posting lists.
+    # query. On the token-sorted on-disk postings (write_index) the isin
+    # filter prunes to the query terms' row groups, the Spark analog of
+    # reading a few posting lists.
     q_postings = index.postings.filter(F.col("token").isin(uniq))
     q_stats = q_postings.groupBy("token").agg(F.count("*").alias("df"))
 
     # doc_len: denormalized into the postings at build time (Lucene-norms
     # analog) — the query touches ONLY its pruned posting lists, never the
-    # corpus-sized doc_stats table. Fallback join kept for indexes written
-    # before the doc_len column existed.
-    if "doc_len" in index.postings.columns:
-        with_len = q_postings
-    else:
-        with_len = q_postings.join(index.doc_stats, "doc_id")
-
-    scored = with_len.join(F.broadcast(q_stats), "token")
+    # corpus-sized doc_stats table.
+    scored = q_postings.join(F.broadcast(q_stats), "token")
     if index.corpus_values is None:
         scored = scored.crossJoin(F.broadcast(index.corpus_stats()))  # 1 row
         n_docs, avg_dl = F.col("n_docs"), F.col("avg_dl")

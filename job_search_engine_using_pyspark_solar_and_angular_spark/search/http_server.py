@@ -26,8 +26,8 @@ Concurrency: Spark supports concurrent actions from multiple driver
 threads (each HTTP handler thread submits independent jobs scheduled by
 the DAG scheduler), so the threading server needs no request lock. At
 scale the natural deployment is this server on the driver of a long-lived
-session over the bucketed on-disk index (``search.index.read_index`` /
-``serve_loop``) — requests read posting-list buckets, never the corpus.
+session over the token-sorted on-disk index (``search.index.read_index`` /
+``serve_loop``) — requests read their posting lists, never the corpus.
 """
 
 from __future__ import annotations
@@ -518,8 +518,8 @@ def main(argv: list[str] | None = None) -> None:
     stand up the full serving stack the way the reference stands up its
     Spring app: build (or reuse) the session, index the documents table,
     bind the routes, block until Ctrl-C. For a production deployment over
-    a streamed index, construct SearchService against ``read_index`` of
-    the serve loop's manifest instead (DEPLOY.md §8)."""
+    a streamed index, construct SearchService against
+    ``serve_loop.read_served_index`` instead (DEPLOY.md §8)."""
     import argparse
 
     from ..io import load_table

@@ -13,8 +13,12 @@ Scale design:
   tokenized intermediate; Catalyst shares the scan under AQE).
 - at 100 TB the postings build is a map-side explode followed by a single
   shuffle on (token, doc_id) — the same shape as a distributed Lucene index
-  build. ``write_index`` persists the three tables as parquet **bucketed by
-  token** so query-time term lookups prune buckets instead of scanning.
+  build. ``write_index`` persists the tables as plain parquet directories;
+  the postings are **token-sorted**, one file per token hash bucket
+  (:func:`write_token_sorted`), so a query-time term lookup prunes files
+  and row groups through their dictionaries and statistics. Like Lucene
+  segment files, the directories are read by path from any process: no
+  catalog entry ties them to the session that wrote them.
 - incremental refresh composes with operators.dedup.merge_latest (D2).
 """
 
@@ -163,28 +167,26 @@ def delta_refresh(
     return SearchIndex(postings=postings, doc_stats=doc_stats, term_stats=term_stats)
 
 
-def write_index(
-    index: SearchIndex, base_path: str, buckets: int = 64,
-    table: str = "jse_postings",
-) -> None:
-    """Persist the index bucketed by its join keys.
-
-    Bucketing postings by token means a keyword query touches only the buckets
-    of its query terms, and the postings⋈term_stats join is shuffle-free.
-
-    The pre-write ``repartition(buckets, token)`` is the same hash spec
-    bucketBy uses (pmod(murmur3, N)), so each task holds exactly one bucket
-    and the table is N files instead of input-partitions x N tiny ones —
-    term lookups open one file per probed bucket.
-    """
+def write_token_sorted(df: DataFrame, path: str, buckets: int, *keys: str) -> None:
+    """THE postings writer: ``df`` as plain parquet at ``path``, hash-
+    partitioned by token into ``buckets`` tasks and sorted by ``keys``
+    within each, so the directory holds one sorted file per token hash
+    bucket (not input-partitions x buckets tiny ones) and a term lookup
+    reads the few row groups its terms fall in."""
     (
-        index.postings.repartition(buckets, "token")
+        df.repartition(buckets, "token")
+        .sortWithinPartitions(*keys)
         .write.mode("overwrite")
-        .bucketBy(buckets, "token")
-        .sortBy("token", "doc_id")
-        .option("path", f"{base_path}/postings")
-        .saveAsTable(table)
+        .parquet(path)
     )
+
+
+def write_index(index: SearchIndex, base_path: str, buckets: int = 64) -> None:
+    """Persist the index as four parquet directories under ``base_path``:
+    token-sorted postings (:func:`write_token_sorted`), doc_stats,
+    term_stats and the corpus constants. :func:`read_index` reads them back
+    by path, in this process or any other."""
+    write_token_sorted(index.postings, f"{base_path}/postings", buckets, "token", "doc_id")
     index.doc_stats.write.mode("overwrite").parquet(f"{base_path}/doc_stats")
     index.term_stats.write.mode("overwrite").parquet(f"{base_path}/term_stats")
     # corpus constants frozen at index time: a served query reads 1 row
@@ -192,11 +194,9 @@ def write_index(
     index.corpus_stats().write.mode("overwrite").parquet(f"{base_path}/corpus_stats")
 
 
-def read_index(
-    spark: SparkSession, base_path: str, table: str = "jse_postings"
-) -> SearchIndex:
+def read_index(spark: SparkSession, base_path: str) -> SearchIndex:
     return SearchIndex(
-        postings=spark.table(table),
+        postings=spark.read.parquet(f"{base_path}/postings"),
         doc_stats=spark.read.parquet(f"{base_path}/doc_stats"),
         term_stats=spark.read.parquet(f"{base_path}/term_stats"),
         corpus=spark.read.parquet(f"{base_path}/corpus_stats"),
@@ -215,24 +215,17 @@ def build_positional_postings(
     ).select("token", "doc_id", "pos")
 
 
-def write_positional(postings: DataFrame, path: str, table: str, buckets: int = 64) -> None:
-    """Persist positional postings bucketed by token — phrase-query term
-    lookups read only the phrase terms' buckets, like the BM25 path."""
-    (
-        postings.repartition(buckets, "token")  # one file per bucket
-        .write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(buckets, "token")
-        .sortBy("token", "doc_id", "pos")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+def write_positional(postings: DataFrame, path: str, buckets: int = 64) -> None:
+    """Persist positional postings token-sorted, like the BM25 postings:
+    phrase-query term lookups read only the phrase terms' row groups.
+    Serve them with ``phrase_from_postings(spark.read.parquet(path), ...)``."""
+    write_token_sorted(postings, path, buckets, "token", "doc_id", "pos")
 
 
 def phrase_from_postings(
     positional: DataFrame, phrase: list[str], k: int = 10
 ) -> DataFrame:
-    """Phrase matching against a (served) positional-postings table: prune to
+    """Phrase matching against (served) positional postings: prune to
     the phrase's terms, then one (doc_id, expected-position) equi-join per
     adjacent pair — identical semantics to search.api.phrase_search computed
     from raw docs (pinned by test), but the per-request cost is posting

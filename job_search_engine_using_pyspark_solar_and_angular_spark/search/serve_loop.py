@@ -7,16 +7,19 @@ the served BM25/ANN tiers.
 Per micro-batch (:func:`serve_batch`):
 
 1. **Gate** — MinHash-LSH sketch ONLY the batch, join against the live
-   corpus bucket rows (union of per-segment bucket tables, tombstone-
+   corpus bucket rows (union of the per-segment bucket files, tombstone-
    filtered): arrivals that share a band bucket with an existing doc
    (different id — same-id is a replace-by-id UPDATE, reference
    ``SolrIndexer.java:36-45``) or with an earlier-id batch doc are
    suppressed. Cost scales with the batch, never the corpus.
 2. **Index delta** — survivors' postings are built fresh (churn-sized
-   tokenize) and published as a NEW token-bucketed segment table; replaced
-   doc_ids get a tombstone ``(doc_id, before_seg)``. This is the Lucene
-   segment + delete-bitmap model expressed in Spark tables: the 100 TB
-   components are append-only, a re-index never rewrites history.
+   tokenize) and written as a NEW segment: a plain parquet directory, one
+   token-sorted file per token hash bucket
+   (:func:`~.index.write_token_sorted`); replaced doc_ids get a tombstone
+   ``(doc_id, before_seg)``. This is the Lucene segment + delete-bitmap
+   model expressed in parquet files that any process can read by path:
+   the 100 TB components are append-only, a re-index never rewrites
+   history.
 3. **Stats** — EVERYTHING doc-grain is segmented the same way: per-doc
    lengths and the batch's LSH bucket rows are written as batch-sized
    segment files (never a rewrite of corpus state — per-batch write volume
@@ -62,23 +65,29 @@ batch rebuild (pinned in tests/test_serve_loop.py).
 
 from __future__ import annotations
 
+import os
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..cache import persist, scope
 from ..operators.dedup import minhash_bucket_table
 from ..streaming.state_store import commit_state, read_state
-from .index import SearchIndex, build_index
+from .index import SearchIndex, build_index, write_token_sorted
 
-VEC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.DoubleType()), True),
-        T.StructField("seg", T.IntegerType(), True),
-        T.StructField("bucket", T.IntegerType(), True),  # partition column
-    ]
-)
+# Every serving-state kind's schema, declared once: every read names it, so
+# no read pays a schema-inference job, and a column an older writer did not
+# emit (the first manifests had no batch_id) reads as null.
+SCHEMAS = {
+    "manifest": "seg int, batch_id long",
+    "tombstones": "doc_id long, before_seg int",
+    "doc_stats": "doc_id long, doc_len long, seg int",
+    "lsh": "doc_id long, band int, band_key string, seg int",
+    "scalar": "seg int, n_new long, sum_new long, n_rep long, sum_rep long",
+    "postings": "token string, doc_id long, doc_len int, tf long, seg int",
+    "vectors": "doc_id long, embedding array<double>, seg int, bucket int",
+}
 
 
 def _paths(base: str) -> dict[str, str]:
@@ -91,6 +100,25 @@ def _paths(base: str) -> dict[str, str]:
         "postings": f"{base}/postings",
         "vectors": f"{base}/vectors",
     }
+
+
+def _seg_path(p: dict, kind: str, seg: int) -> str:
+    # postings segments sit beside the other kinds' roots, not under one
+    if kind == "postings":
+        return f"{p['postings']}_seg{seg}"
+    return f"{p[kind]}/seg{seg}"
+
+
+def _state(spark: SparkSession, p: dict, kind: str, version: int | None = None):
+    """The committed manifest or tombstones (None before the first commit)."""
+    return read_state(spark, p[kind], version=version, schema=SCHEMAS[kind])
+
+
+def _manifest(spark: SparkSession, p: dict, version: int | None = None) -> list:
+    """The committed manifest rows in seg order ([] before the first publish):
+    <= n_segments rows, sorted driver-side."""
+    man = _state(spark, p, "manifest", version)
+    return [] if man is None else sorted(man.collect(), key=lambda r: r["seg"])
 
 
 def serve_batch(
@@ -117,6 +145,10 @@ def serve_batch(
     ``batch`` must carry one row per ``id_col`` (upstream latest-wins); a
     row whose id already exists in the corpus is a replace-by-id update.
 
+    ``table_prefix`` names nothing: the segments are plain parquet
+    directories under ``base``. It keeps its positional slot so existing
+    callers stay valid.
+
     ``batch_id`` makes redelivery exactly-once: the id is recorded IN the
     manifest row (one atomic commit — there is no window where the segment
     is published but its batch_id is not), and a batch whose id is already
@@ -141,9 +173,8 @@ def serve_batch(
     thread pool (test_parallel_writes_equal_sequential pins path
     equivalence)."""
     p = _paths(base)
-    man = read_state(spark, p["manifest"])
-    man_rows = [] if man is None else man.orderBy("seg").collect()
-    if batch_id is not None and man is not None and "batch_id" in man.columns:
+    man_rows = _manifest(spark, p)
+    if batch_id is not None:
         applied = max(
             (r["batch_id"] for r in man_rows if r["batch_id"] is not None),
             default=None,
@@ -156,7 +187,7 @@ def serve_batch(
     # tombstones from a PREVIOUS crashed attempt of this very seg are
     # clamped out (before_seg <= max committed seg) so a retry sees exactly
     # the pre-batch live state — the differential partials stay idempotent
-    tombs_df = read_state(spark, p["tombstones"]) if prior_segs else None
+    tombs_df = _state(spark, p, "tombstones") if prior_segs else None
 
     def _fp(label: str) -> None:
         if failpoint is not None:
@@ -175,9 +206,7 @@ def serve_batch(
         sup_parts = []
         if prior_segs:
             cuts = _tombstone_cuts(tombs_df, max_committed)
-            corpus_buckets = _alive(
-                _union_segments(spark, p["lsh"], prior_segs), cuts
-            )
+            corpus_buckets = _alive(_read_segments(spark, p, "lsh", prior_segs), cuts)
             sup_parts.append(
                 nb.join(
                     corpus_buckets.select(
@@ -226,23 +255,11 @@ def serve_batch(
         # saved — 3.30 s -> 3.68 s per delta batch at sf0.1.)
         fresh = build_index(survivors, id_col, text_col)
         fresh_post = persist(fresh.postings)
-        seg_table = f"{table_prefix}_seg{seg}"
 
         def _write_postings() -> None:
-            # fresh postings segment (token-bucketed table).
-            # repartition(N, token) is the SAME hash spec bucketBy uses
-            # (pmod(murmur3, N)), so every task holds exactly one bucket and
-            # the segment is N files instead of tasks x buckets tiny ones —
-            # served reads open N files per segment, and the delta write
-            # stops paying per-file creation for empty bucket slices
-            (
-                fresh_post.withColumn("seg", F.lit(seg))
-                .repartition(postings_buckets, "token")
-                .write.mode("overwrite")
-                .bucketBy(postings_buckets, "token")
-                .sortBy("token", "doc_id")
-                .option("path", f"{p['postings']}_seg{seg}")
-                .saveAsTable(seg_table)
+            write_token_sorted(
+                fresh_post.withColumn("seg", F.lit(seg)),
+                _seg_path(p, "postings", seg), postings_buckets, "token", "doc_id",
             )
 
         # doc-grain SEGMENTS: per-batch write volume is O(batch): the new
@@ -254,9 +271,7 @@ def serve_batch(
             F.sum("tf").alias("doc_len")
         )
         if prior_segs:
-            alive_stats = _alive(
-                _union_segments(spark, p["doc_stats"], prior_segs), cuts
-            )
+            alive_stats = _alive(_read_segments(spark, p, "doc_stats", prior_segs), cuts)
             # churn-sized: the replaced docs' OLD rows (for tombstones and
             # the retraction side of this segment's scalar partial)
             replaced_stats = persist(
@@ -266,7 +281,7 @@ def serve_batch(
         def _write_doc_stats() -> None:
             new_stats.withColumn("seg", F.lit(seg)).write.mode(
                 "overwrite"
-            ).parquet(f"{p['doc_stats']}/seg{seg}")
+            ).parquet(_seg_path(p, "doc_stats", seg))
 
         def _write_scalar() -> None:
             newagg = new_stats.agg(
@@ -296,7 +311,7 @@ def serve_batch(
                 "sum_new",
                 F.col("n_rep").cast("long").alias("n_rep"),
                 "sum_rep",
-            ).write.mode("overwrite").parquet(f"{p['scalar']}/seg{seg}")
+            ).write.mode("overwrite").parquet(_seg_path(p, "scalar", seg))
 
         def _commit_tombstones() -> None:
             if replaced_stats is not None:
@@ -314,7 +329,7 @@ def serve_batch(
             # LSH bucket segment (survivors' buckets, batch-sized)
             nb.join(surv_ids, "doc_id", "left_semi").withColumn(
                 "seg", F.lit(seg)
-            ).write.mode("overwrite").parquet(f"{p['lsh']}/seg{seg}")
+            ).write.mode("overwrite").parquet(_seg_path(p, "lsh", seg))
 
         def _write_vectors() -> None:
             if vec_col is None:
@@ -339,7 +354,7 @@ def serve_batch(
                 .repartition(F.col("bucket"))
                 .write.mode("overwrite")
                 .partitionBy("bucket")
-                .parquet(f"{p['vectors']}/seg{seg}")
+                .parquet(_seg_path(p, "vectors", seg))
             )
 
         if failpoint is None:
@@ -390,16 +405,9 @@ def serve_batch(
         # critical path to dedup rows the driver can dedup in microseconds.
         # Single-writer contract (foreachBatch is sequential) makes the
         # entry-time snapshot authoritative.
-        has_bid = man is not None and "batch_id" in man.columns
-        prior_tuples = [
-            (r["seg"], r["table"], r["batch_id"] if has_bid else None)
-            for r in man_rows
-        ]
-        all_tuples = list(
-            dict.fromkeys(prior_tuples + [(seg, seg_table, batch_id)])
-        )
+        prior = [(r["seg"], r["batch_id"]) for r in man_rows]
         man_new = spark.createDataFrame(
-            all_tuples, "seg int, table string, batch_id long"
+            list(dict.fromkeys(prior + [(seg, batch_id)])), SCHEMAS["manifest"]
         )
         _fp("pre_publish")
         commit_state(man_new, p["manifest"])
@@ -448,16 +456,49 @@ def _alive(rows: DataFrame, cuts: dict) -> DataFrame:
     return rows
 
 
-def _union_segments(spark: SparkSession, base_path: str, segs: list[int]) -> DataFrame:
-    """Union per-segment parquet directories (doc_stats / lsh / scalar) as
-    ONE multi-path relation — a single schema resolution + file listing,
-    not one per segment (segment schemas are identical by construction:
-    every segment is written by the same serve_batch code path). Per-seg
-    ``spark.read.parquet`` calls cost a resolution each — the fresh-read
-    class the r6 1M-probe measured at 1.2-3.3 s/read on large partition
-    counts, and at many-segment serving state even small per-read costs
-    multiply by segments x (lsh + doc_stats + scalar) reads per batch."""
-    return spark.read.parquet(*[f"{base_path}/seg{s}" for s in segs])
+def _read_segments(
+    spark: SparkSession, p: dict, kind: str, segs: list[int]
+) -> DataFrame | None:
+    """One kind's segment directories read with the declared schema, so no
+    read pays a schema-inference job: ONE multi-path relation (a single
+    file listing, not one per segment). Vector segments are the exception:
+    each is its own bucket-partitioned root, and Spark infers partitions
+    under one root per relation, so they are unioned per segment. They may
+    also be absent — a batch written without ``vec_col`` has none — so
+    only the existing ones are read; None when there are none."""
+    paths = [_seg_path(p, kind, s) for s in segs]
+    if kind != "vectors":
+        return spark.read.schema(SCHEMAS[kind]).parquet(*paths)
+    reads = [
+        spark.read.schema(SCHEMAS[kind]).parquet(x) for x in paths if os.path.isdir(x)
+    ]
+    return reduce(DataFrame.unionByName, reads) if reads else None
+
+
+def _resolve(spark: SparkSession, p: dict, rows: list) -> tuple[SearchIndex, dict]:
+    """The SearchIndex over a manifest's ``rows``, and its tombstone cuts."""
+    segs = [r["seg"] for r in rows]
+    cuts = _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1])
+    # the token filter prunes the segments' token-sorted files through their
+    # parquet dictionaries and statistics
+    alive = _alive(_read_segments(spark, p, "postings", segs), cuts).drop("seg")
+    doc_stats = _alive(_read_segments(spark, p, "doc_stats", segs), cuts).drop("seg")
+    # exact integer sums of the <= n_segments partial rows, then ONE double
+    # division: bit-identical to Spark's long-to-double cast and divide
+    parts = _read_segments(spark, p, "scalar", segs).collect()
+    n = sum(r["n_new"] for r in parts) - sum(r["n_rep"] for r in parts)
+    s = sum(r["sum_new"] for r in parts) - sum(r["sum_rep"] for r in parts)
+    avg_dl = float(s) / float(n) if n else None  # an empty corpus has none
+    corpus = spark.createDataFrame([(n, avg_dl)], "n_docs long, avg_dl double")
+    term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
+    idx = SearchIndex(
+        postings=alive,
+        doc_stats=doc_stats,
+        term_stats=term_stats,
+        corpus=corpus,
+        corpus_values=(n, avg_dl),
+    )
+    return idx, cuts
 
 
 def read_served_index(
@@ -474,8 +515,10 @@ def read_served_index(
     - Tombstones: collected once (clamped to this manifest) and applied as
       literal filters (:func:`_alive`), so the snapshot no longer
       reads the tombstone state after this call returns.
-    - Postings: the segments' files read as one parquet relation; the
-      query-term filter prunes the token-sorted files.
+    - Postings: the segments' files read by path as one parquet relation
+      with the declared schema; the query-term filter prunes the
+      token-sorted files. Any process can resolve a snapshot that another
+      process wrote.
 
     doc_stats and term_stats stay lazy (BM25 never touches them — per-term
     df comes from the pruned posting lists). Call again after a publish:
@@ -487,38 +530,10 @@ def read_served_index(
     tombstone clamp (``before_seg <= that manifest's max seg``) hides any
     tombstones committed after it, so later replaces don't bleed in."""
     p = _paths(base)
-    man = read_state(spark, p["manifest"], version=manifest_version)
-    if man is None:
+    rows = _manifest(spark, p, manifest_version)
+    if not rows:
         raise FileNotFoundError(f"no serving manifest committed under {base}")
-    rows = man.orderBy("seg").collect()
-    segs = [r["seg"] for r in rows]
-    max_seg = segs[-1]
-    cuts = _tombstone_cuts(read_state(spark, p["tombstones"]), max_seg)
-    # the segments' files as ONE plain parquet relation: a bucketed table
-    # scan schedules a task per bucket; the token filter still prunes the
-    # token-sorted files through their parquet dictionaries and statistics
-    postings = spark.read.schema(spark.table(rows[-1]["table"]).schema).parquet(
-        *[f"{p['postings']}_seg{s}" for s in segs]
-    )
-    alive = _alive(postings, cuts).drop("seg")
-    doc_stats = _alive(_union_segments(spark, p["doc_stats"], segs), cuts).drop(
-        "seg"
-    )
-    # exact integer sums of the <= n_segments partial rows, then ONE double
-    # division: bit-identical to Spark's long-to-double cast and divide
-    parts = _union_segments(spark, p["scalar"], segs).collect()
-    n = sum(r["n_new"] for r in parts) - sum(r["n_rep"] for r in parts)
-    s = sum(r["sum_new"] for r in parts) - sum(r["sum_rep"] for r in parts)
-    avg_dl = float(s) / float(n) if n else None  # an empty corpus has none
-    corpus = spark.createDataFrame([(n, avg_dl)], "n_docs long, avg_dl double")
-    term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
-    return SearchIndex(
-        postings=alive,
-        doc_stats=doc_stats,
-        term_stats=term_stats,
-        corpus=corpus,
-        corpus_values=(n, avg_dl),
-    )
+    return _resolve(spark, p, rows)[0]
 
 
 def _python_probe_buckets(
@@ -554,22 +569,6 @@ def _python_probe_buckets(
     return probes
 
 
-def _read_vector_segments(spark, p: dict, segs: list[int]) -> DataFrame | None:
-    """Union the vector segments that exist on disk; None when the loop ran
-    text-only (vec_col=None writes no vector segment for that batch — a
-    batch of docs without embeddings is normal, not an error)."""
-    import os
-
-    vecs = None
-    for s in segs:
-        path = f"{p['vectors']}/seg{s}"
-        if not os.path.isdir(path):
-            continue
-        df = spark.read.schema(VEC_SCHEMA).parquet(path)
-        vecs = df if vecs is None else vecs.unionByName(df)
-    return vecs
-
-
 def vector_search_served(
     spark: SparkSession,
     base: str,
@@ -587,11 +586,10 @@ def vector_search_served(
     if dim is None:
         dim = len(query_vec)
     p = _paths(base)
-    man = read_state(spark, p["manifest"])
-    if man is None:
+    segs = [r["seg"] for r in _manifest(spark, p)]
+    if not segs:
         raise FileNotFoundError(f"no serving manifest committed under {base}")
-    segs = [r["seg"] for r in man.orderBy("seg").collect()]
-    vecs = _read_vector_segments(spark, p, segs)
+    vecs = _read_segments(spark, p, "vectors", segs)
     if vecs is None:
         raise FileNotFoundError(
             f"no vector segments under {base}: the serve loop ran without "
@@ -600,7 +598,7 @@ def vector_search_served(
     probes = _python_probe_buckets(query_vec, num_planes, dim, multiprobe)
     cands = _alive(
         vecs.filter(F.col("bucket").isin(probes)),
-        _tombstone_cuts(read_state(spark, p["tombstones"]), segs[-1]),
+        _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1]),
     )
     qv = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
@@ -638,36 +636,30 @@ def compact_segments(
     docs.) Old segments are reclaimed by :func:`vacuum_segments` — run it
     once the longest read SLA has elapsed since the manifest flip, or pass
     ``vacuum_now=True`` (the default, matching single-process use where no
-    concurrent reader exists)."""
+    concurrent reader exists).
+
+    ``table_prefix`` names nothing (segments are parquet directories); it
+    keeps its positional slot so existing callers stay valid."""
     p = _paths(base)
-    idx = read_served_index(spark, base)
-    man = read_state(spark, p["manifest"])
-    man_rows = man.orderBy("seg").collect()
-    old_segs = [(r["seg"], r["table"]) for r in man_rows]
+    man_rows = _manifest(spark, p)
+    if not man_rows:
+        raise FileNotFoundError(f"no serving manifest committed under {base}")
+    idx, cuts = _resolve(spark, p, man_rows)
+    old_segs = [r["seg"] for r in man_rows]
     # the redelivery high-water mark must survive the fold: dropping it
     # would let a redelivered last batch re-apply after compaction
     applied = max(
-        (
-            r["batch_id"]
-            for r in man_rows
-            if "batch_id" in man.columns and r["batch_id"] is not None
-        ),
+        (r["batch_id"] for r in man_rows if r["batch_id"] is not None),
         default=None,
     )
-    new_seg = old_segs[-1][0] + 1
-    seg_table = f"{table_prefix}_seg{new_seg}"
-    (
-        idx.postings.withColumn("seg", F.lit(new_seg))
-        .repartition(postings_buckets, "token")  # one file per bucket
-        .write.mode("overwrite")
-        .bucketBy(postings_buckets, "token")
-        .sortBy("token", "doc_id")
-        .option("path", f"{p['postings']}_seg{new_seg}")
-        .saveAsTable(seg_table)
+    new_seg = old_segs[-1] + 1
+    write_token_sorted(
+        idx.postings.withColumn("seg", F.lit(new_seg)),
+        _seg_path(p, "postings", new_seg), postings_buckets, "token", "doc_id",
     )
     idx.doc_stats.withColumn("seg", F.lit(new_seg).cast("int")).write.mode(
         "overwrite"
-    ).parquet(f"{p['doc_stats']}/seg{new_seg}")
+    ).parquet(_seg_path(p, "doc_stats", new_seg))
     idx.doc_stats.agg(
         F.count("*").alias("n_new"),
         F.coalesce(F.sum("doc_len"), F.lit(0)).cast("long").alias("sum_new"),
@@ -677,15 +669,11 @@ def compact_segments(
         "sum_new",
         F.lit(0).cast("long").alias("n_rep"),
         F.lit(0).cast("long").alias("sum_rep"),
-    ).write.mode("overwrite").parquet(f"{p['scalar']}/seg{new_seg}")
-    old_seg_ids = [s for s, _ in old_segs]
-    cuts = _tombstone_cuts(read_state(spark, p["tombstones"]), old_seg_ids[-1])
-    _alive(_union_segments(spark, p["lsh"], old_seg_ids), cuts).drop(
-        "seg"
-    ).withColumn("seg", F.lit(new_seg).cast("int")).write.mode(
-        "overwrite"
-    ).parquet(f"{p['lsh']}/seg{new_seg}")
-    vecs = _read_vector_segments(spark, p, old_seg_ids)
+    ).write.mode("overwrite").parquet(_seg_path(p, "scalar", new_seg))
+    _alive(_read_segments(spark, p, "lsh", old_segs), cuts).withColumn(
+        "seg", F.lit(new_seg).cast("int")
+    ).write.mode("overwrite").parquet(_seg_path(p, "lsh", new_seg))
+    vecs = _read_segments(spark, p, "vectors", old_segs)
     if vecs is not None:
         alive_vecs = _alive(vecs, cuts)
         (
@@ -695,12 +683,10 @@ def compact_segments(
             .repartition(F.col("bucket"))
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(f"{p['vectors']}/seg{new_seg}")
+            .parquet(_seg_path(p, "vectors", new_seg))
         )
     commit_state(
-        spark.createDataFrame(
-            [(new_seg, seg_table, applied)], "seg int, table string, batch_id long"
-        ),
+        spark.createDataFrame([(new_seg, applied)], SCHEMAS["manifest"]),
         p["manifest"],
     )
     if vacuum_now:
@@ -722,47 +708,39 @@ def vacuum_segments(spark: SparkSession, base: str, table_prefix: str) -> None:
     construction) — which also sweeps segments leaked by a compaction that
     crashed after its manifest flip. Idempotent and crash-safe: deletion
     order is irrelevant because nothing live is ever in the candidate set,
-    and the tombstone GC rewrites state through the versioned commit."""
-    import os
+    and the tombstone GC rewrites state through the versioned commit.
+
+    ``table_prefix`` names nothing; it keeps its positional slot so
+    existing callers stay valid."""
     import re
     import shutil
 
     p = _paths(base)
-    man = read_state(spark, p["manifest"])
-    if man is None:
+    live = {r["seg"] for r in _manifest(spark, p)}
+    if not live:
         return
-    live = {r["seg"] for r in man.collect()}
-    mx = max(live)
+    kinds = ("postings", "doc_stats", "lsh", "scalar", "vectors")
     seen: set[int] = set()
-    pat = re.compile(r"^seg(\d+)$")
-    for key in ("doc_stats", "lsh", "scalar", "vectors"):
-        root = p[key]
+    for kind in kinds:
+        # each kind's segments are "<prefix><seg>" entries of one directory
+        root, prefix = os.path.split(_seg_path(p, kind, 0)[:-1])
         if os.path.isdir(root):
             for name in os.listdir(root):
-                m = pat.match(name)
+                m = re.fullmatch(re.escape(prefix) + r"(\d+)", name)
                 if m:
                     seen.add(int(m.group(1)))
-    post_pat = re.compile(r"^postings_seg(\d+)$")
-    for name in os.listdir(base):
-        m = post_pat.match(name)
-        if m:
-            seen.add(int(m.group(1)))
     for s in sorted(seen - live):
-        if s >= mx:  # in-flight writer territory — never touch
+        if s >= max(live):  # in-flight writer territory — never touch
             continue
-        spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_seg{s}")
-        # external tables keep their data on DROP — remove the postings dir
-        shutil.rmtree(f"{p['postings']}_seg{s}", ignore_errors=True)
-        for key in ("doc_stats", "lsh", "scalar", "vectors"):
-            shutil.rmtree(f"{p[key]}/seg{s}", ignore_errors=True)
+        for kind in kinds:
+            shutil.rmtree(_seg_path(p, kind, s), ignore_errors=True)
     # tombstone GC: (doc_id, before_seg=b) kills rows with seg < b only; once
     # every live row has seg >= b the tombstone is inert and safe to drop.
-    tombs = read_state(spark, p["tombstones"])
+    tombs = _state(spark, p, "tombstones")
     if tombs is not None:
-        mn = min(live)
-        alive_tombs = tombs.filter(F.col("before_seg") > mn)
-        if alive_tombs.count() < tombs.count():
-            commit_state(alive_tombs, p["tombstones"])
+        inert = F.col("before_seg") <= min(live)
+        if not tombs.filter(inert).isEmpty():
+            commit_state(tombs.filter(~inert), p["tombstones"])
 
 
 def serve_loop_sink(
@@ -778,6 +756,8 @@ def serve_loop_sink(
     """The streaming composition: every micro-batch runs the full
     gate -> delta-index -> publish loop. Idempotent per batch (see module
     docstring), so exactly-once serving state over at-least-once delivery.
+    ``table_prefix`` names nothing (see :func:`serve_batch`); it keeps its
+    positional slot so existing callers stay valid.
 
     ``auto_compact_max_segments``: Lucene's merge policy for the loop —
     when a batch's publish leaves the manifest holding at least this many
@@ -808,7 +788,7 @@ def serve_loop_sink(
         # skipped instead of re-gated against the post-batch corpus
         serve_batch(spark, batch, base, table_prefix, batch_id=batch_id, **serve_kwargs)
         if auto_compact_max_segments is not None:
-            man = read_state(spark, _paths(base)["manifest"])
+            man = _state(spark, _paths(base), "manifest")
             if man is not None and man.count() >= auto_compact_max_segments:
                 compact_segments(
                     spark,

@@ -63,7 +63,10 @@ def current_version(target_path: str) -> int | None:
 
 
 def read_state(
-    spark: SparkSession, target_path: str, version: int | None = None
+    spark: SparkSession,
+    target_path: str,
+    version: int | None = None,
+    schema: str | None = None,
 ) -> DataFrame | None:
     """The committed state DataFrame, or None if never committed.
 
@@ -71,7 +74,11 @@ def read_state(
     (time travel within the retention window, e.g. ``keep=2`` retains the
     previous state for exactly-once replay comparisons and debugging).
     Requesting a pruned or never-written version raises FileNotFoundError
-    rather than silently serving the wrong state."""
+    rather than silently serving the wrong state.
+
+    ``schema`` (a DDL string) reads the version with a declared schema
+    instead of inferring one from its files, which costs a Spark job; a
+    declared column the version does not hold reads as null."""
     if version is None:
         version = current_version(target_path)
         if version is None:
@@ -82,7 +89,8 @@ def read_state(
             f"state version {version} not present under {target_path} "
             "(pruned or never committed)"
         )
-    return spark.read.parquet(vdir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(vdir)
 
 
 def commit_state(df: DataFrame, target_path: str, keep: int = 2) -> int:

@@ -106,15 +106,15 @@ def test_tokenize_query_matches_engine_analyzer(spark):
 
 
 def test_index_write_read_roundtrip(spark, docs, index, tmp_path):
-    """S8 analog: bucketed postings persistence; search over the materialized
-    index returns identical results to the in-memory one."""
+    """S8 analog: token-sorted postings persisted as plain parquet, read
+    back by path; search over the materialized index returns identical
+    results to the in-memory one."""
     base = str(tmp_path / "idx")
-    write_index(index, base, buckets=8, table="jse_postings_test")
-    back = read_index(spark, base, table="jse_postings_test")
+    write_index(index, base, buckets=8)
+    back = read_index(spark, base)
     fresh = bm25_search(spark, index, ["spark", "join"], k=10).collect()
     persisted = bm25_search(spark, back, ["spark", "join"], k=10).collect()
     assert [tuple(r) for r in fresh] == [tuple(r) for r in persisted]
-    spark.sql("DROP TABLE IF EXISTS jse_postings_test")
 
 
 def test_punctuated_query_matches(spark, docs, index):
@@ -229,7 +229,7 @@ def test_tfidf_keywords_surface_rare_terms(spark):
 
 
 def test_phrase_from_served_index_matches_direct(spark, tmp_path):
-    """Phrase search against the persisted positional-postings table must
+    """Phrase search against the persisted positional postings must
     return exactly what the direct-from-docs computation returns."""
     from pyspark.sql import functions as F
 
@@ -247,16 +247,13 @@ def test_phrase_from_served_index_matches_direct(spark, tmp_path):
 
     d = load_table(spark, SF_DIR, "documents")
     pos = build_positional_postings(d)
-    table = "jse_test_positional"
-    write_positional(pos, str(tmp_path / "pos"), table, buckets=8)
-    served = spark.table(table)
+    write_positional(pos, str(tmp_path / "pos"), buckets=8)
+    served = spark.read.parquet(str(tmp_path / "pos"))
     got = sorted(map(tuple, phrase_from_postings(served, ["window", "join"]).collect()))
     want = sorted(map(tuple, phrase_search(d, ["window", "join"]).collect()))
     assert got == want and len(got) > 0
-    # bucketed table: the phrase join over the served side needs no exchange
     plan = phrase_from_postings(served, ["window", "join"])._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan  # a real join ran
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_related_docs_envelope(spark):
@@ -360,18 +357,17 @@ def test_search_hybrid_served_from_both_indexes(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
     base = str(tmp_path / "postings")
-    write_index(build_index(docs, cache=True), base, table="jse_hybrid_test")
+    write_index(build_index(docs, cache=True), base)
     vpath = str(tmp_path / "vecidx")
     write_vector_index_int8(emb.filter(F.col("vec_id") != 0), vpath)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
     fused = search_hybrid_served(
-        spark, base, vpath, "spark join", qvec, k=10, pool=20,
-        table="jse_hybrid_test",
+        spark, base, vpath, "spark join", qvec, k=10, pool=20
     ).collect()
     assert len(fused) == 10
 
-    idx = read_index(spark, base, table="jse_hybrid_test")
+    idx = read_index(spark, base)
     bm_rank = {
         r["doc_id"]: i
         for i, r in enumerate(

@@ -157,6 +157,83 @@ def test_resolved_snapshot_outlives_tombstone_versions(spark, served):
     assert 2 not in {h[0] for h in _bm25_rows(spark, live, ["bm25", "documents"])}
 
 
+def test_index_files_need_no_catalog(spark, tmp_path):
+    """Every index is plain parquet read back by path. Serving two batches
+    (one a replace-by-id), compacting, write_index and write_positional
+    leave the session catalog as it was, and each index answers as the
+    in-memory rebuild does. A manifest committed in the older layout
+    (``seg, table``, no ``batch_id``) still resolves and compacts."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import (
+        build_positional_postings,
+        phrase_from_postings,
+        read_index,
+        write_index,
+        write_positional,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.streaming.state_store import (
+        commit_state,
+    )
+
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    base, prefix = str(tmp_path / "serving"), _prefix(tmp_path)
+    updated = (1, "kubernetes schedules containers onto nodes respecting resource quotas")
+    _serve(spark, _df(spark, DOCS), base, prefix)
+    _serve(spark, _df(spark, [updated]), base, prefix)
+    latest = _df(spark, [updated] + DOCS[1:])
+    rebuilt = build_index(latest, cache=True)
+    terms = (["kubernetes"], ["shuffles"], ["bm25", "documents"], ["spark", "executors"])
+
+    def answers(idx):
+        return {tuple(t): _bm25_rows(spark, idx, t) for t in terms}
+
+    want = answers(rebuilt)
+    assert want[("shuffles",)] == [] and want[("kubernetes",)][0][0] == 1
+    assert answers(serve_loop.read_served_index(spark, base)) == want
+
+    commit_state(
+        spark.createDataFrame(
+            [(1, f"{prefix}_seg1"), (2, f"{prefix}_seg2")], "seg int, table string"
+        ),
+        f"{base}/manifest",
+    )
+    assert answers(serve_loop.read_served_index(spark, base)) == want
+    serve_loop.compact_segments(spark, base, prefix, postings_buckets=4)
+    assert answers(serve_loop.read_served_index(spark, base)) == want
+
+    write_index(rebuilt, str(tmp_path / "idx"), buckets=4)
+    assert answers(read_index(spark, str(tmp_path / "idx"))) == want
+    pos = build_positional_postings(latest)
+    write_positional(pos, str(tmp_path / "pos"), buckets=4)
+    served = spark.read.parquet(str(tmp_path / "pos"))
+    for phrase in (["schedules", "containers"], ["term", "frequency"]):
+        got = phrase_from_postings(served, phrase).collect()
+        assert len(got) == 1 and got == phrase_from_postings(pos, phrase).collect()
+
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables
+
+
+def test_read_served_index_job_count(spark, served):
+    """Deterministic cost counter for resolving a served snapshot (the way
+    test_served_keyword_request_job_count pins a request): over two
+    segments and a tombstone, read_served_index runs 3 Spark jobs — one
+    collect each of the manifest, the tombstones and the corpus partials.
+    Every read names its declared schema, so none pays a schema-inference
+    job (that form ran 9)."""
+    base, prefix = served
+    _serve(spark, _df(spark, [(1, "kubernetes schedules containers onto nodes")]), base, prefix)
+    serve_loop.read_served_index(spark, base)  # warm: the same jobs
+    sc = spark.sparkContext
+    group = "pin-read-served-index-" + prefix
+    sc.setJobGroup(group, "resolve one served snapshot")
+    try:
+        idx = serve_loop.read_served_index(spark, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert idx.corpus_values[0] == len(DOCS)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
 def test_crash_before_manifest_publish_retry_converges(spark, tmp_path):
     """Kill the batch at the LAST commit (everything updated, manifest not
     published), retry it in full: the served state must equal a clean run's

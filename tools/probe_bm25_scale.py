@@ -1,11 +1,11 @@
 """BM25 served-search replication probe — the keyword-side twin of
 tools/probe_ann_scale.py: replicate the sf0.1 documents corpus (default
-100x -> 500k docs), persist the token-bucketed index once, and measure
+100x -> 500k docs), persist the token-sorted index once, and measure
 steady-state query latency against the on-disk postings plus the
 one-time build cost.
 
 What it demonstrates at scale: a term query's cost is its terms' posting
-LISTS (bucket-pruned file reads growing with corpus size), not the corpus
+LISTS (row-group-pruned file reads growing with corpus size), not the corpus
 — so latency should grow far sub-linearly vs the 100x document count,
 while the build pays the full corpus pass once.
 
@@ -72,21 +72,20 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     base = os.path.join(BENCH_DIR, f"bm25idx_probe_r{reps}")
-    table = f"jse_probe_postings_r{reps}"
     n_docs = load_table(spark, SF_DIR, "documents").count() * reps
 
     build_sec = None
     try:
-        idx = read_index(spark, base, table=table)
+        idx = read_index(spark, base)
         idx.postings.first()
     except Exception:
         corpus = replicated_documents(spark, SF_DIR, reps)
         t0 = time.perf_counter()
         built = build_index(corpus, cache=True)
-        write_index(built, base, table=table)
+        write_index(built, base)
         build_sec = round(time.perf_counter() - t0, 3)
         built.postings.unpersist()
-        idx = read_index(spark, base, table=table)
+        idx = read_index(spark, base)
 
     force(bm25_search(spark, idx, ["spark", "join"], 10))  # warm
     t_query = timed_min(

@@ -46,14 +46,13 @@ QUERIES = ["spark join", "window shuffle", "parquet scan", "broadcast hash",
 def _index(spark):
     sf_tag = os.path.basename(SF_DIR.rstrip("/"))
     base = os.path.join(BENCH_DIR, f"index_{sf_tag}")
-    table = f"jse_bench_postings_{sf_tag.replace('.', '_')}"
     try:
-        idx = read_index(spark, base, table=table)
+        idx = read_index(spark, base)
         idx.postings.first()
     except Exception:
         built = build_index(load_table(spark, SF_DIR, "documents"), cache=True)
-        write_index(built, base, table=table)
-        idx = read_index(spark, base, table=table)
+        write_index(built, base)
+        idx = read_index(spark, base)
     return idx
 
 

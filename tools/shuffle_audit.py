@@ -108,7 +108,7 @@ def served_main() -> None:
     #4 — the batch-query audit had no measured-bytes row for them):
 
     * q20_bm25_served / http_query_served — per-request bytes (delta over
-      2 identical requests, halved) against the on-disk bucketed index at
+      2 identical requests, halved) against the on-disk token-sorted index at
       sf0.01 and sf0.1: posting-list reads must scale with the index, the
       shuffle with the ~matching-docs agg, never the corpus;
     * served_refresh — one ~2%-of-corpus delta batch through the full
@@ -150,11 +150,7 @@ def served_main() -> None:
             read_index,
         )
 
-        idx = read_index(
-            spark,
-            os.path.join(REPO, ".bench", f"index_{sf_tag}"),
-            table=f"jse_bench_postings_{sf_tag.replace('.', '_')}",
-        )
+        idx = read_index(spark, os.path.join(REPO, ".bench", f"index_{sf_tag}"))
         row = _delta(
             app_id,
             lambda: [
