@@ -14,25 +14,30 @@ Prints ONE JSON line:
    "preprocess_scaled_10gb": {same shape, ~10 GB input, min-of-2 with
                               per-sink stage walls},
    "served_trials": {name: [sec, ...], ...},  # raw trials, headline + served
-   "regressions": {name: {"prev": sec, "cur": sec, "ratio": ...}, ...}}
+   "layers": {name: {"build_s", "build_jobs", "jobs", "stages", "tasks",
+                     "shuffle_mb", "spill_mb"}, ...},  # Spark cost ledger
+   "jobs": ..., "stages": ..., "shuffle_mb": ...,  # ledger totals
+   "regressions": {name: {"prev": sec, "cur": sec, "ratio": ...,
+                          "counters_moved": ...}, ...}}
 
-``regressions`` compares to the best available prior run — the builder's
-own ``.bench/last_full.json`` first, else the newest BENCH_r{N}.json
-(parsed dict, or reconstructed from its ``tail`` string when the driver
-recorded ``parsed: null``) — and flags >1.5x per-query slowdowns on the
-common set. ``_baseline`` names the source and ``_compared`` counts the
-common queries, so "no flags" is distinguishable from "nothing compared".
-Would-be flags the artifact itself explains as noise (host-adjusted-clean,
-or inside the baseline's own recorded trial spread) land in
-``_noise_absorbed`` instead of counting — see _flag_slowdowns. Flags that
-survive absorption are then RE-MEASURED at end of run (the burst that
-inflated them has usually passed; the fresh trials land under the
-artifact's ``recheck_trials`` key AND REPLACE the burst-inflated
-``served_trials`` entry — so the baseline the next run absorbs against
-carries the quiet spread, not the burst's — and the guard recomputes):
-a real plan regression reproduces and keeps its flag, transient load
-clears with a true quiet measurement. ``_rechecked`` lists the
-re-measured entries.
+``layers`` is the cost ledger: every timed entry builds its DataFrame under
+``profiling.profiled("<name>:build")`` and runs it under ``"<name>:exec"``,
+and its row holds the last trial's counters. ``build_s`` and ``build_jobs``
+are the build phase (eager actions while the DataFrame is assembled);
+``jobs``, ``stages``, ``tasks``, ``shuffle_mb`` (read + write) and
+``spill_mb`` cover build and execution together. Job and stage counts are
+deterministic for a fixed plan and fixed data, so they are what the
+regression guard trusts.
+
+``regressions`` compares to the prior run at the same core count and scale:
+``.bench/last_full.c{cores}.json`` (``last_full.sf{sf}.c{cores}.json`` off
+sf0.1) first, else the newest ``BENCH_r{N}.json`` driver artifact with the
+same ``cpus`` and ``sf`` whose contract line parsed (see
+regressions_vs_previous). ``_baseline`` names the source and ``_compared``
+counts the common entries, so "no flags" is distinguishable from "nothing
+compared". Nothing is absorbed: a changed job or stage count flags
+(``counters_moved``), and a >1.5x wall ratio flags too, marked
+``wall_only`` when the counters held.
 
 Methodology:
 - each query is forced with ``df.write.format("noop")`` — full column
@@ -72,6 +77,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.session import get_spark
 from job_search_engine_using_pyspark_solar_and_angular_spark.queries import (
     extensions as _ext,  # noqa: F401  (registers extension queries)
@@ -162,8 +168,7 @@ HEADLINE = [
     "ext_batch_cosine_topk",
     # round-5 additions: temperature-scaled mixing (apply), the
     # packing-efficiency audit, and the PQ->full-precision rerank funnel
-    # (the production composition DEPLOY.md recommends — benched so its
-    # ACCEPTED_REGRESSIONS annotation is actually reachable)
+    # (the production composition DEPLOY.md recommends)
     "ext_mix_temperature",
     "ext_packing_stats",
     "ext_ann_pq_rerank",
@@ -185,62 +190,66 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# raw per-trial timings of every regression-tracked entry (headline AND
-# served since r10), recorded in the artifact so a flagged "regression" can
-# be adjudicated as noise (trial spread) vs plan change without re-running
-# on an idle machine — BENCH_r04 recorded three phantom regressions
-# precisely because the served entries were single-shot, and six of seven
-# r9 closing runs were discarded because headline entries carried no spread
-# information at all
+# raw per-trial timings of every timed entry, recorded in the artifact so
+# a wall-time flag shows its own trial spread
 SERVED_TRIALS: dict[str, list[float]] = {}
 
-# rerun thunk per timed entry — lets the end-of-run flag RECHECK re-measure
-# exactly what the original timing measured (headline, served, bucketed all
-# flow through timed_min)
-RERUN: dict[str, object] = {}
+# the cost ledger: one row per timed entry (see the module docstring)
+LAYERS: dict[str, dict] = {}
 
-# run-scoped contexts (the HTTP bench's live server) kept open so RERUN
-# thunks still work at recheck time; closed when the process exits
-import contextlib as _contextlib
 
-_HTTP_STACK = _contextlib.ExitStack()
-import atexit as _atexit
-
-_atexit.register(_HTTP_STACK.close)
+def layer_row(build, run) -> dict:
+    """One ``layers`` row from a trial's build and exec ledgers."""
+    return {
+        "build_s": build.wall_s,
+        "build_jobs": build.jobs,
+        "jobs": build.jobs + run.jobs,
+        "stages": build.stages + run.stages,
+        "tasks": build.tasks + run.tasks,
+        "shuffle_mb": round(build.shuffle_mb + run.shuffle_mb, 3),
+        "spill_mb": round(build.spill_mb + run.spill_mb, 3),
+    }
 
 
 def timed_min(
     name: str,
-    fn,
+    build,
+    run=force,
     trials: int = 2,
     max_trials: int = 3,
     spread: float = 1.3,
     pre=None,
 ) -> float:
-    """Min-of-N timed runs of ``fn`` (the bench's standard policy — the
-    per-query loop in main() routes through this too); raw trials recorded
-    in SERVED_TRIALS for the artifact. When the first ``trials`` runs
-    disagree by more than ``spread`` (max/min), escalate one extra trial up
-    to ``max_trials`` — a noisy-neighbor spike on a single trial then gets
-    a third chance at a quiet window instead of inflating the recorded min
-    (VERDICT r9 #2: best-of-N INSIDE one run, so a noisy host doesn't cost
+    """Min-of-N timed trials of ``run(build())`` (the bench's standard
+    policy — the per-query loop in main() routes through this too); raw
+    trials recorded in SERVED_TRIALS for the artifact. When the first
+    ``trials`` runs disagree by more than ``spread`` (max/min), escalate one
+    extra trial up to ``max_trials`` — a noisy-neighbor spike on a single
+    trial then gets a third chance at a quiet window instead of inflating
+    the recorded min (best-of-N INSIDE one run, so a noisy host doesn't cost
     the whole run).
 
+    Each trial builds under ``profiled("<name>:build")`` and runs under
+    ``profiled("<name>:exec")``; its wall time is the two blocks' sum (the
+    status-store reads between them are not timed) and the last trial's
+    counters become ``LAYERS[name]``. The last trial, not the fastest,
+    because a first trial may pay one-off jobs (parquet schema inference)
+    and the ledger must repeat run to run.
+
     ``pre``: run OUTSIDE the timed region before every trial. The headline
-    loop passes the scoped-cache release (VERDICT r11 #1/#3 cold-trial
-    accounting): a query whose cache generation holds persists
-    rebuilds them in every trial, so min-of-N records the reproducible COLD
-    cost — pre-r12 trial 2 read trial 1's still-registered cache blocks and
-    the recorded min measured a cache read, not the query. The RERUN thunk
-    folds ``pre`` in (the unpersist of a dropped generation is microseconds)
-    so flag rechecks re-measure the same cold cost."""
+    loop passes the scoped-cache release (cold-trial accounting): a query
+    whose cache generation holds persists rebuilds them in every trial, so
+    min-of-N records the reproducible COLD cost rather than a cache read."""
 
     def one() -> float:
         if pre is not None:
             pre()
-        t0 = time.perf_counter()
-        fn()
-        return round(time.perf_counter() - t0, 3)
+        with profiled(f"{name}:build") as b:
+            out = build()
+        with profiled(f"{name}:exec") as e:
+            run(out)
+        LAYERS[name] = layer_row(b, e)
+        return round(b.wall_s + e.wall_s, 3)
 
     ts = [one() for _ in range(trials)]
     while (
@@ -250,7 +259,6 @@ def timed_min(
     ):
         ts.append(one())
     SERVED_TRIALS[name] = ts
-    RERUN[name] = fn if pre is None else (lambda: (pre(), fn()))
     return min(ts)
 
 
@@ -281,8 +289,7 @@ def bench_bm25_served(spark, sf_dir: str) -> float:
         idx = read_index(spark, base)
     force(bm25_search(spark, idx, ["spark", "join"], 10))  # warm scan
     return timed_min(
-        "q20_bm25_served",
-        lambda: force(bm25_search(spark, idx, ["spark", "join"], 10)),
+        "q20_bm25_served", lambda: bm25_search(spark, idx, ["spark", "join"], 10)
     )
 
 
@@ -292,7 +299,11 @@ def bench_http_served(spark, sf_dir: str) -> float:
     token-sorted index → the page's doc and user rows fetched → envelope JSON
     out. Reuses bench_bm25_served's cached index, so the delta over
     q20_bm25_served is the k-row doc/user fetch + marshaling + HTTP — the
-    full serving stack the Angular client sees."""
+    full serving stack the Angular client sees.
+
+    Its ``layers`` row counts the client thread only: the request runs on
+    the server's handler thread, outside the entry's job group, until
+    requests run under job groups of their own."""
     import json as _json
     import urllib.request
 
@@ -317,21 +328,16 @@ def bench_http_served(spark, sf_dir: str) -> float:
     svc = SearchService(
         spark, idx, docs, users=users, doc_user_key=("owner", "c_custkey")
     )
-    # the serve context stays open until process exit (contextlib.ExitStack
-    # closed in main's finally / atexit): the RERUN thunk must hit the SAME
-    # live server at flag-recheck time — pre-r10 this was the one entry the
-    # recheck could not re-measure, and it kept a phantom flag on every
-    # noisy-host run
-    handle = _HTTP_STACK.enter_context(serve(svc))
-    url = handle.url + "/api/search/query?query=spark%20join"
+    with serve(svc) as handle:
+        url = handle.url + "/api/search/query?query=spark%20join"
 
-    def one() -> None:
-        with urllib.request.urlopen(url, timeout=300) as resp:
-            body = _json.loads(resp.read())
-        assert body["status_code"] == 200 and body["count"] > 0
+        def one(_=None) -> None:
+            with urllib.request.urlopen(url, timeout=300) as resp:
+                body = _json.loads(resp.read())
+            assert body["status_code"] == 200 and body["count"] > 0
 
-    one()  # warm (index relation resolution + codegen)
-    return timed_min("http_query_served", one)
+        one()  # warm (index relation resolution + codegen)
+        return timed_min("http_query_served", lambda: None, one)
 
 
 def bench_ann_served(spark, sf_dir: str) -> float:
@@ -363,8 +369,7 @@ def bench_ann_served(spark, sf_dir: str) -> float:
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     force(ann_lsh_quantized_served(spark, path, q, k=5))  # warm
     return timed_min(
-        "ann_lsh_served",
-        lambda: force(ann_lsh_quantized_served(spark, path, q, k=5)),
+        "ann_lsh_served", lambda: ann_lsh_quantized_served(spark, path, q, k=5)
     )
 
 
@@ -427,9 +432,7 @@ def bench_ann_pq_served(spark, sf_dir: str) -> float:
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     handle = resolve_pq_index(spark, path)  # once per index generation
     force(ann_pq_served(spark, handle, qv, k=5))  # warm
-    return timed_min(
-        "ann_pq_served", lambda: force(ann_pq_served(spark, handle, qv, k=5))
-    )
+    return timed_min("ann_pq_served", lambda: ann_pq_served(spark, handle, qv, k=5))
 
 
 def bench_ann_served_vec(spark, sf_dir: str) -> float:
@@ -461,11 +464,11 @@ def bench_ann_served_vec(spark, sf_dir: str) -> float:
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     idx_df = spark.read.parquet(path)
 
-    def one() -> None:
-        force(ann_lsh_served_vec(spark, idx_df, qv, k=5, num_planes=planes))
+    def query():
+        return ann_lsh_served_vec(spark, idx_df, qv, k=5, num_planes=planes)
 
-    one()  # resolve + list the relation once
-    return timed_min("ann_lsh_served_vec", one)
+    force(query())  # resolve + list the relation once
+    return timed_min("ann_lsh_served_vec", query)
 
 
 def bench_ann_served_1m(spark) -> float:
@@ -501,15 +504,13 @@ def bench_ann_served_1m(spark) -> float:
     qv = [float(x) for x in base.filter(F.col("vec_id") == 0).first()["embedding"]]
     idx_df = spark.read.parquet(path)
 
-    def one() -> None:
-        force(
-            similarity.ann_lsh_served_vec(
-                spark, idx_df, qv, k=5, num_planes=planes, multiprobe=True
-            )
+    def query():
+        return similarity.ann_lsh_served_vec(
+            spark, idx_df, qv, k=5, num_planes=planes, multiprobe=True
         )
 
-    one()  # resolve + list the relation once (the per-generation cost)
-    return timed_min("ann_lsh_served_1m", one)
+    force(query())  # resolve + list the relation once (the per-generation cost)
+    return timed_min("ann_lsh_served_1m", query)
 
 
 def bench_preprocess_scaled(
@@ -681,8 +682,10 @@ def bench_served_refresh(spark, sf_dir: str) -> float:
     corpus = docs.join(emb, "doc_id", "left")
     serve_loop.serve_batch(spark, corpus, base, prefix, vec_col="embedding")
 
-    best = float("inf")
-    for i in (1, 2):
+    batch_no = iter((1, 2))
+
+    def delta():
+        i = next(batch_no)
         fresh = corpus.filter(F.col("doc_id") % 50 == i).select(
             (F.col("doc_id") + 1_000_000 * i).alias("doc_id"),
             F.format_string(
@@ -694,13 +697,19 @@ def bench_served_refresh(spark, sf_dir: str) -> float:
         dups = corpus.filter(F.col("doc_id") % 50 == 10 + i).select(
             (F.col("doc_id") + 2_000_000 * i).alias("doc_id"), "text", "embedding"
         )
-        batch = fresh.unionByName(dups)
-        t0 = time.perf_counter()
-        serve_loop.serve_batch(spark, batch, base, prefix, vec_col="embedding")
-        trial = round(time.perf_counter() - t0, 3)
-        SERVED_TRIALS.setdefault("served_refresh", []).append(trial)
-        best = min(best, trial)
-    return round(best, 3)
+        return fresh.unionByName(dups)
+
+    # exactly two batches: each batch adds a segment and so reads more
+    # state, and the ledger row (the last trial's) repeats run to run only
+    # when the trial count does
+    return timed_min(
+        "served_refresh",
+        delta,
+        lambda batch: serve_loop.serve_batch(
+            spark, batch, base, prefix, vec_col="embedding"
+        ),
+        max_trials=2,
+    )
 
 
 def bench_bucketed_layout(spark, sf_dir: str) -> dict:
@@ -766,10 +775,8 @@ def bench_bucketed_layout(spark, sf_dir: str) -> dict:
         xb = exchange_count(b)
         assert xb <= cap, f"{qname}: bucketed plan has {xb} Exchanges (cap {cap})"
         out[qname] = {
-            "unbucketed_sec": timed_min(
-                f"{qname}_unbucketed", lambda: force(mk_unb())
-            ),
-            "bucketed_sec": timed_min(f"{qname}_bucketed", lambda: force(mk_b())),
+            "unbucketed_sec": timed_min(f"{qname}_unbucketed", mk_unb),
+            "bucketed_sec": timed_min(f"{qname}_bucketed", mk_b),
             "unbucketed_exchanges": exchange_count(unb),
             "bucketed_exchanges": xb,
         }
@@ -779,305 +786,81 @@ def bench_bucketed_layout(spark, sf_dir: str) -> dict:
     return out
 
 
-# Deliberate cost increases, annotated so the artifact explains itself when
-# the guard flags them (the r4 precedent: ext_multimodal_features 0.45->0.83
-# was the honest price of real pixel decode). Entries are NOT suppressed —
-# the ratio still appears; the reason rides along.
-ACCEPTED_REGRESSIONS = {
-    "ext_ann_pq": "r6: PQ m 8->16 + ksub 16->32 — encode work x4 (corpus x "
-    "m x ksub sub-distances); rerank recall@5 q0 went 0.8/0.6 -> 1.0/0.8 at "
-    "sf0.01/0.1 (4-query mean 0.95/0.90); m=8 subspaces were the bottleneck",
-    "ext_ann_pq_rerank": "r6: same m 8->16 + ksub 16->32 recall fix; "
-    "shortlist stays 100",
-    "ann_pq_served": "r6: ADC now does m=16 lookups per candidate instead "
-    "of 8 (the served cost of the recall fix; codes still 16 bytes/vector)",
-    "ann_lsh_served": "r5: Hamming-1 multiprobe is the served default now "
-    "(single-bucket measured recall 0.0 at sf0.01) — 5 of 16 partitions "
-    "read instead of 1",
-}
-
-
-def host_calibration(runs: int = 3) -> float:
-    """Fixed synthetic CPU kernel — a machine-speed constant emitted into
-    every artifact (``host_calib_sec``) so cross-round query ratios can be
-    normalized for host speed mechanically (r6's ~1.4x-slower-host
-    adjudication was manual archaeology; VERDICT r6 #8). The kernel mixes
-    a BLAS-threaded matmul and single-core sha256 over fixed-seed data —
-    deterministic work, min-of-N wall time. It measures the HOST, not
-    Spark: no session, no data dependence, ~0.3 s."""
-    import hashlib
-
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    a = rng.rand(512, 512)
-    buf = rng.bytes(32 * 1024 * 1024)
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        m = a
-        for _ in range(48):
-            m = m @ a
-            m /= m[0, 0]  # renormalize: keeps 48 chained matmuls finite
-        h = hashlib.sha256()
-        for _ in range(6):
-            h.update(buf)
-        h.digest()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def _timings_from_tail(tail: str) -> dict[str, float]:
-    """Reconstruct per-query timings from a driver artifact's ``tail``
-    string (truncated raw stdout). The tail survives truncation from the
-    END, so the ``queries`` dict — printed early in the JSON line — is the
-    part most likely present. We extract every flat ``"name": number``
-    pair; lookups are restricted to the caller's current query names, so
-    numeric keys from nested blocks (``sec``, ``input_mb``...) are inert."""
-    import re
-
-    out: dict[str, float] = {}
-    for m in re.finditer(r'"([A-Za-z0-9_]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)', tail):
-        # first occurrence wins: a query name appears once in the queries
-        # dict; later duplicates would come from unrelated nested blocks
-        out.setdefault(m.group(1), float(m.group(2)))
-    return out
-
-
-def _round_artifact_timings(
-    repo_dir: str,
-) -> tuple[dict, str, float | None, dict]:
-    """Timings (+ calibration, when present) from the newest
-    ``BENCH_r{N}.json`` driver artifact — its ``queries`` dict when the
-    driver parsed the stdout line, else reconstructed from the ``tail``
-    string (driver artifacts r4/r5 carry ``"parsed": null`` and a
-    truncated tail, which is why ``doc.get("parsed", {})`` alone fails
-    open — the key EXISTS with value None, so ``.get`` on it raises
-    AttributeError). Returns ({}, "none", None, {}) when nothing usable.
-    The 4th element is baseline meta: ``calib_kind`` ("min_pair" when the
-    baseline's calibration is the r9+ min(pre, post) sandwich, "single"
-    when it is a lone pre-r9 end-of-run sample — ADVICE r9: compare
-    like-for-like) and ``trials`` (per-query raw trial lists, when the
-    baseline carries them)."""
+def _baseline(repo_dir: str, bench_dir: str, sf, cores: int) -> tuple[dict, str]:
+    """The prior run the guard compares to, and its label: this host's last
+    full run at the same core count and scale, else the newest driver
+    artifact measured at the same ``cpus`` and ``sf`` whose contract line
+    parsed. A round number alone does not pick an artifact: BENCH_r12.json
+    (32 cores) and BENCH_r12_c8.json (8 cores) share one."""
     import glob
     import re
 
-    prior_files = sorted(
-        glob.glob(os.path.join(repo_dir, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-    )
-    if not prior_files:
-        return {}, "none", None, {}
-    try:
-        with open(prior_files[-1], encoding="utf-8") as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        return {}, "none", None, {}
-    parsed = doc.get("parsed") or {}
-    tail = str(doc.get("tail") or "")
-    prev = (
-        doc.get("queries")
-        or parsed.get("queries")
-        or _timings_from_tail(tail)
-        or {}
-    )
-    calib = (
-        doc.get("host_calib_sec")
-        or parsed.get("host_calib_sec")
-        # the tail fallback surfaces flat "host_calib_sec": N pairs too
-        or prev.get("host_calib_sec")
-    )
-    prev.pop("host_calib_sec", None)
-    meta = {
-        # r9+ artifacts carry host_calib_samples alongside the min; its
-        # presence (even in a truncated tail) marks the sandwich kind
-        "calib_kind": (
-            "min_pair"
-            if (
-                doc.get("host_calib_samples")
-                or parsed.get("host_calib_samples")
-                or '"host_calib_samples"' in tail
-            )
-            else "single"
-        ),
-        "trials": doc.get("served_trials") or parsed.get("served_trials") or {},
-    }
-    return prev, os.path.basename(prior_files[-1]), calib, meta
-
-
-def _previous_timings(
-    repo_dir: str, bench_dir: str
-) -> tuple[dict, str, float | None, dict]:
-    """PRIMARY baseline for the regression guard, by reliability:
-    1. ``.bench/last_full.json`` — this builder's own prior full run
-       (complete, untruncated; written by every full-sf main() run);
-    2. the newest driver artifact (see _round_artifact_timings).
-    Returns (timings, source_label, host_calib_sec|None, meta) — meta as
-    in _round_artifact_timings."""
-    own = os.path.join(bench_dir, "last_full.json")
+    own = os.path.join(bench_dir, _last_full_name(sf, cores))
     if os.path.isfile(own):
-        try:
-            with open(own, encoding="utf-8") as fh:
-                doc = json.load(fh)
-            prev = doc.get("queries") or {}
-            if prev:
-                meta = {
-                    "calib_kind": (
-                        "min_pair" if doc.get("host_calib_samples") else "single"
-                    ),
-                    "trials": doc.get("served_trials") or {},
-                }
-                return prev, "last_full.json", doc.get("host_calib_sec"), meta
-        except (OSError, ValueError):
-            pass
-    return _round_artifact_timings(repo_dir)
+        with open(own, encoding="utf-8") as fh:
+            return json.load(fh), os.path.basename(own)
+    best: tuple[int, dict, str] | None = None
+    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
+        with open(path, encoding="utf-8") as fh:
+            doc = json.load(fh)
+        parsed = doc.get("parsed") or {}
+        n = int(re.search(r"BENCH_r(\d+)", path).group(1))
+        if doc.get("cpus") == cores and doc.get("sf") == sf and parsed.get("queries"):
+            if best is None or n > best[0]:
+                best = (n, parsed, os.path.basename(path))
+    return (best[1], best[2]) if best else ({}, "none")
 
 
-def _flag_slowdowns(
-    timings: dict[str, float],
-    prev: dict,
-    host_factor: float | None,
-    prev_trials: dict | None = None,
-) -> tuple[dict, int, dict]:
-    """Flag >1.5x slowdowns of ``timings`` vs ``prev``. ``host_factor`` is
-    cur_calib/prev_calib when both runs carried a calibration kernel time:
-    each flag then also records ``host_adj_ratio`` (raw ratio divided by
-    the host factor), and a slowdown is flagged when EITHER ratio exceeds
-    1.5 — the adjusted one catches a real regression a faster host would
-    mask.
-
-    Noise absorption (VERDICT r9 #2 — back-to-back runs on a noisy host
-    must not need human adjudication): a would-be flag moves to the third
-    returned dict (absorbed) instead of the first (counted flags) when the
-    artifact itself explains it as noise —
-
-    - ``host_adjusted_clean``: calibration exists on both sides and the
-      host-adjusted ratio is <=1.5 (uniform host load, not a plan change);
-    - ``within_prev_trial_spread``: the baseline recorded raw trials for
-      this query and the current min lies inside the baseline's own trial
-      range (+5%) — the "regression" is the baseline having gotten a lucky
-      min, not this run getting slower.
-
-    A real plan regression survives both tests: it moves EVERY trial past
-    the baseline's worst trial, and no host factor explains it."""
-    flags: dict = {}
-    absorbed: dict = {}
-    compared = 0
-    for name, cur in timings.items():
-        p = prev.get(name)
-        if p and p > 0:
-            compared += 1
-            ratio = cur / p
-            adj = ratio / host_factor if host_factor else None
-            if ratio > 1.5 or (adj is not None and adj > 1.5):
-                rec = {"prev": p, "cur": cur, "ratio": round(ratio, 2)}
-                if adj is not None:
-                    rec["host_adj_ratio"] = round(adj, 2)
-                if name in ACCEPTED_REGRESSIONS:
-                    rec["accepted"] = ACCEPTED_REGRESSIONS[name]
-                p_trials = [
-                    t for t in (prev_trials or {}).get(name) or [] if t > 0
-                ]
-                if adj is not None and adj <= 1.5:
-                    rec["absorbed"] = "host_adjusted_clean"
-                    absorbed[name] = rec
-                elif (
-                    p_trials
-                    and cur <= max(p_trials) * 1.05
-                    # guard against pre-fix baselines whose recorded min was
-                    # recheck-folded BELOW its trials (ADVICE r10): trials
-                    # inconsistent with the recorded min mean the spread is
-                    # burst-inflated — do not absorb against it
-                    and p >= min(p_trials)
-                ):
-                    rec["absorbed"] = "within_prev_trial_spread"
-                    absorbed[name] = rec
-                else:
-                    flags[name] = rec
-    return flags, compared, absorbed
+def _last_full_name(sf, cores: int) -> str:
+    return f"last_full.c{cores}.json" if sf == 0.1 else f"last_full.sf{sf}.c{cores}.json"
 
 
 def regressions_vs_previous(
     timings: dict[str, float],
+    layers: dict[str, dict],
+    sf,
+    cores: int,
     repo_dir: str = REPO,
     bench_dir: str = BENCH_DIR,
-    host_calib_sec: float | None = None,
-    host_calib_samples: dict | None = None,
 ) -> dict:
-    """Per-query regression guard: compare this run to the best available
-    prior run (see _previous_timings) on the common query set and flag
-    >1.5x slowdowns — so a methodology-vs-regression question is answered
-    by the artifact itself, not by archaeology. The result always carries
-    a ``_baseline`` key naming the comparison source, so an empty flag set
-    is distinguishable from a guard that had nothing to compare against
-    (the r5 fail-open: parsed:null made {} the only possible output).
+    """Compare this run to the prior one (see _baseline) and flag, per entry:
 
-    Two anti-creep mechanisms (ADVICE r6 / VERDICT r6 #8):
+    - ``counters_moved``: its jobs or stages differ from a baseline that has
+      a ledger row for it — a plan change, whatever the wall clock says;
+    - a >1.5x wall ``ratio``; the flag records whether the counters moved,
+      and ``wall_only`` marks one whose counters held (host noise, or a cost
+      the counters do not see). ``counters_moved`` is None when the
+      baseline has no ledger row to compare.
 
-    - ``_round_anchor``: when the primary baseline is the builder's own
-      ``last_full.json``, ratios vs the newest DRIVER artifact are
-      recorded alongside — the primary otherwise ratchets (each run
-      overwrites it, so a <=1.5x-per-run creep compounds invisibly
-      across rounds; the round artifact is the fixed anchor).
-    - host calibration: when both runs carry ``host_calib_sec``, each
-      flag records a host-speed-adjusted ratio and flagging considers
-      both (a slower host no longer reads as a uniform regression, and a
-      faster host no longer masks one)."""
-    prev, source, prev_calib, meta = _previous_timings(repo_dir, bench_dir)
-
-    def _cur_calib(baseline_meta: dict) -> float | None:
-        # like-for-like (ADVICE r9): a pre-r9 baseline's calibration is one
-        # end-of-run sample — compare it to THIS run's post sample, not the
-        # min(pre, post) sandwich, else host_factor is biased low
-        if (
-            baseline_meta.get("calib_kind") == "single"
-            and host_calib_samples
-            and host_calib_samples.get("post")
-        ):
-            return host_calib_samples["post"]
-        return host_calib_sec
-
-    cur_calib = _cur_calib(meta)
-    host_factor = cur_calib / prev_calib if cur_calib and prev_calib else None
-    flags, compared, absorbed = _flag_slowdowns(
-        timings, prev, host_factor, prev_trials=meta.get("trials")
-    )
-    out: dict = {"_baseline": source, "_compared": compared, **flags}
-    if absorbed:
-        out["_noise_absorbed"] = absorbed
-    if host_factor is not None:
-        out["_host_factor"] = round(host_factor, 3)
-    if source == "last_full.json":
-        a_prev, a_source, a_calib, a_meta = _round_artifact_timings(repo_dir)
-        if a_prev:
-            a_cur_calib = _cur_calib(a_meta)
-            a_factor = (
-                a_cur_calib / a_calib if a_cur_calib and a_calib else None
-            )
-            a_flags, a_compared, a_absorbed = _flag_slowdowns(
-                timings, a_prev, a_factor, prev_trials=a_meta.get("trials")
-            )
-            out["_round_anchor"] = {
-                "source": a_source,
-                "compared": a_compared,
-                "flags": a_flags,
+    Nothing is absorbed or re-measured: the artifact carries every flag with
+    the counters that explain it."""
+    prev, source = _baseline(repo_dir, bench_dir, sf, cores)
+    prev_t, prev_l = prev.get("queries") or {}, prev.get("layers") or {}
+    out: dict = {"_baseline": source, "_compared": 0}
+    for name in sorted(set(timings) | set(layers)):
+        moved = None
+        if name in prev_l and name in layers:
+            moved = {
+                k: [prev_l[name][k], layers[name][k]]
+                for k in ("jobs", "stages")
+                if prev_l[name][k] != layers[name][k]
             }
-            if a_absorbed:
-                out["_round_anchor"]["noise_absorbed"] = a_absorbed
-            if a_factor is not None:
-                out["_round_anchor"]["host_factor"] = round(a_factor, 3)
+        p, cur = prev_t.get(name), timings.get(name)
+        ratio = cur / p if p and cur is not None else None
+        out["_compared"] += ratio is not None
+        if not moved and not (ratio and ratio > 1.5):
+            continue
+        rec: dict = {"counters_moved": moved}
+        if ratio is not None:
+            rec.update(prev=p, cur=cur, ratio=round(ratio, 2))
+            rec["wall_only"] = moved == {}
+        out[name] = rec
     return out
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # calibration sample BEFORE any Spark work: a straggling JVM thread
-    # (stream cleanup, GC) can inflate the end-of-run sample — a poisoned
-    # calib in last_full.json then mis-adjusts EVERY next-run ratio (one
-    # r9 run recorded 1.37 vs the true ~0.28 and produced 67 false
-    # host-adjusted flags). The artifact keeps min(pre, post) plus both
-    # samples so an anomaly is visible instead of silently absorbed.
-    calib_pre = host_calibration()
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = get_spark(app_name="jse-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -1094,8 +877,8 @@ def main() -> None:
     # by >1.3x — see timed_min): first-trial numbers fold in per-plan
     # codegen compile and page-cache state; the min is the reproducible
     # figure (standard steady-state practice; every trial runs the full
-    # plan). Raw trials land in the artifact's served_trials so a flagged
-    # slowdown is adjudicable from the artifact alone.
+    # plan). Raw trials land in the artifact's served_trials and each
+    # entry's counters in its layers row.
     # cold-trial accounting (VERDICT r11 #1/#3): each trial starts with the
     # query's scoped-cache generation RELEASED, so every trial pays the full
     # cold plan (persist fills included) and the recorded min is the honest
@@ -1111,7 +894,7 @@ def main() -> None:
     for name in HEADLINE:
         timings[name] = timed_min(
             name,
-            lambda n=name: force(QUERIES[n](spark, sf_dir)),
+            lambda n=name: QUERIES[n](spark, sf_dir),
             pre=lambda n=name: release_query_caches(n),
         )
         if release_query_caches(name):
@@ -1153,6 +936,11 @@ def main() -> None:
     scaled_10gb = bench_preprocess_scaled(spark, target_mb=10_000, tag="_10gb", runs=2)
 
     total = round(sum(timings.values()), 3)
+    totals = {
+        "jobs": sum(r["jobs"] for r in LAYERS.values()),
+        "stages": sum(r["stages"] for r in LAYERS.values()),
+        "shuffle_mb": round(sum(r["shuffle_mb"] for r in LAYERS.values()), 3),
+    }
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "?"
     doc = {
         "metric": "headline query wall time (sum)",
@@ -1167,95 +955,29 @@ def main() -> None:
         "preprocess_skewed": skewed,
         "preprocess_scaled_10gb": scaled_10gb,
         "bucketed_layout": bucketed_layout,
-        # raw per-trial served timings: lets a flagged regression be
-        # adjudicated as noise (trial spread) vs plan change from the
-        # artifact alone (r4 recorded three phantom regressions from
-        # single-shot served timings)
         "served_trials": SERVED_TRIALS,
+        "layers": LAYERS,
+        **totals,
         # the warm-capable set (VERDICT r11 #3): these queries registered
         # persists in their cache generation, which the cold-trial accounting
         # releases between trials — their recorded numbers are honest COLD
         # costs; a steady-state same-sf rerun (caches warm) is cheaper.
         "scoped_cache_queries": warm_capable,
     }
-    calib_post = host_calibration()
-    doc["host_calib_sec"] = min(calib_pre, calib_post)
-    doc["host_calib_samples"] = {"pre": calib_pre, "post": calib_post}
-    guard_kw = dict(
-        host_calib_sec=doc["host_calib_sec"],
-        host_calib_samples=doc["host_calib_samples"],
-    )
-    doc["regressions"] = regressions_vs_previous(timings, **guard_kw)
-    # Flag RECHECK (VERDICT r9 #2): a noisy-neighbor burst inflates a
-    # query's trials for as long as the burst lasts — trial escalation and
-    # calibration can both miss it (the 1-thread calib kernel barely slows
-    # under multi-core contention). So flags are re-MEASURED here, minutes
-    # after the original run: re-run each flagged entry's exact thunk
-    # (min-of-2 more trials, appended to the artifact's raw trials), fold
-    # the new min into the timing, and recompute the guard. A passed burst
-    # clears with a true quiet measurement; a real plan regression
-    # reproduces and keeps its flag. Evidence, not thresholds.
-    flagged = [
-        k for k in doc["regressions"] if not k.startswith("_") and k in RERUN
-    ]
-    if flagged:
-        rechecked = []
-        recheck_trials: dict[str, list[float]] = {}
-        for name in flagged:
-            fn = RERUN[name]
-            rts = []
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn()
-                    rts.append(round(time.perf_counter() - t0, 3))
-            except Exception:
-                # thunk needs run-scoped context — keep the original
-                # flag, trials tell why
-                continue
-            # recheck trials are recorded under their own key for the
-            # adjudicator AND replace this entry's served_trials (ADVICE
-            # r10 medium): keeping the burst-inflated originals as the
-            # recorded spread would let the NEXT run's
-            # within_prev_trial_spread absorption silently swallow a real
-            # regression up to the burst magnitude (absorbed flags are
-            # never rechecked). The folded min is prepended when it beats
-            # the recheck trials so min(served_trials) always equals the
-            # recorded timing.
-            recheck_trials[name] = rts
-            timings[name] = min(timings[name], *rts)
-            SERVED_TRIALS[name] = (
-                [timings[name]] + rts if timings[name] < min(rts) else list(rts)
-            )
-            rechecked.append(name)
-        doc["recheck_trials"] = recheck_trials
-        total = round(sum(timings.values()), 3)
-        doc["value"] = total
-        doc["queries"] = timings
-        doc["regressions"] = regressions_vs_previous(timings, **guard_kw)
-        doc["regressions"]["_rechecked"] = rechecked
-    # Persist the complete artifact as the next run's primary regression
-    # baseline: driver BENCH_r{N}.json files truncate stdout into ``tail``
-    # with ``parsed: null``, so the builder's own full JSON is the only
-    # guaranteed-complete comparison base. Written only for full sf0.1
-    # runs — a quick sf0.01 iteration must not poison the baseline.
-    if doc["sf"] == 0.1:
-        os.makedirs(BENCH_DIR, exist_ok=True)
-        with open(
-            os.path.join(BENCH_DIR, "last_full.json"), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(doc, fh)
+    doc["regressions"] = regressions_vs_previous(timings, LAYERS, doc["sf"], cores)
+    # the complete artifact is the next run's baseline at this core count
+    # and scale (driver artifacts keep only the contract line)
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    full = os.path.join(BENCH_DIR, _last_full_name(doc["sf"], cores))
+    with open(full, "w", encoding="utf-8") as fh:
+        json.dump(doc, fh)
     # The driver's BENCH artifact keeps only a bounded stdout TAIL (r1-r8:
     # "parsed": null because the single full-doc line overflows it), so emit
     # a COMPACT totals line first (VERDICT r8 #7) and again LAST — whichever
     # end a bounded capture keeps, it contains one complete parseable JSON
     # line with the headline numbers. The full doc stays on its own line and
-    # in .bench/last_full.json.
-    flags = {
-        k: v
-        for k, v in doc["regressions"].items()
-        if not k.startswith("_")
-    }
+    # in .bench/last_full*.json.
+    flags = {k: v for k, v in doc["regressions"].items() if not k.startswith("_")}
     summary = {
         "metric": doc["metric"],
         "value": total,
@@ -1274,17 +996,14 @@ def main() -> None:
         "preprocess_mb_per_sec": scaled["mb_per_sec"],
         "preprocess_10gb_mb_per_sec": scaled_10gb["mb_per_sec"],
         "streaming_mb_per_sec": streaming_ingest["mb_per_sec"],
-        # keys deliberately NOT registry query names: _timings_from_tail
-        # extracts flat "name": number pairs first-occurrence-wins from a
-        # truncated tail, and a ratio under a real query name would poison
-        # a tail-reconstructed regression baseline
+        **totals,
         "bucketed_speedup": {
             q.replace("ext_tpch_", "") + "_speedup": bucketed_layout[q]["speedup"]
             for q in ("ext_tpch_q18", "ext_tpch_q21")
         },
         "regression_flags": len(flags),
-        "host_calib_sec": doc["host_calib_sec"],
-        "full_artifact": ".bench/last_full.json",
+        "counters_moved": sum(bool(f["counters_moved"]) for f in flags.values()),
+        "full_artifact": os.path.relpath(full, REPO),
     }
     print(json.dumps(summary))
     print(json.dumps(doc))

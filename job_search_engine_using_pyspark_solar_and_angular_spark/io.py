@@ -38,16 +38,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # parquet on every action — only the SCHEMA resolution is reused.
 # Keyed on (path, mtime_ns) (ADVICE r11): a fixture regenerated in-process at
 # the same path with a different schema misses the cache instead of
-# silently reading with the stale pinned schema. The mtime probe is one
-# os.stat — noise next to the ~70 ms footer read it avoids; stale
-# (path, old_mtime) entries are dropped on sight so the dict stays one
-# entry per live path.
+# silently reading with the stale pinned schema. The mtime is the newest of
+# the path and every file under it: a part file rewritten in place changes
+# its own mtime, not its directory's. Stale (path, old_mtime) entries are
+# dropped on sight so the dict stays one entry per live path.
 _SCHEMA_CACHE: dict[str, tuple[int, "object"]] = {}
 
 
 def _pinned_schema(spark: SparkSession, path: str):
     try:
-        mtime = os.stat(path).st_mtime_ns
+        files = (os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+        mtime = max(os.stat(p).st_mtime_ns for p in (path, *files))
     except OSError:
         # path missing/unstatable: let spark.read raise its own error
         return spark.read.parquet(path).schema

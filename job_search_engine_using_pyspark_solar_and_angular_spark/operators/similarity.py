@@ -741,7 +741,7 @@ def quantize_int8_corpus(
 # finer sub-quantizers) ksub=32 is strictly better, lifting rerank
 # recall@5 to 1.00 / 0.95 / 0.90 mean at sf0.001/0.01/0.1 (query-0 leg,
 # the ladder's gate: 1.0 / 1.0 / 0.8) vs 0.75 / 0.75 / 0.65 for the r5
-# (m=8, ksub=16) point. Costs, annotated in bench ACCEPTED_REGRESSIONS:
+# (m=8, ksub=16) point. Costs (r6, recorded in CHANGES.md):
 # encode work x4 (corpus x m x ksub sub-distances), ADC serving does m=16
 # lookups per candidate instead of 8, per-vector code is 16 bytes instead
 # of 8 — still 32x smaller than the float64 row. PQ_SHORTLIST stays 100:

@@ -68,6 +68,7 @@ from __future__ import annotations
 import os
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,7 +141,8 @@ def serve_batch(
 ) -> dict:
     """One micro-batch of the serve loop (the foreachBatch body of
     :func:`serve_loop_sink`, exposed so crash-retry semantics are directly
-    testable). Returns {"seg", "arrived", "suppressed", "indexed"}.
+    testable). Returns {"seg", "arrived", "suppressed", "indexed",
+    "segments"}, ``segments`` being the committed manifest's length.
 
     ``batch`` must carry one row per ``id_col`` (upstream latest-wins); a
     row whose id already exists in the corpus is a replace-by-id update.
@@ -152,7 +154,7 @@ def serve_batch(
     ``batch_id`` makes redelivery exactly-once: the id is recorded IN the
     manifest row (one atomic commit — there is no window where the segment
     is published but its batch_id is not), and a batch whose id is already
-    <= the manifest's high-water mark returns ``{"skipped": True}``
+    <= the manifest's high-water mark returns ``{"skipped": True, ...}``
     untouched. This guard is what makes POST-publish redelivery safe:
     re-running an already-published batch would re-gate it against the
     post-batch corpus — e.g. a batch that both replaced doc X and carried a
@@ -180,7 +182,8 @@ def serve_batch(
             default=None,
         )
         if applied is not None and applied >= batch_id:
-            return {"skipped": True, "batch_id": batch_id, "applied": applied}
+            return {"skipped": True, "batch_id": batch_id, "applied": applied,
+                    "segments": len(man_rows)}
     prior_segs = [r["seg"] for r in man_rows]
     seg = 1 if not prior_segs else 1 + prior_segs[-1]
     max_committed = prior_segs[-1] if prior_segs else 0
@@ -371,15 +374,12 @@ def serve_batch(
                 # wait for the postings/vector WRITES to finish, not just
                 # the caches — a barrier that added a full write's latency
                 # per batch for no correctness gain (the crash sweep pins
-                # retry convergence for every completion order).
-                for f in [
-                    ex.submit(_write_postings),
-                    ex.submit(_write_lsh),
-                    ex.submit(_write_vectors),
-                    ex.submit(_write_doc_stats),
-                    ex.submit(_write_scalar),
-                    ex.submit(_commit_tombstones),
-                ]:
+                # retry convergence for every completion order). Writers
+                # inherit the caller's job group, so their jobs count there.
+                writers = (_write_postings, _write_lsh, _write_vectors,
+                           _write_doc_stats, _write_scalar, _commit_tombstones)
+                inherit = inheritable_thread_target(spark)
+                for f in [ex.submit(inherit(w)) for w in writers]:
                     f.result()
         else:
             _write_postings()
@@ -406,11 +406,10 @@ def serve_batch(
         # Single-writer contract (foreachBatch is sequential) makes the
         # entry-time snapshot authoritative.
         prior = [(r["seg"], r["batch_id"]) for r in man_rows]
-        man_new = spark.createDataFrame(
-            list(dict.fromkeys(prior + [(seg, batch_id)])), SCHEMAS["manifest"]
-        )
+        man_new = list(dict.fromkeys(prior + [(seg, batch_id)]))
+        man_df = spark.createDataFrame(man_new, SCHEMAS["manifest"])
         _fp("pre_publish")
-        commit_state(man_new, p["manifest"])
+        commit_state(man_df, p["manifest"])
         _fp("published")
 
         n_arrived = batch.count()
@@ -420,6 +419,7 @@ def serve_batch(
             "arrived": n_arrived,
             "suppressed": n_arrived - n_indexed,
             "indexed": n_indexed,
+            "segments": len(man_new),
         }
 
 
@@ -786,16 +786,15 @@ def serve_loop_sink(
         # batch_id threads into the manifest commit: a redelivered batch
         # (at-least-once foreachBatch) whose publish already succeeded is
         # skipped instead of re-gated against the post-batch corpus
-        serve_batch(spark, batch, base, table_prefix, batch_id=batch_id, **serve_kwargs)
-        if auto_compact_max_segments is not None:
-            man = _state(spark, _paths(base), "manifest")
-            if man is not None and man.count() >= auto_compact_max_segments:
-                compact_segments(
-                    spark,
-                    base,
-                    table_prefix,
-                    postings_buckets=serve_kwargs.get("postings_buckets", 16),
-                )
+        s = serve_batch(spark, batch, base, table_prefix, batch_id=batch_id, **serve_kwargs)
+        cap = auto_compact_max_segments
+        if cap is not None and s["segments"] >= cap:
+            compact_segments(
+                spark,
+                base,
+                table_prefix,
+                postings_buckets=serve_kwargs.get("postings_buckets", 16),
+            )
 
     writer = stream_df.writeStream.foreachBatch(_body).option(
         "checkpointLocation", checkpoint

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
+from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
     SearchService,
     serve,
@@ -515,13 +516,7 @@ def test_served_keyword_request_job_count(spark, tmp_path):
     ran 12."""
     svc = _served_two_phase(spark, tmp_path)
     svc.query("kafka stream")  # warm: the same jobs, first-call planning
-    sc = spark.sparkContext
-    group = "pin-served-keyword-" + tmp_path.name
-    sc.setJobGroup(group, "one served keyword request")
-    try:
+    with profiled("one served keyword request") as led:
         body = svc.query("kafka stream")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert body["count"] == 3 and body["data"][0]["user"] is not None
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    assert led.jobs == 6

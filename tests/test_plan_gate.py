@@ -1,4 +1,5 @@
-"""Suite gate over the declared set's physical-plan fingerprints.
+"""Suite gates over the declared set's physical-plan fingerprints and the
+HEADLINE queries' cost ledger.
 
 tools/plan_fingerprints.py's per-round sweep is report-only; this test is
 the FAILING guard VERDICT r6 asked for: it recomputes the declared set's
@@ -13,6 +14,12 @@ plan changes regenerate the baseline deliberately:
 The planted-degradation test proves the gate actually fires: it re-plans a
 broadcast-reliant declared query under autoBroadcastJoinThreshold=-1 (the
 exact silent-degradation scenario) and requires gate_violations to flag it.
+
+The ledger gate pins each HEADLINE query's cold job and stage counts
+(tests/ledger_baseline_declared.json, written by the same command). Those
+counts are deterministic for a fixed plan and fixed data, so the gate is
+two-sided like a snapshot: one job more or one job fewer fails until the
+baseline is regenerated on purpose.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from .conftest import SF_DIR  # noqa: E402
+from .conftest import SF_DIR, persisted_rdd_ids  # noqa: E402
 
 import plan_fingerprints as pfp  # noqa: E402
 
@@ -112,3 +119,59 @@ def test_gate_flags_always_bad_and_missing():
     v = pfp.gate_violations(fps, base)
     assert v["qx"] == {"CartesianProduct": 1}
     assert v["qy"] == {"missing": True}
+
+
+def _ledger_baseline() -> dict:
+    with open(pfp.LEDGER_BASELINE, encoding="utf-8") as fh:
+        doc = json.load(fh)
+    if doc["sf_tag"] != os.path.basename(SF_DIR.rstrip("/")):
+        pytest.skip(f"ledger baseline generated at {doc['sf_tag']}, suite at {SF_DIR}")
+    return doc
+
+
+def _ledger_diff(got: dict, want: dict) -> dict:
+    """{query: {counter: [baseline, now]}} for every pinned counter that
+    differs, in either direction."""
+    diff = {
+        q: {k: [v, got[q][k]] for k, v in row.items() if got[q][k] != v}
+        for q, row in want.items()
+    }
+    return {q: d for q, d in diff.items() if d}
+
+
+def test_headline_ledger_holds_committed_baseline(spark):
+    from bench import HEADLINE
+
+    doc = _ledger_baseline()
+    assert set(HEADLINE) == set(doc["ledger"]), (
+        "HEADLINE changed — regenerate the baseline: "
+        "python tools/plan_fingerprints.py --write-baseline"
+    )
+    before = persisted_rdd_ids(spark)
+    got = pfp.compute_ledger(spark, QUERIES, HEADLINE, SF_DIR)
+    assert not persisted_rdd_ids(spark) - before
+    diff = _ledger_diff(got, doc["ledger"])
+    assert diff == {}, (
+        f"cost ledger moved vs committed baseline: {diff} — if the change is "
+        "deliberate, regenerate via python tools/plan_fingerprints.py --write-baseline"
+    )
+
+
+def test_ledger_gate_fires_on_planted_count(spark):
+    """Prove the ledger gate sees one hidden action: the same query with one
+    extra ``.count()`` while its DataFrame is built must differ from the
+    baseline in build_jobs and jobs."""
+    name = "ext_tpch_q6"
+    want = {name: _ledger_baseline()["ledger"][name]}
+
+    def planted(spark, sf_dir):
+        df = QUERIES[name](spark, sf_dir)
+        df.count()
+        return df
+
+    before = persisted_rdd_ids(spark)
+    got = pfp.compute_ledger(spark, {name: planted}, [name], SF_DIR)
+    assert not persisted_rdd_ids(spark) - before
+    diff = _ledger_diff(got, want)
+    assert diff[name]["build_jobs"][1] > diff[name]["build_jobs"][0], diff
+    assert diff[name]["jobs"][1] > diff[name]["jobs"][0], diff

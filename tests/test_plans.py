@@ -10,6 +10,7 @@ import re
 
 import pytest
 
+from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.queries import extensions  # noqa: F401
 from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import QUERIES
 
@@ -198,18 +199,13 @@ def test_ann_operators_build_lazily(spark):
         similarity,
     )
 
-    sc = spark.sparkContext
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    sc.setJobGroup("lazy-check", "ann construction")
-    try:
+    with profiled("ann construction") as led:
         similarity.ivf_topk_df(emb, q, k=5, nprobe=4, exclude_ids=[0])
         similarity.embedding_near_dups(emb, threshold=0.9)
         similarity.lsh_bucket(emb)
-    finally:
-        sc.setJobGroup("default", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("lazy-check")
-    assert not jobs, f"ANN construction ran jobs: {jobs}"
+    assert led.jobs == 0, f"ANN construction ran {led.jobs} jobs"
 
 
 def test_paginate_no_single_partition_window(spark):

@@ -12,6 +12,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.search import serve_loop
 from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
     bm25_search,
@@ -62,7 +63,7 @@ def served(spark, tmp_path):
     base = str(tmp_path / "serving")
     prefix = _prefix(tmp_path)
     s1 = _serve(spark, _df(spark, DOCS), base, prefix)
-    assert s1 == {"seg": 1, "arrived": 6, "suppressed": 0, "indexed": 6}
+    assert s1 == {"seg": 1, "arrived": 6, "suppressed": 0, "indexed": 6, "segments": 1}
     return base, prefix
 
 
@@ -71,7 +72,7 @@ def test_batch_with_near_dup_gated_and_served(spark, served, tmp_path):
     new_doc = (100, "adaptive query execution replans stages from runtime statistics")
     dup_doc = (101, DOCS[0][1])  # near-dup arrival of doc 1 (identical text)
     s2 = _serve(spark, _df(spark, [new_doc, dup_doc]), base, prefix)
-    assert s2 == {"seg": 2, "arrived": 2, "suppressed": 1, "indexed": 1}
+    assert s2 == {"seg": 2, "arrived": 2, "suppressed": 1, "indexed": 1, "segments": 2}
 
     idx = serve_loop.read_served_index(spark, base)
     hits = _bm25_rows(spark, idx, ["adaptive", "replans"])
@@ -222,16 +223,35 @@ def test_read_served_index_job_count(spark, served):
     base, prefix = served
     _serve(spark, _df(spark, [(1, "kubernetes schedules containers onto nodes")]), base, prefix)
     serve_loop.read_served_index(spark, base)  # warm: the same jobs
-    sc = spark.sparkContext
-    group = "pin-read-served-index-" + prefix
-    sc.setJobGroup(group, "resolve one served snapshot")
-    try:
+    with profiled("resolve one served snapshot") as led:
         idx = serve_loop.read_served_index(spark, base)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert idx.corpus_values[0] == len(DOCS)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert led.jobs == 3
+
+
+def test_delta_serve_batch_job_count(spark, served):
+    """The ledger of one delta batch (a new doc, a near-dup and a
+    replace-by-id) holds every job the batch submits: the six parallel
+    segment writers inherit the caller's job group. The total itself is not
+    fixed — the writers race to fill the persisted inputs they share, and
+    whichever fills one first changes how many jobs the others submit
+    (35-38 here) — so the pin is that none escapes: the group's count equals
+    the scheduler's job-id delta. Counting only the main thread's jobs left
+    19 of them in the group."""
+    base, prefix = served
+    batch = _df(spark, [
+        (100, "adaptive query execution replans stages from runtime statistics"),
+        (101, DOCS[0][1]),
+        (1, "kubernetes schedules containers onto nodes"),
+    ])
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before, first_job = persisted_rdd_ids(spark), scheduler.nextJobId()
+    with profiled("one delta serve batch") as led:
+        s = _serve(spark, batch, base, prefix)
+    assert not persisted_rdd_ids(spark) - before
+    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2, "segments": 2}
+    assert led.jobs == scheduler.nextJobId() - first_job
+    assert led.jobs > 19
 
 
 def test_crash_before_manifest_publish_retry_converges(spark, tmp_path):
@@ -404,7 +424,7 @@ def test_delta_segments_are_batch_sized(spark, served):
                     (101, DOCS[0][1])]),
         base, prefix,
     )
-    assert s == {"seg": 2, "arrived": 2, "suppressed": 1, "indexed": 1}
+    assert s == {"seg": 2, "arrived": 2, "suppressed": 1, "indexed": 1, "segments": 2}
     stats2 = spark.read.parquet(f"{base}/doc_stats/seg2")
     assert [r["doc_id"] for r in stats2.collect()] == [100]
     lsh2 = spark.read.parquet(f"{base}/lsh_buckets/seg2")
@@ -545,7 +565,7 @@ def crash_ref(spark, tmp_path_factory):
         spark, _df(spark, B2), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=1,
     )
-    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2}
+    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2, "segments": 2}
     fp = _served_fingerprint(spark, base)
     # doc 1's old text is fully replaced: its signature term matches nothing
     assert fp["bm25"]["shuffles"] == []
@@ -582,9 +602,11 @@ def test_crash_sweep_every_failpoint_converges(spark, tmp_path, crash_ref, label
         # retry must NOT re-apply (re-gating against the post-batch corpus
         # would admit doc 101 — its corpus twin's old text is tombstoned by
         # now); the batch_id high-water mark in the manifest skips it
-        assert s == {"skipped": True, "batch_id": 1, "applied": 1}
+        assert s == {"skipped": True, "batch_id": 1, "applied": 1, "segments": 2}
     else:
-        assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2}
+        assert s == {
+            "seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2, "segments": 2
+        }
     assert _served_fingerprint(spark, base) == crash_ref
 
 
@@ -606,7 +628,8 @@ def test_redelivery_guard_survives_compaction(spark, tmp_path, crash_ref):
         spark, _df(spark, B2), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=1,
     )
-    assert s == {"skipped": True, "batch_id": 1, "applied": 1}
+    # the fold left one segment, and the skip reports that manifest
+    assert s == {"skipped": True, "batch_id": 1, "applied": 1, "segments": 1}
     assert _served_fingerprint(spark, base) == crash_ref
 
 
@@ -627,7 +650,7 @@ def test_parallel_writes_equal_sequential(spark, tmp_path, crash_ref):
         spark, _df(spark, B2), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=1, failpoint=noop,
     )
-    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2}
+    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2, "segments": 2}
     assert _served_fingerprint(spark, base) == crash_ref
 
 
@@ -727,5 +750,5 @@ def test_parallel_wave1_write_failure_retry_converges(spark, tmp_path, crash_ref
         spark, _df(spark, B2), base, prefix,
         vec_col="embedding", postings_buckets=4, batch_id=1,
     )
-    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2}
+    assert s == {"seg": 2, "arrived": 3, "suppressed": 1, "indexed": 2, "segments": 2}
     assert _served_fingerprint(spark, base) == crash_ref

@@ -4,6 +4,7 @@ scan) and the catalog/DDL surface (R5), plus skew-salting (two-phase agg)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -505,3 +506,27 @@ def test_parquet_codec_zstd_smaller_and_readable(spark, tmp_path):
             map(str, docs.collect())
         )
     assert sizes["zstd"] < sizes["uncompressed"]
+
+
+def test_pinned_schema_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """The pinned-schema cache keys on the newest mtime under a path, not
+    the directory's alone: a part file rewritten in place with another
+    schema, its directory's mtime reset, must read with the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from job_search_engine_using_pyspark_solar_and_angular_spark.io import _pinned_schema
+
+    table_dir = tmp_path / "t"
+    table_dir.mkdir()
+    part = table_dir / "part-00000.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    dir_stat = os.stat(table_dir)
+    assert _pinned_schema(spark, str(table_dir)).fieldNames() == ["a"]
+
+    pq.write_table(pa.table({"b": ["x"]}), part)
+    later = os.stat(part).st_mtime_ns + 2_000_000_000
+    os.utime(part, ns=(later, later))
+    os.utime(table_dir, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
+    assert os.stat(table_dir).st_mtime_ns == dir_stat.st_mtime_ns
+    assert _pinned_schema(spark, str(table_dir)).fieldNames() == ["b"]

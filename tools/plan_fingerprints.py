@@ -8,6 +8,10 @@ operator counts cannot.
 
 Usage:
   python tools/plan_fingerprints.py          # fingerprint + diff + persist
+  python tools/plan_fingerprints.py --write-baseline
+      # rewrite the two committed suite baselines at sf0.001: the declared
+      # set's plans (tests/plan_baseline_declared.json) and the HEADLINE
+      # queries' cost ledger (tests/ledger_baseline_declared.json)
 
 Artifacts under .bench/:
   plan_fingerprints.json       — this round {query: {op: count}}
@@ -75,6 +79,24 @@ DECLARED_BASELINE = os.path.join(REPO, "tests", "plan_baseline_declared.json")
 # committed full-registry snapshot: the diff baseline that survives the
 # per-container .bench reset (refresh deliberately via --write-snapshot)
 SNAPSHOT = os.path.join(REPO, "tools", "plan_fingerprints_snapshot.json")
+
+
+LEDGER_BASELINE = os.path.join(REPO, "tests", "ledger_baseline_declared.json")
+# the ledger pins build_jobs, jobs and stages: every HEADLINE query's three
+# counts are equal at SPARK_GRAFT_CPUS=2 and 4. Left out, for every query:
+LEDGER_NOT_PINNED = {
+    "tasks": "one per partition, and partition counts follow the core count",
+    "shuffle_mb": "shuffle bytes follow the partitioning, so the core count",
+    "spill_mb": "spill follows executor memory and the partitioning",
+}
+# ... and, per query, counts that do not repeat run to run
+LEDGER_UNSTABLE = {
+    "ext_minhash_candidates": {
+        "jobs": "6 or 7 with the queries run before it in the process (7 after "
+        "reversed and shuffled HEADLINE orders); it self-joins a persisted table",
+        "stages": "one per job, so it moves with jobs",
+    },
+}
 
 
 def fingerprint(plan: str) -> dict[str, int]:
@@ -164,6 +186,33 @@ def compute_fingerprints(spark, queries, names, sf_dir) -> dict[str, dict[str, i
     return out
 
 
+def compute_ledger(spark, queries, names, sf_dir) -> dict[str, dict[str, int]]:
+    """Each query's cold cost ledger, as bench.py's ``layers`` counts it:
+    jobs run while the DataFrame is built, and jobs and stages of build and
+    noop-forced execution together. Cold means the query's cache generation
+    and the pinned parquet schemas are released first, so every query pays
+    its own schema-inference jobs whatever ran before it in the process."""
+    from bench import layer_row
+    from job_search_engine_using_pyspark_solar_and_angular_spark import io
+    from job_search_engine_using_pyspark_solar_and_angular_spark.cache import (
+        release_query_caches,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
+
+    out: dict[str, dict[str, int]] = {}
+    for name in names:
+        release_query_caches(name)
+        io._SCHEMA_CACHE.clear()
+        with profiled(f"{name}:build") as b:
+            df = queries[name](spark, sf_dir)
+        with profiled(f"{name}:exec") as e:
+            df.write.format("noop").mode("overwrite").save()
+        release_query_caches(name)
+        row = layer_row(b, e)
+        out[name] = {k: row[k] for k in ("build_jobs", "jobs", "stages")}
+    return out
+
+
 def main() -> int:
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries import (
         extensions as _ext,  # noqa: F401
@@ -192,6 +241,24 @@ def main() -> int:
                 sort_keys=True,
             )
         print(f"wrote {DECLARED_BASELINE} ({len(fps)} queries at {sf})")
+        from bench import HEADLINE
+
+        ledger = {
+            q: {k: v for k, v in row.items() if k not in LEDGER_UNSTABLE.get(q, {})}
+            for q, row in compute_ledger(spark, QUERIES, HEADLINE, sf).items()
+        }
+        with open(LEDGER_BASELINE, "w", encoding="utf-8") as fh:
+            json.dump(
+                {
+                    "sf_tag": os.path.basename(sf.rstrip("/")),
+                    "ledger": ledger,
+                    "left_out": {"*": LEDGER_NOT_PINNED, **LEDGER_UNSTABLE},
+                },
+                fh,
+                indent=1,
+                sort_keys=True,
+            )
+        print(f"wrote {LEDGER_BASELINE} ({len(ledger)} queries at {sf})")
         return 0
 
     fps: dict[str, dict[str, int]] = {}

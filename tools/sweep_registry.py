@@ -1,25 +1,24 @@
 """Full-registry timing floor: run EVERY registered query once at sf0.01
-(single trial — this is a tripwire, not a benchmark) and diff against the
-previous sweep, so a plan regression in a non-headline query is visible
-the round it happens instead of the round the driver's window rotation
-lands on it. HEADLINE covers ~60 of the 250+ registered queries; this
-covers the rest.
+(single trial — this is a tripwire, not a benchmark) under
+``profiling.profiled`` and diff against the previous sweep, so a plan
+regression in a non-headline query is visible the round it happens instead
+of the round the driver's window rotation lands on it. HEADLINE covers ~60
+of the 250+ registered queries; this covers the rest.
 
 Usage:
   python tools/sweep_registry.py            # sweep + compare + persist
   SPARK_GRAFT_SWEEP_SF_DIR=... to override the scale (default sf0.01)
 
 Artifacts under .bench/:
-  registry_sweep.json       — this sweep {name: sec, ...} + meta
+  registry_sweep.json       — this sweep {name: sec, ...}, per-query jobs
+                              and stages, + meta
   registry_sweep_prev.json  — the prior sweep (rotated on each run)
 
-Exit code is ALWAYS 0 — single-trial timings at sf0.01 are noisy, so the
-guard reports rather than gates: entries with cur/prev > 2.0 AND
-cur - prev > 0.5 s are automatically RE-MEASURED min-of-2 at end of
-sweep (the noisy-neighbor burst that inflated a single trial has usually
-passed by then; a real regression reproduces) and only survivors land in
-the printed "flagged" block and the artifact — the manual idle-window
-adjudication this tool used to prescribe, done by the tool itself.
+Exit code is ALWAYS 0 — the guard reports rather than gates. A query is
+flagged when its job or stage count differs from the prior sweep's
+(``counters_moved``: a plan change), or when cur/prev > 2.0 AND
+cur - prev > 0.5 s; a wall flag whose counters held is marked
+``wall_only`` (single-trial timings at sf0.01 are noisy).
 """
 
 from __future__ import annotations
@@ -37,9 +36,8 @@ BENCH_DIR = os.path.join(REPO, ".bench")
 CUR = os.path.join(BENCH_DIR, "registry_sweep.json")
 PREV = os.path.join(BENCH_DIR, "registry_sweep_prev.json")
 # committed snapshot: the cross-container fallback baseline (.bench dies
-# with the container). Timings are host-specific, so snapshot comparisons
-# are host-calibrated via bench.host_calibration; refresh deliberately
-# with --write-snapshot.
+# with the container). Timings are host-specific, counters are not; refresh
+# deliberately with --write-snapshot.
 SNAPSHOT = os.path.join(REPO, "tools", "registry_sweep_snapshot.json")
 
 
@@ -50,6 +48,7 @@ def main() -> int:
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
         QUERIES,
     )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
     from job_search_engine_using_pyspark_solar_and_angular_spark.session import get_spark
 
     spark = get_spark(app_name="sweep-registry")
@@ -60,92 +59,58 @@ def main() -> int:
     QUERIES["q01_scan_project"](spark, SF_DIR).count()
 
     timings: dict[str, float] = {}
+    counters: dict[str, dict[str, int]] = {}
     errors: dict[str, str] = {}
     for name, fn in QUERIES.items():
-        t0 = time.perf_counter()
         try:
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
+            with profiled(name) as led:
+                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            timings[name] = led.wall_s
+            counters[name] = {"jobs": led.jobs, "stages": led.stages}
         except Exception as exc:  # a sweep must report, not die mid-list
             errors[name] = str(exc)[:200]
         print(
-            f"{name}: {timings.get(name, 'ERROR')}",
+            f"{name}: {timings.get(name, 'ERROR')} {counters.get(name, '')}",
             file=sys.stderr,
             flush=True,
         )
 
-    prior = {}
+    prior: dict = {}
     prior_meta = {}
-    calib_scale = 1.0
-    host_calib = None
     if os.path.isfile(CUR):
         try:
             with open(CUR, encoding="utf-8") as fh:
-                doc = json.load(fh)
-            prior = doc.get("timings", {})
-            prior_meta = {"prior_ts": doc.get("ts")}
+                prior = json.load(fh)
+            prior_meta = {"prior_ts": prior.get("ts")}
             os.replace(CUR, PREV)
         except (OSError, ValueError):
             pass
     if not prior and os.path.isfile(SNAPSHOT):
-        # fresh container: fall back to the committed snapshot, scaled by
-        # relative host speed (this host's calibration kernel vs the one
-        # recorded when the snapshot was written)
+        # fresh container: fall back to the committed snapshot
         try:
             with open(SNAPSHOT, encoding="utf-8") as fh:
-                snap = json.load(fh)
-            import bench as _bench  # repo-root bench.py
-
-            host_calib = _bench.host_calibration()
-            snap_calib = snap.get("host_calib_sec")
-            if snap_calib:
-                calib_scale = host_calib / snap_calib
-            prior = {
-                k: round(v * calib_scale, 3)
-                for k, v in snap.get("timings", {}).items()
-            }
-            prior_meta = {
-                "prior_ts": snap.get("ts"),
-                "prior_source": "snapshot",
-                "snapshot_calib_scale": round(calib_scale, 3),
-            }
-        except (OSError, ValueError, ImportError):
+                prior = json.load(fh)
+            prior_meta = {"prior_ts": prior.get("ts"), "prior_source": "snapshot"}
+        except (OSError, ValueError):
             pass
 
-    def _flags() -> dict:
-        out = {}
-        for name, cur in timings.items():
-            p = prior.get(name)
-            if p and cur / p > 2.0 and cur - p > 0.5:
-                out[name] = {"prev": p, "cur": cur, "ratio": round(cur / p, 2)}
-        return out
-
-    flagged = _flags()
-    # automatic flag RECHECK (same policy as bench.py's guard, r10): a
-    # single-trial timing taken during a noisy-neighbor burst flags at
-    # 2-10x with no code change — both r10 sweep attempts needed manual
-    # idle-window re-times to adjudicate exactly that. Re-measure each
-    # flagged entry min-of-2 at end of sweep (the burst has usually
-    # passed), keep the best, recompute. A real regression reproduces.
-    rechecked = []
-    if flagged:
-        for name in list(flagged):
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            best = timings[name]
-            try:
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, SF_DIR).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, round(time.perf_counter() - t0, 3))
-            except Exception:
-                continue
-            timings[name] = best
-            rechecked.append(name)
-        flagged = _flags()
+    prev_t, prev_c = prior.get("timings", {}), prior.get("counters", {})
+    flagged = {}
+    for name, cur in timings.items():
+        moved = None
+        if name in prev_c:
+            moved = {
+                k: [prev_c[name][k], v]
+                for k, v in counters[name].items()
+                if prev_c[name][k] != v
+            }
+        p = prev_t.get(name)
+        slow = bool(p) and cur / p > 2.0 and cur - p > 0.5
+        if moved or slow:
+            flagged[name] = {"counters_moved": moved}
+            if p:
+                flagged[name].update(prev=p, cur=cur, ratio=round(cur / p, 2))
+            flagged[name]["wall_only"] = slow and moved == {}
 
     doc = {
         "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
@@ -153,23 +118,17 @@ def main() -> int:
         "n_queries": len(timings),
         "total_sec": round(sum(timings.values()), 1),
         "timings": timings,
+        "counters": counters,
         "errors": errors,
         "flagged_vs_prev": flagged,
-        "rechecked": rechecked,
         **prior_meta,
     }
     os.makedirs(BENCH_DIR, exist_ok=True)
     with open(CUR, "w", encoding="utf-8") as fh:
         json.dump(doc, fh, indent=1)
     if "--write-snapshot" in sys.argv:
-        if host_calib is None:
-            import bench as _bench
-
-            host_calib = _bench.host_calibration()
         with open(SNAPSHOT, "w", encoding="utf-8") as fh:
-            json.dump(
-                {**doc, "host_calib_sec": host_calib}, fh, indent=1, sort_keys=True
-            )
+            json.dump(doc, fh, indent=1, sort_keys=True)
         print(f"wrote {SNAPSHOT}", file=sys.stderr)
 
     print(
@@ -179,7 +138,7 @@ def main() -> int:
                 "total_sec": doc["total_sec"],
                 "errors": errors,
                 "flagged_vs_prev": flagged,
-                "compared_against": len(prior),
+                "compared_against": len(prev_t),
             }
         )
     )
