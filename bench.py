@@ -15,7 +15,7 @@ Prints ONE JSON line:
                               per-sink stage walls},
    "served_trials": {name: [sec, ...], ...},  # raw trials, headline + served
    "layers": {name: {"build_s", "build_jobs", "jobs", "stages", "tasks",
-                     "shuffle_mb", "spill_mb"}, ...},  # Spark cost ledger
+                     "shuffle_mb", "spill_mb", "rows"}, ...},  # cost ledger
    "jobs": ..., "stages": ..., "shuffle_mb": ...,  # ledger totals
    "regressions": {name: {"prev": sec, "cur": sec, "ratio": ...,
                           "counters_moved": ...}, ...}}
@@ -25,7 +25,8 @@ Prints ONE JSON line:
 and its row holds the last trial's counters. ``build_s`` and ``build_jobs``
 are the build phase (eager actions while the DataFrame is assembled);
 ``jobs``, ``stages``, ``tasks``, ``shuffle_mb`` (read + write) and
-``spill_mb`` cover build and execution together. Job and stage counts are
+``spill_mb`` cover build and execution together; ``rows`` is the output
+row count of entries forced with the noop sink. Job and stage counts are
 deterministic for a fixed plan and fixed data, so they are what the
 regression guard trusts.
 
@@ -38,6 +39,12 @@ counts the common entries, so "no flags" is distinguishable from "nothing
 compared". Nothing is absorbed: a changed job or stage count flags
 (``counters_moved``), and a >1.5x wall ratio flags too, marked
 ``wall_only`` when the counters held.
+
+``python bench.py --ladder 1,10`` runs the replication ladder instead:
+HEADLINE and the served entries that take an sf_dir, at each rung's ×N
+layout written by ``sources/replicate.py``, one row per entry and rung plus
+a scaling exponent per entry (see ladder). It prints one JSON line and
+writes ``.bench/ladder.c{cores}.json``.
 
 Methodology:
 - each query is forced with ``df.write.format("noop")`` — full column
@@ -70,12 +77,17 @@ Methodology:
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.session import get_spark
@@ -184,10 +196,15 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 BENCH_DIR = os.path.join(REPO, ".bench")
 
 
-def force(df) -> None:
+def force(df) -> int:
     """Materialize every column of every row (noop sink — no driver transfer,
-    no output files, no column-decode shortcuts)."""
-    df.write.format("noop").mode("overwrite").save()
+    no output files, no column-decode shortcuts) and return the row count,
+    an observed metric of the same pass (no extra job)."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return obs.get["n"]
 
 
 # raw per-trial timings of every timed entry, recorded in the artifact so
@@ -247,8 +264,10 @@ def timed_min(
         with profiled(f"{name}:build") as b:
             out = build()
         with profiled(f"{name}:exec") as e:
-            run(out)
+            n = run(out)
         LAYERS[name] = layer_row(b, e)
+        if isinstance(n, int):  # run=force counts the output rows
+            LAYERS[name]["rows"] = n
         return round(b.wall_s + e.wall_s, 3)
 
     ts = [one() for _ in range(trials)]
@@ -280,13 +299,11 @@ def bench_bm25_served(spark, sf_dir: str) -> float:
 
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     base = os.path.join(BENCH_DIR, f"index_{sf_tag}")
-    try:
-        idx = read_index(spark, base)
-        idx.postings.first()  # all four directories written?
-    except Exception:
+    # corpus_stats is written last, so its marker means all four are there
+    if not os.path.exists(os.path.join(base, "corpus_stats", "_SUCCESS")):
         built = build_index(load_table(spark, sf_dir, "documents"), cache=True)
         write_index(built, base)
-        idx = read_index(spark, base)
+    idx = read_index(spark, base)
     force(bm25_search(spark, idx, ["spark", "join"], 10))  # warm scan
     return timed_min(
         "q20_bm25_served", lambda: bm25_search(spark, idx, ["spark", "join"], 10)
@@ -306,8 +323,6 @@ def bench_http_served(spark, sf_dir: str) -> float:
     requests run under job groups of their own."""
     import json as _json
     import urllib.request
-
-    from pyspark.sql import functions as F
 
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
@@ -345,8 +360,6 @@ def bench_ann_served(spark, sf_dir: str) -> float:
     query against the on-disk bucket-partitioned vector index (dynamic
     partition pruning = one bucket's files per query). Index cached under
     .bench/ per sf."""
-    from pyspark.sql import functions as F
-
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         ann_lsh_quantized_served,
@@ -388,8 +401,6 @@ def bench_ann_pq_served(spark, sf_dir: str) -> float:
     ADC). The handle resolution cost is paid in the warm call, outside
     the timed region, exactly like ann_lsh_served_vec's 'resolve + list
     once'. Index cached under .bench/ per sf."""
-    from pyspark.sql import functions as F
-
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         ann_pq_served,
@@ -445,8 +456,6 @@ def bench_ann_served_vec(spark, sf_dir: str) -> float:
     per query."""
     import inspect
 
-    from pyspark.sql import functions as F
-
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         ann_lsh_served_vec,
@@ -472,35 +481,32 @@ def bench_ann_served_vec(spark, sf_dir: str) -> float:
 
 
 def bench_ann_served_1m(spark) -> float:
-    """Steady-state served-ANN latency at the 1M-vector replication probe
-    (sf0.1 embeddings x500, corpus-auto-sized planes -> 1024 bucket
-    partitions): static-probe multiprobe query against a PRE-RESOLVED
-    index relation — the serving deployment shape (resolve once per index
-    generation, serve many queries; a fresh read pays ~1.2-3.3 s of
-    partition discovery instead). Index build (~250 s) is one-time and
+    """Steady-state served-ANN latency at 1M vectors (sf0.1 embeddings
+    replicated ×500 by ``sources.replicate``, corpus-auto-sized planes ->
+    1024 bucket partitions): static-probe multiprobe query against a
+    PRE-RESOLVED index relation — the serving deployment shape (resolve once
+    per index generation, serve many queries; a fresh read pays ~1.2-3.3 s
+    of partition discovery instead). Index build (~250 s) is one-time and
     cached under .bench/ keyed on (reps, planes)."""
-    import sys as _sys
-
-    from pyspark.sql import functions as F
-
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators import (
         similarity,
     )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.sources import (
+        replicate,
+    )
 
-    _sys.path.insert(0, os.path.join(REPO, "tools"))
-    import probe_ann_scale
-
-    reps = 500
-    base = load_table(spark, "/root/testdata/sf0.1", "embeddings")
+    sf_dir, reps = "/root/testdata/sf0.1", 500
+    base = load_table(spark, sf_dir, "embeddings")
     n = base.count() * reps
     planes = similarity.planes_for_corpus(n, target_bucket=1024)
-    path = os.path.join(BENCH_DIR, f"vecidx_probe_r{reps}_p{planes}")
+    path = os.path.join(BENCH_DIR, f"vecidx_x{reps}_p{planes}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        corpus = probe_ann_scale.replicated_embeddings(
-            spark, "/root/testdata/sf0.1", reps
-        ).filter(F.col("vec_id") != 0)
-        similarity.write_vector_index_int8(corpus, path, num_planes=planes)
+        offsets = replicate.key_offsets(spark, sf_dir, reps)
+        corpus = replicate.replicated_table(spark, sf_dir, "embeddings", reps, offsets)
+        similarity.write_vector_index_int8(
+            corpus.filter(F.col("vec_id") != 0), path, num_planes=planes
+        )
     qv = [float(x) for x in base.filter(F.col("vec_id") == 0).first()["embedding"]]
     idx_df = spark.read.parquet(path)
 
@@ -662,8 +668,6 @@ def bench_served_refresh(spark, sf_dir: str) -> float:
     excluded — the reported figure is min-of-2 over successive ~200-doc
     delta batches (half genuinely new, half near-dup arrivals the gate
     suppresses), i.e. what a production re-index pays per batch."""
-    from pyspark.sql import functions as F
-
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.search import (
         serve_loop,
@@ -712,34 +716,39 @@ def bench_served_refresh(spark, sf_dir: str) -> float:
     )
 
 
+def exchange_count(df) -> int:
+    """Exchange operators in ``df``'s executed plan."""
+    p = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        line.strip().lstrip("+-: ").startswith("Exchange") for line in p.splitlines()
+    )
+
+
 def bench_bucketed_layout(spark, sf_dir: str) -> dict:
     """The prescribed fact layout (DEPLOY.md), measured in the driver-visible
     artifact (VERDICT r8 #2): lineitem bucket-sorted on l_orderkey and orders
-    on o_orderkey (same bucket count) run BOTH heavy orderkey workloads —
-    Q18's grouped-fact HAVING agg + join and Q21's fact⋈fact ladder — off the
-    layout. The bucketed pair is written once per sf and cached under
-    .bench/ (the one-time layout cost is recorded when paid); each query's
-    result is asserted identical to the unbucketed plan and the bucketed
-    Exchange counts are asserted at the shuffle-free caps the CI plan pin
-    uses (Q18 ≤1: only the final ORDER BY; Q21 ≤2: the few-row supplier
-    tail) before timing."""
+    on o_orderkey (same bucket count) run BOTH heavy orderkey workloads — the
+    registry's own Q18 (grouped-fact HAVING agg + join) and Q21 (fact⋈fact
+    ladder) bodies — off the layout. The bucketed pair is written once per
+    sf and cached under .bench/ (the one-time layout cost is recorded when
+    paid); each query's result is asserted identical to the parquet-table
+    plan and the bucketed Exchange counts are asserted at the shuffle-free
+    caps the CI plan pin uses (Q18 ≤1, Q21 ≤2: the result-sized tails)
+    before timing."""
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
-    from tools.probe_q18_bucketed import (
+    from job_search_engine_using_pyspark_solar_and_angular_spark.queries.extensions import (
+        tpch_q18,
+        tpch_q21,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.sources.replicate import (
         BUCKETS,
         ensure_bucketed_pair,
-        exchange_count,
-        q18_plan,
-        q21_plan,
     )
-    from pyspark.sql import functions as F
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     bdir = os.path.join(BENCH_DIR, f"bucketed_bench_{tag}")
     safe = tag.replace(".", "_")
     li_name, o_name = f"jse_li_bench_{safe}", f"jse_o_bench_{safe}"
-    # ONE owner of the layout-write + DDL re-attach sequence (the probe's
-    # helper) — the marker fingerprints source row counts, so regenerated
-    # testdata triggers a rewrite instead of a stale-layout assert abort
     bucket_write_sec = ensure_bucketed_pair(
         spark,
         lambda: load_table(spark, sf_dir, "lineitem"),
@@ -753,25 +762,14 @@ def bench_bucketed_layout(spark, sf_dir: str) -> dict:
 
     out: dict = {"buckets": BUCKETS, "bucket_write_sec": bucket_write_sec}
     cases = {
-        "ext_tpch_q18": (
-            lambda: q18_plan(li, o, c),
-            lambda: q18_plan(lib, ob, c),
-            1,
-            lambda df: df.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("c_custkey") + F.col("o_orderkey")).alias("s"),
-            ).first(),
-        ),
-        "ext_tpch_q21": (
-            lambda: q21_plan(li, o, s),
-            lambda: q21_plan(lib, ob, s),
-            2,
-            lambda df: tuple(sorted(map(tuple, df.collect()))),
-        ),
+        "ext_tpch_q18": (lambda: tpch_q18(li, o, c), lambda: tpch_q18(lib, ob, c), 1),
+        "ext_tpch_q21": (lambda: tpch_q21(li, o, s), lambda: tpch_q21(lib, ob, s), 2),
     }
-    for qname, (mk_unb, mk_b, cap, chk) in cases.items():
+    for qname, (mk_unb, mk_b, cap) in cases.items():
         unb, b = mk_unb(), mk_b()
-        assert chk(unb) == chk(b), f"{qname}: bucketed result differs"
+        assert sorted(unb.collect()) == sorted(b.collect()), (
+            f"{qname}: bucketed result differs"
+        )
         xb = exchange_count(b)
         assert xb <= cap, f"{qname}: bucketed plan has {xb} Exchanges (cap {cap})"
         out[qname] = {
@@ -858,20 +856,134 @@ def regressions_vs_previous(
     return out
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    spark = get_spark(app_name="jse-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM/codegen paths AND the Python worker pool once so per-query
-    # numbers measure the plan, not first-call JIT / worker-spawn (standard
-    # benchmark practice; warmup at tiny sf).
+def warm(spark) -> None:
+    """Warm the JVM/codegen paths AND the Python worker pool once so
+    per-query numbers measure the plan, not first-call JIT / worker-spawn
+    (standard benchmark practice; warmup at tiny sf)."""
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
         force(QUERIES["q11_agg_tpch_q1"](spark, warm_dir))
         force(QUERIES["q20_bm25_search"](spark, warm_dir))
         QUERIES["ext_multimodal_features"](spark, warm_dir).count()
+
+
+# the served entries that take an sf_dir, so run at every ladder rung
+LADDER_SERVED = {
+    f.__name__: f
+    for f in (
+        bench_bm25_served,
+        bench_http_served,
+        bench_ann_served,
+        bench_ann_served_vec,
+        bench_ann_pq_served,
+        bench_bucketed_layout,
+        bench_served_refresh,
+    )
+}
+LADDER_COUNTERS = ("jobs", "stages", "shuffle_mb", "spill_mb")
+
+
+def _exponent(v1, vn, n: float):
+    """log(vN/v1)/log(N): 1 is linear in the data, 0 flat."""
+    if not v1 or not vn:
+        return None
+    return round(math.log(vn / v1) / math.log(n), 2)
+
+
+def ladder(spark, sf_dir: str, rungs: list[int], names: list[str] | None = None) -> dict:
+    """The replication ladder: ``names`` (default HEADLINE and LADDER_SERVED)
+    at each rung's ×N layout (``sources.replicate``). Every timed entry gets
+    one row per rung — ``wall_s`` (min of trials), the ledger's ``jobs``,
+    ``stages``, ``shuffle_mb``, ``spill_mb``, and the output ``rows`` of its
+    last trial — and, per rung past the first, the exponent of wall time and
+    shuffle against the first rung (rung sizes relative to it). An entry
+    that fails gets a row holding its error."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
+        release_query_caches,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.sources.replicate import (
+        replicate,
+    )
+
+    def entry(name: str):
+        if name in LADDER_SERVED:
+            return lambda d: LADDER_SERVED[name](spark, d)
+        return lambda d: timed_min(
+            name,
+            lambda: QUERIES[name](spark, d),
+            pre=lambda: release_query_caches(name),
+        )
+
+    names = names or [*HEADLINE, *LADDER_SERVED]
+    rows: dict[str, dict] = {}
+    for n in rungs:
+        rung = f"x{n}"
+        try:
+            rung_dir = replicate(spark, sf_dir, n, BENCH_DIR)
+        except Exception as exc:
+            traceback.print_exc()
+            for name in names:
+                rows.setdefault(name, {})[rung] = {"error": f"replicate: {exc!r}"[:300]}
+            continue
+        for name in names:
+            LAYERS.clear()
+            SERVED_TRIALS.clear()
+            try:
+                entry(name)(rung_dir)
+            except Exception as exc:
+                traceback.print_exc()
+                rows.setdefault(name, {})[rung] = {"error": repr(exc)[:300]}
+                continue
+            for timed, layer in LAYERS.items():
+                rows.setdefault(timed, {})[rung] = {
+                    "wall_s": min(SERVED_TRIALS[timed]),
+                    **{k: layer[k] for k in LADDER_COUNTERS},
+                    "rows": layer.get("rows"),
+                }
+    base = f"x{rungs[0]}"
+    exponents = {
+        name: {
+            f"x{n}": {
+                k: _exponent(by_rung[base].get(c), by_rung[f"x{n}"].get(c), n / rungs[0])
+                for k, c in (("wall", "wall_s"), ("shuffle", "shuffle_mb"))
+            }
+            for n in rungs[1:]
+            if "wall_s" in by_rung.get(base, {}) and "wall_s" in by_rung.get(f"x{n}", {})
+        }
+        for name, by_rung in rows.items()
+    }
+    return {
+        "metric": "replication ladder",
+        "sf_dir": sf_dir,
+        "rungs": rungs,
+        "rows": rows,
+        "exponents": exponents,
+    }
+
+
+def main(argv: list[str] | None = None) -> None:
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--ladder",
+        metavar="N,N,...",
+        help="run the replication ladder at these ×N rungs instead of the bench",
+    )
+    args = ap.parse_args(argv or [])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark(app_name="jse-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm(spark)
+    if args.ladder:
+        rungs = sorted({int(x) for x in args.ladder.split(",")})
+        doc = ladder(spark, sf_dir, rungs)
+        os.makedirs(BENCH_DIR, exist_ok=True)
+        with open(os.path.join(BENCH_DIR, f"ladder.c{cores}.json"), "w", encoding="utf-8") as fh:
+            json.dump(doc, fh, indent=1)
+        print(json.dumps(doc))
+        return
 
     # min of 2 trials per query (escalating to 3 when the trials disagree
     # by >1.3x — see timed_min): first-trial numbers fold in per-plan
@@ -1011,4 +1123,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -138,10 +138,11 @@ def ext_simhash(spark, sf_dir):
 @query("ext_minhash_candidates")
 def ext_minhash_candidates(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    # the bucket table is persisted at QUERY level, in the query's cache
-    # generation (warm on a same-sf rerun)
-    banded = persist(dedup.minhash_bucket_table(d))
-    return dedup.candidates_from_buckets(banded)
+    # not persisted: AQE's exchange reuse computes the bucket table once for
+    # both sides of the self-join, while a persisted one is read through two
+    # table-cache stages whose fill jobs race, so its job count would vary
+    # from run to run
+    return dedup.minhash_lsh_candidates(d)
 
 
 @query("ext_minhash_signatures")
@@ -5000,19 +5001,25 @@ def ext_tpch_q17(spark, sf_dir):
 
 @query("ext_tpch_q18")
 def ext_tpch_q18(spark, sf_dir):
+    return tpch_q18(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "customer"),
+    )
+
+
+def tpch_q18(li, o, c):
     """TPC-H Q18 (large-volume customers): HAVING on a grouped fact (orders
     whose lineitems total > 250 units) drives the rest of the join — the
     aggregate runs FIRST so only the ~1% qualifying orderkeys reach the
-    3-way join. Quantity summed in integer cents."""
-    li = load_table(spark, sf_dir, "lineitem")
+    3-way join. Quantity summed in integer cents. Takes its relations, so
+    the same plan runs over the parquet tables or a bucketed layout."""
     qc = F.round(F.col("l_quantity") * 100, 0).cast("long")
     big = (
         li.groupBy(F.col("l_orderkey").alias("lk"))
         .agg(F.sum(qc).alias("sum_qc"))
         .filter(F.col("sum_qc") > 250 * 100)
     )
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(big, F.col("o_orderkey") == F.col("lk"))
         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
@@ -5064,6 +5071,14 @@ def ext_tpch_q19(spark, sf_dir):
 
 @query("ext_tpch_q21")
 def ext_tpch_q21(spark, sf_dir):
+    return tpch_q21(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "supplier"),
+    )
+
+
+def tpch_q21(li, o, s):
     """TPC-H Q21 (suppliers who kept orders waiting): the EXISTS/NOT-EXISTS
     pair over the same fact decorrelated into per-order aggregates joined
     back to the late (order, supplier) pairs. The classic form re-scans
@@ -5071,7 +5086,7 @@ def ext_tpch_q21(spark, sf_dir):
     both quantifiers relationally (the DuckDB oracle keeps the textbook
     EXISTS form, so the rewrite is verified against the original
     semantics). "Late" = shipped > 365 days after order (receipt>commit
-    proxy; module note).
+    proxy; module note). Takes its relations, like :func:`tpch_q18`.
 
     Aggregation is TWO-STAGE by design: dedup to (orderkey, suppkey,
     max(late)) first, then plain count/sum per order. The single-pass
@@ -5079,12 +5094,12 @@ def ext_tpch_q21(spark, sf_dir):
     distinct aggregate — 2x the shuffle rows), and its join-back side
     re-shuffles the RAW late rows; staging lets both quantifiers AND the
     join-back reuse the pair-grain relation. Measured at x100 facts
-    (60M lineitem, tools/probe_tpch_scale.py): 29.4 s -> 15.8 s, and the
-    x100/x1 time ratio drops ~32x -> ~15x — this was the shuffle-volume
-    audit's only super-linear entry (13.2x shuffle bytes at 10x data),
-    now in line with Q18."""
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = load_table(spark, sf_dir, "lineitem")
+    (60M lineitem, by the TPC-H replication probe of commit 100813f):
+    29.4 s -> 15.8 s, and the x100/x1 time ratio drops ~32x -> ~15x — this
+    was the shuffle-volume audit's only super-linear entry (13.2x shuffle
+    bytes at 10x data). ``python bench.py --ladder`` now measures its
+    scaling exponent on this code (SCALE.md)."""
+    o = o.filter(F.col("o_orderstatus") == "F")
     rows = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
         "l_orderkey",
         "l_suppkey",
@@ -5104,7 +5119,6 @@ def ext_tpch_q21(spark, sf_dir):
     waiting = per_pair.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count("*").alias("n_supp"), F.sum("late").alias("n_late_supp")
     ).filter((F.col("n_supp") > 1) & (F.col("n_late_supp") == 1))
-    s = load_table(spark, sf_dir, "supplier")
     culprit = (
         per_pair.filter(F.col("late") == 1)
         .join(waiting, F.col("l_orderkey") == F.col("ok"))

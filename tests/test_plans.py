@@ -276,16 +276,17 @@ def test_bucketed_layout_runs_q18_q21_ladders_shuffle_free(spark, tmp_path):
     Q21's fact⋈fact join with its whole downstream ladder (pair dedup,
     per-order quantifiers, culprit join-back) — with no orderkey Exchange
     anywhere: the only Exchanges left are the result-sized tails (Q18's
-    ORDER BY range partition; Q21's few-row supplier agg). Subset
+    top-100; Q21's few-row supplier agg). Subset
     HashPartitioning satisfying the composite grouping is what makes the
-    ladder reuse the layout; this pins that Catalyst behavior too."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.probe_q18_bucketed import exchange_count, q18_plan, q21_plan
+    ladder reuse the layout; this pins that Catalyst behavior too. The
+    plans are the registry's own Q18/Q21 bodies, the ones bench.py times."""
+    from bench import exchange_count
 
     from job_search_engine_using_pyspark_solar_and_angular_spark import catalog
+    from job_search_engine_using_pyspark_solar_and_angular_spark.queries.extensions import (
+        tpch_q18,
+        tpch_q21,
+    )
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
 
     li = load_table(spark, SF_DIR, "lineitem")
@@ -303,8 +304,8 @@ def test_bucketed_layout_runs_q18_q21_ladders_shuffle_free(spark, tmp_path):
             "t_o_b", str(tmp_path / "o"), ["o_orderkey"], buckets=8,
         )
         lib, ob = spark.table("t_li_b"), spark.table("t_o_b")
-        q18b, q18u = q18_plan(lib, ob, c), q18_plan(li, o, c)
-        q21b, q21u = q21_plan(lib, ob, s), q21_plan(li, o, s)
+        q18b, q18u = tpch_q18(lib, ob, c), tpch_q18(li, o, c)
+        q21b, q21u = tpch_q21(lib, ob, s), tpch_q21(li, o, s)
         for bucketed, cap in ((q18b, 1), (q21b, 2)):
             p = bucketed._jdf.queryExecution().executedPlan().toString()
             assert "hashpartitioning(l_orderkey" not in p, p[:1500]
@@ -638,20 +639,24 @@ def test_simhash_single_shuffle(spark):
 
 
 def test_bucketed_pair_marker_invalidates_on_source_change(spark, tmp_path):
-    """ensure_bucketed_pair (the single owner of the bench/probe fact
-    layout) must REBUILD when the source data changes under the same
-    paths — a stale cached pair would otherwise abort the bench via the
-    result-equality assert. The marker fingerprints source row counts AND
-    orderkey sums, so same-count content changes invalidate too (ADVICE
-    r9: a regenerated source with identical counts silently reused the
-    stale layout)."""
-    import os
-    import sys
+    """Both derived layouts of sources/replicate.py (the bucketed fact pair
+    and the ×N replicated sf layout) must REBUILD when the source data
+    changes under the same paths — a stale layout would otherwise feed the
+    bench old data, or abort it via the result-equality assert. The one
+    marker fingerprints each source's row count AND a content hash, so
+    same-count content changes invalidate too (ADVICE r9: a regenerated
+    source with identical counts silently reused the stale layout)."""
+    import shutil
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.probe_q18_bucketed import ensure_bucketed_pair
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as sf
 
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
+    from job_search_engine_using_pyspark_solar_and_angular_spark.sources.replicate import (
+        ensure_bucketed_pair,
+        replicate,
+    )
 
     li = lambda: load_table(spark, SF_DIR, "lineitem")  # noqa: E731
     o = lambda: load_table(spark, SF_DIR, "orders")  # noqa: E731
@@ -667,21 +672,34 @@ def test_bucketed_pair_marker_invalidates_on_source_change(spark, tmp_path):
         shrunk = lambda: load_table(spark, SF_DIR, "lineitem").limit(10)  # noqa: E731
         rebuilt = ensure_bucketed_pair(spark, shrunk, o, bdir, "t_bp_li", "t_bp_o")
         assert rebuilt is not None  # source changed -> rewrite, not stale reuse
-        # same ROW COUNT, different content: the key-sum fingerprint must
-        # catch what the count alone cannot
-        from pyspark.sql import functions as sf
-
+        assert spark.table("t_bp_li").count() == 10
+        # same ROW COUNT, different content: the content hash must catch
+        # what the count alone cannot
         shifted = lambda: load_table(spark, SF_DIR, "lineitem").withColumn(  # noqa: E731
             "l_orderkey", sf.col("l_orderkey") + 1
         )
-        assert (  # restore the full-source layout first
-            ensure_bucketed_pair(spark, li, o, bdir, "t_bp_li", "t_bp_o")
-            is not None
+        ensure_bucketed_pair(spark, li, o, bdir, "t_bp_li", "t_bp_o")
+        ensure_bucketed_pair(spark, shifted, o, bdir, "t_bp_li", "t_bp_o")
+        got = spark.table("t_bp_li").agg(sf.sum("l_orderkey")).first()[0]
+        assert got == shifted().agg(sf.sum("l_orderkey")).first()[0], (
+            "same-count content change reused stale layout"
         )
-        rebuilt2 = ensure_bucketed_pair(
-            spark, shifted, o, bdir, "t_bp_li", "t_bp_o"
-        )
-        assert rebuilt2 is not None, "same-count content change reused stale layout"
     finally:
         spark.sql("DROP TABLE IF EXISTS t_bp_li")
         spark.sql("DROP TABLE IF EXISTS t_bp_o")
+
+    # the replicated layout: a source table rewritten in place with the same
+    # row count must not be served from the old replicas
+    src, root = tmp_path / "src", str(tmp_path / "rep")
+    shutil.copytree(SF_DIR, src)
+    out = replicate(spark, str(src), 2, root)
+    total = lambda: load_table(spark, out, "orders").agg(  # noqa: E731
+        sf.sum("o_totalprice")
+    ).first()[0]
+    before = total()
+    path = str(src / "orders.parquet")
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("o_totalprice")
+    pq.write_table(t.set_column(i, "o_totalprice", pc.add(t["o_totalprice"], 1.0)), path)
+    assert replicate(spark, str(src), 2, root) == out
+    assert total() == pytest.approx(before + 2 * t.num_rows), "stale replicas reused"

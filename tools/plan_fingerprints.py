@@ -89,14 +89,6 @@ LEDGER_NOT_PINNED = {
     "shuffle_mb": "shuffle bytes follow the partitioning, so the core count",
     "spill_mb": "spill follows executor memory and the partitioning",
 }
-# ... and, per query, counts that do not repeat run to run
-LEDGER_UNSTABLE = {
-    "ext_minhash_candidates": {
-        "jobs": "6 or 7 with the queries run before it in the process (7 after "
-        "reversed and shuffled HEADLINE orders); it self-joins a persisted table",
-        "stages": "one per job, so it moves with jobs",
-    },
-}
 
 
 def fingerprint(plan: str) -> dict[str, int]:
@@ -243,16 +235,13 @@ def main() -> int:
         print(f"wrote {DECLARED_BASELINE} ({len(fps)} queries at {sf})")
         from bench import HEADLINE
 
-        ledger = {
-            q: {k: v for k, v in row.items() if k not in LEDGER_UNSTABLE.get(q, {})}
-            for q, row in compute_ledger(spark, QUERIES, HEADLINE, sf).items()
-        }
+        ledger = compute_ledger(spark, QUERIES, HEADLINE, sf)
         with open(LEDGER_BASELINE, "w", encoding="utf-8") as fh:
             json.dump(
                 {
                     "sf_tag": os.path.basename(sf.rstrip("/")),
                     "ledger": ledger,
-                    "left_out": {"*": LEDGER_NOT_PINNED, **LEDGER_UNSTABLE},
+                    "left_out": {"*": LEDGER_NOT_PINNED},
                 },
                 fh,
                 indent=1,
