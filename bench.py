@@ -355,37 +355,6 @@ def bench_http_served(spark, sf_dir: str) -> float:
         return timed_min("http_query_served", lambda: None, one)
 
 
-def bench_ann_served(spark, sf_dir: str) -> float:
-    """The served ANN deployment shape beside q20_bm25_served: integer-LSH
-    query against the on-disk bucket-partitioned vector index (dynamic
-    partition pruning = one bucket's files per query). Index cached under
-    .bench/ per sf."""
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
-    from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
-        ann_lsh_quantized_served,
-        write_vector_index_int8,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # cache key carries the build parameters: a default change in
-    # write_vector_index_int8 must miss the cache, never silently bench a
-    # stale index built by older code
-    import inspect
-
-    sig = inspect.signature(write_vector_index_int8)
-    planes = sig.parameters["num_planes"].default
-    dim = sig.parameters["dim"].default
-    path = os.path.join(BENCH_DIR, f"vecidx_{sf_tag}_p{planes}_d{dim}")
-    emb = load_table(spark, sf_dir, "embeddings")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    force(ann_lsh_quantized_served(spark, path, q, k=5))  # warm
-    return timed_min(
-        "ann_lsh_served", lambda: ann_lsh_quantized_served(spark, path, q, k=5)
-    )
-
-
 def bench_ann_pq_served(spark, sf_dir: str) -> float:
     """The IVFPQ served deployment shape beside ann_lsh_served_vec: ADC
     query against the on-disk PQ index — driver-side LUT from the bounded
@@ -447,13 +416,14 @@ def bench_ann_pq_served(spark, sf_dir: str) -> float:
 
 
 def bench_ann_served_vec(spark, sf_dir: str) -> float:
-    """The REQUEST-path twin of ann_lsh_served: query arrives as a vector,
-    probe selection is driver-side integer arithmetic, pruning is STATIC
-    partition elimination against a pre-resolved index relation (the
-    steady-state serving shape — see ann_lsh_served_vec). ann_lsh_served
-    keeps measuring the DataFrame/DPP path for round-over-round
-    comparability; this entry is what a serving deployment actually pays
-    per query."""
+    """The served ANN deployment shape beside q20_bm25_served: the one
+    int8-LSH read path (``similarity.ann_lsh_served_vec``) — the query
+    arrives as a vector, probe selection is driver-side integer
+    arithmetic, pruning is STATIC partition elimination against a
+    pre-resolved index relation, as a serving loop runs it. Index cached
+    under .bench/ per sf; the cache key carries the build parameters, so a
+    default change in write_vector_index_int8 must miss the cache, never
+    silently bench a stale index built by older code."""
     import inspect
 
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
@@ -873,7 +843,6 @@ LADDER_SERVED = {
     for f in (
         bench_bm25_served,
         bench_http_served,
-        bench_ann_served,
         bench_ann_served_vec,
         bench_ann_pq_served,
         bench_bucketed_layout,
@@ -1014,7 +983,6 @@ def main(argv: list[str] | None = None) -> None:
 
     timings["q20_bm25_served"] = bench_bm25_served(spark, sf_dir)
     timings["http_query_served"] = bench_http_served(spark, sf_dir)
-    timings["ann_lsh_served"] = bench_ann_served(spark, sf_dir)
     timings["ann_lsh_served_vec"] = bench_ann_served_vec(spark, sf_dir)
     timings["ann_pq_served"] = bench_ann_pq_served(spark, sf_dir)
     if sf_dir.rstrip("/").endswith("sf0.1"):

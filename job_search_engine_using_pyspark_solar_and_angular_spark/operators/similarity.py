@@ -1339,72 +1339,11 @@ def write_vector_index_int8(
     ).parquet(path)
 
 
-def ann_lsh_quantized_served(
-    spark,
-    path: str,
-    query: DataFrame,
-    k: int = 5,
-    num_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-    dim: int = 64,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Serve integer-LSH ANN from the on-disk bucket-partitioned index:
-    compute the query's probe buckets (same integer arithmetic as the
-    writer), scan ONLY those partitions (Catalyst partition pruning —
-    pinned by the plan test), rank by round-4 cosine. The served twin of
-    ext_ann_lsh_multiprobe, mirroring the BM25 write_index/read_index
-    pattern: bucketing cost is paid at index time, a query's cost is its
-    probed buckets' files.
-
-    ``multiprobe=True`` (the DEFAULT, matching :func:`ann_pq_served`)
-    probes the query's bucket plus every Hamming-1 neighbor (Lv et al.,
-    multi-probe LSH): 1+num_planes of the 2^num_planes partitions. The
-    single-bucket tier measured recall@5 = 0.0 at sf0.01 / 0.2 at sf0.1
-    (the r4 recall ladder) — a served default that returns zero true
-    neighbors is dead weight; multiprobe recovers 0.4 / 0.6 at ~5x probe
-    cost, still a pruned fraction (5/16) of the index. Pass
-    ``multiprobe=False`` for the cheapest-possible probe when the caller
-    reranks a wide shortlist anyway."""
-    qbucket = lsh_bucket_int8(
-        quantize_int8(
-            query.select(
-                F.lit(0).alias(id_col), F.col(query_vec_col).alias(vec_col)
-            ),
-            id_col,
-            vec_col,
-        ),
-        num_planes=num_planes,
-        dim=dim,
-    )
-    probe_cols = [F.col("bucket")]
-    if multiprobe:
-        probe_cols += [
-            F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(num_planes)
-        ]
-    qb = qbucket.select(F.explode(F.array(*probe_cols)).alias("qbucket"))
-    idx = spark.read.parquet(path)
-    return (
-        idx.join(F.broadcast(qb), idx["bucket"] == F.col("qbucket"))
-        .crossJoin(F.broadcast(query.select(query_vec_col)))
-        .select(
-            id_col,
-            (F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 4) + F.lit(0.0)).alias(
-                "sim"
-            ),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def _python_quantize_vec(vec: list[float]) -> list[int]:
     """Per-VECTOR int8 quantization of one query vector, driver-side — the
     exact arithmetic of :func:`quantize_int8` (floor on doubles; Python
     floats ARE IEEE doubles, so codes are bit-identical to the in-plan
-    path — pinned by test_ann_lsh_served_vec_matches_dataframe_path)."""
+    path — pinned by test_python_quantize_vec_matches_spark_property)."""
     import math
 
     fs = [float(x) for x in vec]
@@ -1427,38 +1366,38 @@ def ann_lsh_served_vec(
     multiprobe: bool = True,
     dim: int = 64,
 ) -> DataFrame:
-    """STATIC-probe twin of :func:`ann_lsh_quantized_served` for the
-    serving deployment shape where the query arrives as a VECTOR (the
-    request path), not a DataFrame: quantize + bucket the query
-    driver-side (pure integer arithmetic, zero Spark jobs), then scan the
-    probed partitions through a static ``isin`` filter — the same route
-    :func:`ann_pq_served` takes.
+    """THE int8-LSH read path: serve ANN from the on-disk bucket-partitioned
+    index (:func:`write_vector_index_int8`). The query arrives as a VECTOR
+    and is quantized and bucketed driver-side (pure integer arithmetic,
+    zero Spark jobs); the scan reads only the probed ``bucket=`` partitions
+    through a static ``isin`` filter (static partition pruning — the same
+    route :func:`ann_pq_served` takes), and candidates rank by round-4
+    cosine, id tie-break. Returns (id, sim). Rows equal the in-session
+    registry twins, ``ext_ann_lsh_multiprobe`` and (``multiprobe=False``)
+    ``ext_ann_lsh_quantized``: same integer bucket arithmetic, same
+    ranking (pinned by test).
 
-    Why it exists (r6 1M-vector probe finding): the DataFrame-query path
-    plans the query subtree (parquet scan + quantize + bucket) FIVE times
-    and prunes via a dynamic-partition-pruning subquery — measured ~2.4 s
-    of per-query fixed cost at a 1024-partition index, regardless of how
-    little data the probes touch (single-bucket ≈ exact-scan latency at
-    1M vectors). The static path removes every query-side job: probe
-    selection is driver arithmetic, pruning is static partition
-    elimination, and per-query cost returns to the probed buckets' scan.
-    Results are IDENTICAL to the DataFrame path (same integer bucket
-    arithmetic, same round-4 cosine ranking; equivalence-tested). Keep
-    the DataFrame path for in-plan composition (query vectors that are
-    themselves query results).
+    ``multiprobe=True`` (the default) probes the query's bucket plus every
+    Hamming-1 neighbor (Lv et al., multi-probe LSH): 1+num_planes of the
+    2^num_planes partitions. The single-bucket probe measured recall@5 =
+    0.0 at sf0.01 and 0.2 at sf0.1; multiprobe 0.4 / 0.6 (commit 678d883).
+
+    Static pruning is the reason for the driver-side bucket (commit
+    a31aae7, 1M vectors, 1024 partitions): bucketing the query in-plan
+    planned the query subtree five times and pruned through a
+    dynamic-partition-pruning subquery, ~2.4 s of per-query fixed cost
+    whatever the probes touched.
 
     ``index``: the index PATH, or — the steady-state serving shape — a
-    PRE-RESOLVED ``spark.read.parquet(path)`` DataFrame reused across
-    queries. Measured at the 1M-vector/1024-partition probe: partition
-    DISCOVERY on a fresh read costs ~1.2-3.3 s per query; against a
-    reused relation the same pruned query runs in ~0.14 s. A serving
-    loop resolves once per index generation and serves many queries —
-    per-query cost is then genuinely the probed buckets' scan.
+    PRE-RESOLVED relation reused across queries (``spark.read.parquet``
+    of the index, or a serve loop's tombstone-filtered segment union).
+    At the same 1M-vector index, partition DISCOVERY on a fresh read cost
+    ~1.2-3.3 s per query; against a reused relation the pruned query ran
+    in ~0.14 s (commit a31aae7).
 
     ``dim`` must match :func:`write_vector_index_int8`'s build dim (both
     default 64) and is validated against the query's length: the driver-side
-    bucket arithmetic has no per-row size guard (unlike the DataFrame path,
-    where lsh_bucket_int8 raises in-plan), so a wrong-dim query would
+    bucket arithmetic has no per-row size guard, so a wrong-dim query would
     otherwise probe arbitrary buckets while cosine's zip_with null-pads —
     silent NULL sims instead of a loud error."""
     import math
@@ -1528,7 +1467,7 @@ def ivf_topk_served(
     """Serve IVF ANN from the on-disk inverted lists: pick the ``nprobe``
     centroids nearest the query (broadcast, in-plan), then read ONLY those
     ``cent_id`` partitions (dynamic partition pruning), exact-score the
-    candidates. The float-tier twin of :func:`ann_lsh_quantized_served` —
+    candidates. The float-tier twin of :func:`ann_lsh_served_vec` —
     rows-only in the correctness harness like the in-session IVF, recall
     asserted in tests."""
     probes = (

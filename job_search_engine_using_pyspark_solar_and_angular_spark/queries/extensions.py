@@ -1958,16 +1958,17 @@ def ext_ann_tier_recall(spark, sf_dir):
     side by side — the evaluation table an index-tuning pass reads:
     single-bucket integer LSH (cheapest probe, KEPT for contrast — NOT the
     served default precisely because this ladder showed it at recall 0.0
-    at sf0.01), Hamming-1 multi-probe (the ann_lsh_quantized_served
-    DEFAULT: recall 0.4/0.6 at ~5x probe cost), int8 coarse->rerank
+    at sf0.01), Hamming-1 multi-probe (the ann_lsh_served_vec DEFAULT:
+    recall 0.4/0.6 at ~5x probe cost, commit 678d883), int8 coarse->rerank
     (highest recall, full coarse scan), and the PQ shortlist->rerank
-    funnel (compressed-tier recall — 1.0/0.8 at sf0.01/0.1 since the r6
-    m=16/ksub=32 fix). The LSH leg deliberately STAYS Hamming-1: the r6
-    sweep (4 queries x 3 scales, numpy mirror) measured Hamming-2 at 4
-    planes scanning ~70% of the corpus for +0.2 recall — pruning gone —
-    and recall FALLING as planes grow (P=6 H2: 0.2-0.6 at 35% scanned;
-    P=8 H2: 0.2-0.4), because sign-projection buckets carry little signal
-    on near-uniform-similarity synthetic embeddings; the high-recall
+    funnel (compressed-tier recall — 1.0/0.8 at sf0.01/0.1 since the
+    m=16/ksub=32 fix). The LSH leg deliberately STAYS Hamming-1: a sweep
+    (4 queries x 3 scales, numpy mirror; both figures commit 469800f)
+    measured Hamming-2 at 4 planes scanning ~70% of the corpus for +0.2
+    recall — pruning gone — and recall FALLING as planes grow (P=6 H2:
+    0.2-0.6 at 35% scanned; P=8 H2: 0.2-0.4), because sign-projection
+    buckets carry little signal on near-uniform-similarity synthetic
+    embeddings; the high-recall
     path at this corpus shape is the PQ funnel, not wider LSH probes.
     Composes the already-verified tier queries; the oracle composes
     their SQL."""
@@ -2444,11 +2445,13 @@ def ext_cohort_retention(spark, sf_dir):
 def ext_phrase_search(spark, sf_dir):
     """Positional phrase search — the Lucene phrase-query surface: docs where
     'window' is immediately followed by 'join', ranked by occurrence count
-    (search/api.py phrase_search)."""
-    from ..search.api import phrase_search
+    (search/index.py phrase_from_postings over the documents' positional
+    postings — the code the /phrase route and a persisted positional index
+    serve)."""
+    from ..search.index import build_positional_postings, phrase_from_postings
 
     d = load_table(spark, sf_dir, "documents")
-    return phrase_search(d, ["window", "join"], k=10)
+    return phrase_from_postings(build_positional_postings(d), ["window", "join"], k=10)
 
 
 @query("ext_search_and")

@@ -15,8 +15,6 @@ only (k rows cross the driver boundary, never the corpus).
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -129,69 +127,6 @@ def search_user(
     )
 
 
-def search_vector(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    multiprobe: bool = True,
-    num_planes: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Vector search against the on-disk bucket-partitioned int8 LSH index
-    (``similarity.write_vector_index_int8``) — the vector twin of the BM25
-    request path: one served query = the probed buckets' files only
-    (dynamic partition pruning). ``multiprobe`` widens the probe set to
-    the Hamming-1 buckets (recall ladder measured by
-    ext_ann_tier_recall). Returns (vec_id, sim) top-k; wrap with
-    :func:`to_envelope` for the REST shape.
-
-    ``dim`` defaults to ``len(query_vec)`` and must match the dim the index
-    was written with — a mismatched index raises via lsh_bucket_int8's
-    per-row size guard rather than silently probing the wrong bucket."""
-    from pyspark.sql import functions as F
-
-    from ..functions.vectors import cosine
-    from ..operators.similarity import lsh_bucket_int8, quantize_int8
-
-    if dim is None:
-        dim = len(query_vec)
-    q = spark.createDataFrame(
-        [(0, [float(x) for x in query_vec])], "vec_id long, embedding array<double>"
-    )
-    qb = lsh_bucket_int8(quantize_int8(q), num_planes=num_planes, dim=dim)
-    probes = F.array(F.col("bucket"))
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(num_planes)],
-        )
-    probe_df = qb.select(F.explode(probes).alias("qbucket"))
-    qv = q.select(F.col("embedding").alias("qv"))
-    idx = spark.read.parquet(index_path)
-    return (
-        idx.join(F.broadcast(probe_df), idx["bucket"] == F.col("qbucket"))
-        .select("vec_id", "embedding")
-        .distinct()
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            (F.round(cosine(F.col("embedding"), F.col("qv")), 4) + F.lit(0.0)).alias(
-                "sim"
-            ),
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def to_envelope(df: DataFrame, k: int | None = None) -> dict[str, Any]:
-    """Collect <=k rows into the reference's REST envelope shape
-    (``api/Handler.java:42-64``, ``constants/APIConstants.java:5-17``)."""
-    rows = [r.asDict(recursive=True) for r in (df.limit(k) if k else df).collect()]
-    return {"count": len(rows), "data": rows, "status_code": 200, "message": "OK"}
-
-
 def tokenize_query(query: str) -> list[str]:
     """Driver-side mirror of functions.text.tokenize_normalized for query
     strings (tiny, so plain Python is fine here)."""
@@ -208,10 +143,7 @@ def suggest_next_token(
     c(prev next) / c(prev ·). One token-stream pass (bigram counts filtered
     to the prev token — the filter pushes into the aggregation), top-k via
     TakeOrderedAndProject. Deterministic ties on the token."""
-    from pyspark.sql import functions as F
-
     from ..functions.hashing import token_ngrams
-    from ..functions.text import tokenize_normalized
     from ..io import ensure_parallelism
 
     toks = ensure_parallelism(docs).select(
@@ -243,9 +175,6 @@ def autocomplete(
     starting with ``prefix`` by frequency. A served deployment would read
     the token-sorted postings (``search.index.write_index``) instead of
     re-tokenizing: a prefix is a token range in those sorted files."""
-    from pyspark.sql import functions as F
-
-    from ..functions.text import tokenize_normalized
     from ..io import ensure_parallelism
 
     toks = ensure_parallelism(docs).select(
@@ -257,46 +186,6 @@ def autocomplete(
         .agg(F.count("*").alias("c"))
         .select("token", F.col("c").cast("long").alias("c"))
         .orderBy(F.col("c").desc(), "token")
-        .limit(k)
-    )
-
-
-def phrase_search(
-    docs: DataFrame,
-    phrase: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact phrase matching via POSITIONAL postings — the Lucene/Solr
-    phrase-query capability (``"window join"``) the keyword surfaces can't
-    express: term i of the phrase must occur at position p+i of the same
-    document.
-
-    Plan: one posexplode to (doc, token, pos), pruned to the phrase's terms
-    BEFORE any shuffle (the same postings-pruning discipline as BM25 —
-    the scan drops every non-phrase token); then one self-equi-join per
-    adjacent term pair on (doc, expected position) — never a positions
-    array crossing the shuffle — and a per-doc occurrence count. Returns
-    (doc_id, n_occurrences) top-k by count desc, id asc."""
-    from ..functions.text import tokenize_normalized
-
-    toks = docs.select(
-        F.col(id_col), F.posexplode(tokenize_normalized(text_col)).alias("pos", "tok")
-    ).filter(F.col("tok").isin(list(set(phrase))))
-    first = toks.filter(F.col("tok") == phrase[0]).select(
-        id_col, F.col("pos").alias("p0")
-    )
-    matched = first
-    for i, term in enumerate(phrase[1:], start=1):
-        nxt = toks.filter(F.col("tok") == term).select(
-            id_col, (F.col("pos") - i).alias("p0")
-        )
-        matched = matched.join(nxt, [id_col, "p0"])
-    return (
-        matched.groupBy(id_col)
-        .agg(F.count("*").alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), F.col(id_col))
         .limit(k)
     )
 
@@ -313,8 +202,6 @@ def search_all_terms(
     to the query terms, one distinct, one per-doc count — a doc matches iff
     it covers all |terms| distinct terms. Returns (doc_id, n_terms) top-k
     ordered by doc_id (all matches tie on n_terms by construction)."""
-    from ..functions.text import tokenize_normalized
-
     uniq = sorted(set(terms))
     toks = (
         docs.select(
@@ -474,11 +361,35 @@ def search_keyword_corrected(
     """BM25 search with did-you-mean correction: tokenize, correct each
     term against the index vocabulary, then the ordinary ranked retrieval.
     Returns (results_df, corrected_terms)."""
-    from .bm25 import bm25_search
-
     terms = tokenize_query(query)
     corrected = correct_query_terms(spark, index, terms, max_dist=max_dist)
     return bm25_search(spark, index, corrected, k=k), corrected
+
+
+def _fuse_rrf(keyword: DataFrame, vector: DataFrame, k: int) -> DataFrame:
+    """Reciprocal-Rank Fusion of two ranked lists, keyword (doc_id, score)
+    and vector (doc_id, sim): each is ranked 1..n by (score desc, doc_id),
+    and the full-outer merge on doc_id scores 1/(60+rb) + 1/(60+rv), a
+    missing rank counting 0. Returns (doc_id, rb, rv, rrf) top-k by
+    (rrf desc, doc_id). Ranks are integers (ties broken on id), so the
+    fusion is engine-stable; the lists are <= pool rows each, so the rank
+    windows and the merge are tiny while each leg keeps its own plan."""
+    from pyspark.sql import Window
+
+    def ranked(df: DataFrame, score: str, rank: str) -> DataFrame:
+        w = Window.orderBy(F.col(score).desc(), F.col("doc_id"))
+        return df.select("doc_id", F.row_number().over(w).cast("long").alias(rank))
+
+    rrf = F.coalesce(1.0 / (F.lit(60) + F.col("rb")), F.lit(0.0)) + F.coalesce(
+        1.0 / (F.lit(60) + F.col("rv")), F.lit(0.0)
+    )
+    return (
+        ranked(keyword, "score", "rb")
+        .join(ranked(vector, "sim", "rv"), "doc_id", "full_outer")
+        .select("doc_id", "rb", "rv", F.round(rrf, 6).alias("rrf"))
+        .orderBy(F.col("rrf").desc(), F.col("doc_id"))
+        .limit(k)
+    )
 
 
 def search_hybrid_served(
@@ -493,37 +404,18 @@ def search_hybrid_served(
 ) -> DataFrame:
     """The fully-SERVED hybrid front door: BM25 from the on-disk token-sorted
     postings index (``search.index.read_index``) fused with multiprobe
-    vector search from the on-disk LSH index (``search_vector``) by the
-    same RRF arithmetic as :func:`search_hybrid`. Per-request cost is
-    posting-list reads + probed-bucket files — both index builds are paid
-    at index time; no corpus scan serves a request."""
-    from pyspark.sql import Window
-
-    from .bm25 import bm25_search
+    vector search from the on-disk int8-LSH index
+    (``similarity.ann_lsh_served_vec``) by :func:`search_hybrid`'s fusion.
+    Per-request cost is posting-list reads + probed-bucket files — both
+    index builds are paid at index time; no corpus scan serves a request."""
+    from ..operators.similarity import ann_lsh_served_vec
     from .index import read_index
 
-    idx = read_index(spark, index_base)
-    bm = bm25_search(spark, idx, tokenize_query(query), k=pool)
-    wb = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
-    bmr = bm.select("doc_id", F.row_number().over(wb).cast("long").alias("rb"))
-
-    vec = search_vector(
+    bm = bm25_search(spark, read_index(spark, index_base), tokenize_query(query), k=pool)
+    vec = ann_lsh_served_vec(
         spark, vector_index_path, query_vec, k=pool, num_planes=num_planes
     )
-    wv = Window.orderBy(F.col("sim").desc(), F.col("vec_id"))
-    vr = vec.select(
-        F.col("vec_id").alias("doc_id"),
-        F.row_number().over(wv).cast("long").alias("rv"),
-    )
-    rrf = F.coalesce(1.0 / (F.lit(60) + F.col("rb")), F.lit(0.0)) + F.coalesce(
-        1.0 / (F.lit(60) + F.col("rv")), F.lit(0.0)
-    )
-    return (
-        bmr.join(vr, "doc_id", "full_outer")
-        .select("doc_id", F.round(rrf, 6).alias("rrf"))
-        .orderBy(F.col("rrf").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    return _fuse_rrf(bm, vec.withColumnRenamed("vec_id", "doc_id"), k)
 
 
 def search_hybrid(
@@ -540,16 +432,11 @@ def search_hybrid(
     """Hybrid retrieval endpoint: BM25 over the query text fused with
     cosine over a query vector by Reciprocal-Rank Fusion (1/(60+rank)) —
     the RAG-stack front door. Both candidate pools are size ``pool``; the
-    fusion runs over ≤2·pool rows while each retrieval keeps its
-    distributed plan."""
-    from pyspark.sql import Window
-
+    fusion (:func:`_fuse_rrf`) runs over <= 2·pool rows while each
+    retrieval keeps its distributed plan."""
     from ..functions.vectors import cosine
 
-    terms = tokenize_query(query)
-    bm = bm25_search(spark, index, terms, k=pool)
-    wb = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
-    bmr = bm.select("doc_id", F.row_number().over(wb).cast("long").alias("rb"))
+    bm = bm25_search(spark, index, tokenize_query(query), k=pool)
     qv = embeddings.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("qv")
     )
@@ -565,14 +452,4 @@ def search_hybrid(
         .orderBy(F.col("sim").desc(), F.col("doc_id"))
         .limit(pool)
     )
-    wv = Window.orderBy(F.col("sim").desc(), F.col("doc_id"))
-    vr = cos.select("doc_id", F.row_number().over(wv).cast("long").alias("rv"))
-    rrf = F.coalesce(1.0 / (F.lit(60) + F.col("rb")), F.lit(0.0)) + F.coalesce(
-        1.0 / (F.lit(60) + F.col("rv")), F.lit(0.0)
-    )
-    return (
-        bmr.join(vr, "doc_id", "full_outer")
-        .select("doc_id", "rb", "rv", F.round(rrf, 6).alias("rrf"))
-        .orderBy(F.col("rrf").desc(), F.col("doc_id"))
-        .limit(k)
-    )
+    return _fuse_rrf(bm, cos, k)

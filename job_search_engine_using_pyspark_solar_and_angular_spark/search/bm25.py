@@ -119,6 +119,21 @@ def bm25_search(
     return ranked.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
 
+def _tfidf_weights(docs, id_col: str, text_col: str) -> DataFrame:
+    """Every posting of the in-session index (``build_index(cache=True)``)
+    with its TF-IDF weight ``tfidf = tf · ln(n_docs / df)``: postings ⋈
+    broadcast(term_stats) × the broadcast 1-row document count."""
+    from .index import build_index
+
+    idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
+    n_docs = idx.doc_stats.agg(F.count("*").alias("n"))
+    return (
+        idx.postings.join(F.broadcast(idx.term_stats), "token")
+        .crossJoin(F.broadcast(n_docs))
+        .withColumn("tfidf", F.col("tf") * F.log(F.col("n") / F.col("df")))
+    )
+
+
 def tfidf_keywords(
     docs, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ):
@@ -133,17 +148,8 @@ def tfidf_keywords(
     sort), then ordered collect. Deterministic: ties break on the term."""
     from pyspark.sql import Window
 
-    from .index import build_index
-
-    idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
-    n_docs = idx.doc_stats.agg(F.count("*").alias("n"))
-    scored = (
-        idx.postings.join(F.broadcast(idx.term_stats), "token")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            "score",
-            F.round(F.col("tf") * F.log(F.col("n") / F.col("df")), 6),
-        )
+    scored = _tfidf_weights(docs, id_col, text_col).withColumn(
+        "score", F.round(F.col("tfidf"), 6)
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("token")
@@ -188,21 +194,11 @@ def more_like_this(
     broadcast(target) + one doc_id shuffle; norms reuse the same persisted
     weight table; the final top-k is TakeOrderedAndProject. Never a
     doc × doc comparison."""
-    from .index import build_index
-
-    idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
-    n_docs = idx.doc_stats.agg(F.count("*").alias("n"))
     w = persist(
-        idx.postings.join(F.broadcast(idx.term_stats), "token")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
+        _tfidf_weights(docs, id_col, text_col).select(
             "doc_id",
             "token",
-            F.round(
-                F.col("tf") * F.log(F.col("n") / F.col("df")) * scale, 0
-            )
-            .cast("long")
-            .alias("w"),
+            F.round(F.col("tfidf") * scale, 0).cast("long").alias("w"),
         )
     )
     target = w.filter(F.col("doc_id") == target_id).select(

@@ -42,19 +42,19 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.similarity import ann_lsh_served_vec
 from .api import (  # noqa: F401 (search_keyword: the one-plan form of /query)
     autocomplete,
-    phrase_search,
     rank_keyword,
     related_docs,
     search_facets,
     search_hashtag,
     search_keyword,
     search_user,
-    search_vector,
     suggest_next_token,
     tokenize_query,
 )
+from .index import build_positional_postings, phrase_from_postings
 
 _log = logging.getLogger(__name__)
 
@@ -328,20 +328,24 @@ class SearchService:
 
     # -- extension routes (capabilities the engine adds) ----------------
     def vector(self, vec: list[float], k: int | None = None) -> dict[str, Any]:
+        """Top-k (vec_id, sim) from the on-disk int8-LSH index
+        (``similarity.ann_lsh_served_vec``). A query whose length is not
+        the index's build dim raises, so it gets the error envelope."""
         if self.vector_index_path is None:
             raise ValueError("vector route not configured (no vector index)")
-        hits = search_vector(
-            self.spark, self.vector_index_path, vec, k=k or self.k
+        data = _rows(
+            ann_lsh_served_vec(self.spark, self.vector_index_path, vec, k=k or self.k)
         )
-        data = _rows(hits)
         return _ok({COUNT: len(data), DATA: data})
 
     def phrase(self, query: str, k: int | None = None) -> dict[str, Any]:
-        """Exact phrase matching over positional postings."""
+        """Exact phrase matching over the docs' positional postings — the
+        same code that serves a persisted positional index."""
         terms = tokenize_query(query)
         if not terms:
             raise ValueError("empty phrase")
-        data = _rows(phrase_search(self._snap.docs, terms, k=k or self.k))
+        pos = build_positional_postings(self._snap.docs)
+        data = _rows(phrase_from_postings(pos, terms, k=k or self.k))
         return _ok({COUNT: len(data), DATA: data})
 
     def related(self, doc_id: int, k: int | None = None) -> dict[str, Any]:

@@ -95,11 +95,18 @@ def build_index(
     postings = toks.groupBy("token", "doc_id", "doc_len").agg(
         F.count("*").alias("tf")
     )
+    return _over_postings(postings, cache)
+
+
+def _over_postings(postings: DataFrame, cache: bool = False) -> SearchIndex:
+    """The index whose doc_stats (doc_id, doc_len) and term_stats
+    (token, df) are aggregates of ``postings``. ``cache=True`` persists the
+    postings and doc_stats (doc_stats feeds corpus_stats and non-search
+    consumers)."""
     if cache:
         postings = persist(postings)
     doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     if cache:
-        # doc_stats feeds corpus_stats (avg/count) and non-search consumers
         doc_stats = persist(doc_stats)
     term_stats = postings.groupBy("token").agg(F.count("*").alias("df"))
     return SearchIndex(postings=postings, doc_stats=doc_stats, term_stats=term_stats)
@@ -122,10 +129,7 @@ def refresh_index(
     fresh = build_index(changed_docs, id_col, text_col)
     changed_ids = changed_docs.select(F.col(id_col).alias("doc_id")).distinct()
     kept = index.postings.join(F.broadcast(changed_ids), "doc_id", "left_anti")
-    postings = kept.unionByName(fresh.postings)
-    doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    term_stats = postings.groupBy("token").agg(F.count("*").alias("df"))
-    return SearchIndex(postings=postings, doc_stats=doc_stats, term_stats=term_stats)
+    return _over_postings(kept.unionByName(fresh.postings))
 
 
 def delta_refresh(
@@ -159,12 +163,11 @@ def delta_refresh(
     )
     fresh = build_index(rebuild, id_col, text_col)
     kept = index.postings.join(F.broadcast(to_drop), "doc_id", "left_anti")
-    postings = kept.unionByName(fresh.postings).select(
-        *fresh.postings.columns  # canonical (token, doc_id, ...) order
+    return _over_postings(
+        kept.unionByName(fresh.postings).select(
+            *fresh.postings.columns  # canonical (token, doc_id, ...) order
+        )
     )
-    doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    term_stats = postings.groupBy("token").agg(F.count("*").alias("df"))
-    return SearchIndex(postings=postings, doc_stats=doc_stats, term_stats=term_stats)
 
 
 def write_token_sorted(df: DataFrame, path: str, buckets: int, *keys: str) -> None:
@@ -227,9 +230,12 @@ def phrase_from_postings(
 ) -> DataFrame:
     """Phrase matching against (served) positional postings: prune to
     the phrase's terms, then one (doc_id, expected-position) equi-join per
-    adjacent pair — identical semantics to search.api.phrase_search computed
-    from raw docs (pinned by test), but the per-request cost is posting
-    reads, not corpus tokenization."""
+    adjacent pair. Over :func:`build_positional_postings` of the docs it is
+    the in-session phrase query (``ext_phrase_search``, the ``/phrase``
+    route); over a persisted positional index (:func:`write_positional`)
+    the per-request cost is posting reads, not corpus tokenization — the
+    same rows either way (pinned by test). Returns (doc_id,
+    n_occurrences) top-k by count desc, id asc."""
     pruned = positional.filter(F.col("token").isin(list(set(phrase))))
     matched = pruned.filter(F.col("token") == phrase[0]).select(
         "doc_id", F.col("pos").alias("p0")

@@ -536,55 +536,23 @@ def read_served_index(
     return _resolve(spark, p, rows)[0]
 
 
-def _python_probe_buckets(
-    query_vec: list[float], num_planes: int, dim: int, multiprobe: bool
-) -> list[int]:
-    """The query's int8-LSH bucket computed driver-side in pure Python —
-    bit-identical to lsh_bucket_int8's plan (same IEEE double quantization,
-    same integer Rademacher dot products; Python==Spark pinned by
-    test_lsh_bucket_int8_matches_python_reference) — so the served read
-    uses STATIC partition pruning: the probe list is literal in the plan."""
-    import math
-
-    from ..operators.similarity import rademacher_plane
-
-    x = [float(v) for v in query_vec]
-    mn, mx = min(x), max(x)
-    if mx == mn:
-        codes = [0] * len(x)
-    else:
-        codes = [
-            int(math.floor((v - mn) * 255.0 / (mx - mn) + 0.5)) - 128 for v in x
-        ]
-    if len(codes) != dim:
-        raise ValueError(f"query dim {len(codes)} != index dim {dim}")
-    bucket = 0
-    for j in range(num_planes):
-        plane = rademacher_plane(j, dim)
-        if sum(c * r for c, r in zip(codes, plane)) >= 0:
-            bucket |= 1 << j
-    probes = [bucket]
-    if multiprobe:
-        probes += [bucket ^ (1 << j) for j in range(num_planes)]
-    return probes
-
-
 def vector_search_served(
     spark: SparkSession,
     base: str,
     query_vec: list[float],
     k: int = 5,
     num_planes: int = 4,
-    dim: int | None = None,
+    dim: int = 64,
     multiprobe: bool = True,
 ) -> DataFrame:
-    """Served ANN over the segment layout: probe buckets computed driver-side
-    (static partition pruning on every segment dir), tombstone-filtered,
-    exact cosine rerank of the probed candidates. Returns (doc_id, sim)."""
-    from ..functions.vectors import cosine
+    """Served ANN over the segment layout: ``similarity.ann_lsh_served_vec``
+    over the manifest's tombstone-filtered vector segments — static
+    partition pruning on every segment dir, exact cosine rerank of the
+    probed candidates. Returns (doc_id, sim). ``num_planes`` and ``dim``
+    are :func:`serve_batch`'s build parameters; a query of another length
+    raises."""
+    from ..operators.similarity import ann_lsh_served_vec
 
-    if dim is None:
-        dim = len(query_vec)
     p = _paths(base)
     segs = [r["seg"] for r in _manifest(spark, p)]
     if not segs:
@@ -595,19 +563,10 @@ def vector_search_served(
             f"no vector segments under {base}: the serve loop ran without "
             "vec_col, so there is no ANN tier to query"
         )
-    probes = _python_probe_buckets(query_vec, num_planes, dim, multiprobe)
-    cands = _alive(
-        vecs.filter(F.col("bucket").isin(probes)),
-        _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1]),
-    )
-    qv = F.array(*[F.lit(float(v)) for v in query_vec])
-    return (
-        cands.select(
-            "doc_id",
-            (F.round(cosine(F.col("embedding"), qv), 4) + F.lit(0.0)).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col("doc_id"))
-        .limit(k)
+    alive = _alive(vecs, _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1]))
+    return ann_lsh_served_vec(
+        spark, alive, query_vec, k=k, num_planes=num_planes, id_col="doc_id",
+        multiprobe=multiprobe, dim=dim,
     )
 
 

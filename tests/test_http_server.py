@@ -358,32 +358,52 @@ def test_refresh_across_index_publish_without_restart(spark, tmp_path):
         assert body["count"] == 1 and body["data"][0]["tweet"]["doc_id"] == 2
 
 
-def test_vector_route(spark, tmp_path):
-    """The vector extension route against a real on-disk LSH index."""
+@pytest.fixture(scope="module")
+def vector_service(spark, tmp_path_factory):
+    """The vector route over a real on-disk LSH index of the embeddings,
+    and the first embedding as a query."""
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         write_vector_index_int8,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "vecidx")
+    path = str(tmp_path_factory.mktemp("vec") / "vecidx")
     write_vector_index_int8(emb, path)
     docs = load_table(spark, SF_DIR, "documents")
-    svc = SearchService(
-        spark, None, docs, vector_index_path=path, k=5
-    )
     qv = emb.orderBy("vec_id").first()["embedding"]
+    return SearchService(spark, None, docs, vector_index_path=path, k=5), qv
+
+
+def test_vector_route(vector_service):
+    """The vector extension route against a real on-disk LSH index; a
+    query shorter than the index's dim gets the in-band error envelope,
+    not rows with null sims."""
+    svc, qv = vector_service
     with serve(svc) as handle:
-        status, _, body = _get(
-            handle.url
-            + "/api/search/vector?vec="
-            + ",".join(f"{x:.6f}" for x in qv)
-            + "&k=5"
-        )
+        url = handle.url + "/api/search/vector?k=5&vec="
+        status, _, body = _get(url + ",".join(f"{x:.6f}" for x in qv))
+        short_status, _, short = _get(url + ",".join(f"{x:.6f}" for x in qv[:10]))
     assert status == 200 and body["status_code"] == 200
     assert body["count"] == len(body["data"]) == 5
     sims = [h["sim"] for h in body["data"]]
     assert sims == sorted(sims, reverse=True)
     assert body["data"][0]["sim"] >= 0.99  # the query vector finds itself
+    assert short_status == 200
+    assert short == {"status_code": 500, "message": "Internal Server Error"}
+
+
+def test_served_vector_request_job_count(vector_service):
+    """Deterministic cost counter for one served vector request, like the
+    keyword pin below: 2 Spark jobs — the index relation's parquet schema
+    read and the probed buckets' top-k (the query is bucketed driver-side
+    and pruned statically). Bucketing it in-plan, with a dynamic-pruning
+    subquery and a distinct over the candidates, ran 5."""
+    svc, qv = vector_service
+    svc.vector(qv)  # warm: the same jobs, first-call planning
+    with profiled("one served vector request") as led:
+        body = svc.vector(qv)
+    assert body["count"] == 5 and body["data"][0]["sim"] >= 0.99
+    assert led.jobs == 2
 
 
 def test_failed_request_is_logged_and_keeps_the_envelope(server, caplog):

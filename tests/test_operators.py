@@ -263,12 +263,16 @@ def test_embedding_near_dups_bucket_cap_bounds_skew(spark):
 
 def test_served_vector_index_prunes_partitions_and_matches(spark, tmp_path):
     """The on-disk ANN tier: write_vector_index_int8 partitions by integer
-    LSH bucket; a served query must (a) return exactly the in-session tier
-    results — the DEFAULT is Hamming-1 multiprobe (== ext_ann_lsh_multiprobe;
-    the single-bucket probe measured recall@5 = 0.0 at sf0.01, so it is
-    opt-in via multiprobe=False and must equal ext_ann_lsh_quantized) — and
-    (b) reach the scan through DYNAMIC PARTITION PRUNING on the bucket
-    column in BOTH modes: partition pruning IS the index."""
+    LSH bucket, and its one read path (ann_lsh_served_vec: the query as a
+    vector, driver-side quantize + bucket) must (a) return exactly the
+    in-session tier results — the DEFAULT is Hamming-1 multiprobe
+    (== ext_ann_lsh_multiprobe; the single-bucket probe measured recall@5 =
+    0.0 at sf0.01, so it is opt-in via multiprobe=False and must equal
+    ext_ann_lsh_quantized) — and (b) reach the scan through a STATIC
+    partition filter on the bucket column in BOTH modes, with no
+    dynamic-pruning subquery: partition pruning IS the index."""
+    import re
+
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
         QUERIES,
     )
@@ -276,18 +280,10 @@ def test_served_vector_index_prunes_partitions_and_matches(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "vecidx")
     similarity.write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
-    for served, twin in (
-        (
-            similarity.ann_lsh_quantized_served(spark, path, q, k=5),
-            "ext_ann_lsh_multiprobe",
-        ),
-        (
-            similarity.ann_lsh_quantized_served(spark, path, q, k=5, multiprobe=False),
-            "ext_ann_lsh_quantized",
-        ),
-    ):
+    for mp, twin in ((True, "ext_ann_lsh_multiprobe"), (False, "ext_ann_lsh_quantized")):
+        served = similarity.ann_lsh_served_vec(spark, path, qv, k=5, multiprobe=mp)
         got = [(r["vec_id"], r["sim"]) for r in served.collect()]
         want = [
             (r["vec_id"], r["sim"]) for r in QUERIES[twin](spark, SF_DIR).collect()
@@ -295,42 +291,10 @@ def test_served_vector_index_prunes_partitions_and_matches(spark, tmp_path):
         assert got == want and len(got) == 5, twin
 
         plan = served._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruningexpression" in plan, plan[:1500]
-
-
-def test_ann_lsh_served_vec_matches_dataframe_path(spark, tmp_path):
-    """The STATIC-probe serving path (query as a vector, driver-side
-    quantize+bucket, isin partition filter — the r6 fixed-cost fix) must
-    return EXACTLY the DataFrame path's results in both probe modes, and
-    its scan must prune via a STATIC PartitionFilter (no DPP subquery, no
-    query-side jobs)."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "vecidx")
-    similarity.write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-
-    for mp in (True, False):
-        served = similarity.ann_lsh_served_vec(
-            spark, path, qv, k=5, multiprobe=mp
-        )
-        got = [(r["vec_id"], r["sim"]) for r in served.collect()]
-        want = [
-            (r["vec_id"], r["sim"])
-            for r in similarity.ann_lsh_quantized_served(
-                spark, path, q, k=5, multiprobe=mp
-            ).collect()
-        ]
-        assert got == want and len(got) == 5, f"multiprobe={mp}"
-
-        plan = served._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruningexpression" not in plan
-        import re
-
+        assert "dynamicpruningexpression" not in plan, plan[:1500]
         # multiprobe folds to IN/INSET; a single probe folds to equality —
         # either way the bucket predicate must sit in PartitionFilters
-        pf = re.search(r"PartitionFilters: \[[^\]]*bucket", plan)
-        assert pf is not None, plan[-1500:]
+        assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan[-1500:]
 
 
 def test_served_ivf_index_matches_in_session(spark, tmp_path):

@@ -11,11 +11,13 @@ from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
     search_hashtag,
     search_keyword,
     search_user,
-    to_envelope,
     tokenize_query,
 )
 from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
     bm25_search,
+)
+from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
+    SearchService,
 )
 from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import (
     build_index,
@@ -37,17 +39,18 @@ def index(spark, docs):
 
 
 def test_keyword_search_envelope(spark, docs, index):
-    """R1+R8: free-text query -> BM25 top-k joined to docs -> envelope
-    (reference ``api/Handler.java:33-74``)."""
-    hits = search_keyword(spark, index, docs, None, "spark join", k=10)
-    env = to_envelope(hits)
-    assert env["status_code"] == 200
-    assert env["count"] == len(env["data"]) <= 10
-    # every hit carries both score and the full document row
-    for row in env["data"]:
-        assert "score" in row and "text" in row and "doc_id" in row
-    # ranked descending
-    scores = [r["score"] for r in env["data"]]
+    """R1+R8: free-text query -> BM25 top-k joined to docs -> the served
+    envelope (reference ``api/Handler.java:33-74``): its tweets are
+    search_keyword's rows, in order."""
+    env = SearchService(spark, index, docs, k=10).query("spark join")
+    assert env["status_code"] == 200 and env["message"] == "Success"
+    assert 0 < env["count"] == len(env["data"]) <= 10
+    tweets = [h["tweet"] for h in env["data"]]
+    hits = search_keyword(spark, index, docs, None, "spark join", k=10).collect()
+    assert tweets == [r.asDict(recursive=True) for r in hits]
+    # every hit carries both score and the full document row, ranked descending
+    assert all({"score", "text", "doc_id"} <= set(t) for t in tweets)
+    scores = [t["score"] for t in tweets]
     assert scores == sorted(scores, reverse=True)
 
 
@@ -230,12 +233,10 @@ def test_tfidf_keywords_surface_rare_terms(spark):
 
 def test_phrase_from_served_index_matches_direct(spark, tmp_path):
     """Phrase search against the persisted positional postings must
-    return exactly what the direct-from-docs computation returns."""
-    from pyspark.sql import functions as F
-
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
-    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
-        phrase_search,
+    return exactly what the in-session phrase query returns: the
+    oracle-checked ext_phrase_search rows, and the /phrase route's."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
+        QUERIES,
     )
     from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import (
         build_positional_postings,
@@ -243,15 +244,14 @@ def test_phrase_from_served_index_matches_direct(spark, tmp_path):
         write_positional,
     )
 
-    from .conftest import SF_DIR
-
     d = load_table(spark, SF_DIR, "documents")
-    pos = build_positional_postings(d)
-    write_positional(pos, str(tmp_path / "pos"), buckets=8)
+    write_positional(build_positional_postings(d), str(tmp_path / "pos"), buckets=8)
     served = spark.read.parquet(str(tmp_path / "pos"))
     got = sorted(map(tuple, phrase_from_postings(served, ["window", "join"]).collect()))
-    want = sorted(map(tuple, phrase_search(d, ["window", "join"]).collect()))
+    want = sorted(map(tuple, QUERIES["ext_phrase_search"](spark, SF_DIR).collect()))
     assert got == want and len(got) > 0
+    route = SearchService(spark, None, d).phrase("window join")["data"]
+    assert sorted((r["doc_id"], r["n_occurrences"]) for r in route) == want
     plan = phrase_from_postings(served, ["window", "join"])._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan  # a real join ran
 
@@ -259,14 +259,8 @@ def test_phrase_from_served_index_matches_direct(spark, tmp_path):
 def test_related_docs_envelope(spark):
     """MLT endpoint: related docs for doc 1 — k rows, full doc columns, the
     target itself excluded."""
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
-    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
-        related_docs,
-        to_envelope,
-    )
-
     docs = load_table(spark, SF_DIR, "documents")
-    env = to_envelope(related_docs(docs, 1, k=5))
+    env = SearchService(spark, None, docs).related(1, k=5)
     assert env["count"] == 5 and env["status_code"] == 200
     assert all(row["doc_id"] != 1 for row in env["data"])
     assert all("text" in row and "sim" in row for row in env["data"])
@@ -297,20 +291,13 @@ def test_search_hybrid_contains_both_modalities(spark):
 
 def test_search_vector_served_envelope(spark, tmp_path):
     """Vector search request path: on-disk LSH index -> multiprobe query ->
-    top-k -> REST envelope; multiprobe results must equal the in-session
+    top-k -> REST envelope; its rows must equal the in-session
     ext_ann_lsh_multiprobe registry query (same probes, same ranking)."""
-    import pyspark.sql.functions as F
-
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         write_vector_index_int8,
     )
     from job_search_engine_using_pyspark_solar_and_angular_spark.queries.declared import (
         QUERIES,
-    )
-    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
-        search_vector,
-        to_envelope,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -318,32 +305,32 @@ def test_search_vector_served_envelope(spark, tmp_path):
     write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
-    res = search_vector(spark, path, qvec, k=5)
-    got = [(r["vec_id"], r["sim"]) for r in res.collect()]
+    svc = SearchService(spark, None, load_table(spark, SF_DIR, "documents"),
+                        vector_index_path=path, k=5)
+    env = svc.vector(qvec)
+    assert env["status_code"] == 200 and env["count"] == 5
+    got = [(r["vec_id"], r["sim"]) for r in env["data"]]
     want = [
         (r["vec_id"], r["sim"])
         for r in QUERIES["ext_ann_lsh_multiprobe"](spark, SF_DIR).collect()
     ]
-    assert got == want and len(got) == 5
+    assert got == want
 
-    env = to_envelope(res, k=5)
-    assert env["status_code"] == 200 and env["count"] == 5
-    assert {"vec_id", "sim"} <= set(env["data"][0])
 
 def test_search_hybrid_served_from_both_indexes(spark, tmp_path):
     """The fully-served hybrid: BM25 from the on-disk postings index fused
     with multiprobe vector search from the on-disk LSH index. RRF scores
-    must equal a manual recomputation from the two served rankings, and
-    the result must be non-trivial on both legs."""
+    and ranks must equal a manual recomputation from the two served
+    rankings, and the result must be non-trivial on both legs."""
     import pyspark.sql.functions as F
 
     from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
+        ann_lsh_served_vec,
         write_vector_index_int8,
     )
     from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
         search_hybrid_served,
-        search_vector,
     )
     from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
         bm25_search,
@@ -377,10 +364,11 @@ def test_search_hybrid_served_from_both_indexes(spark, tmp_path):
     v_rank = {
         r["vec_id"]: i
         for i, r in enumerate(
-            search_vector(spark, vpath, qvec, k=20).collect(), start=1
+            ann_lsh_served_vec(spark, vpath, qvec, k=20).collect(), start=1
         )
     }
     for r in fused:
+        assert (r["rb"], r["rv"]) == (bm_rank.get(r["doc_id"]), v_rank.get(r["doc_id"]))
         want = 0.0
         if r["doc_id"] in bm_rank:
             want += 1.0 / (60 + bm_rank[r["doc_id"]])

@@ -92,6 +92,9 @@ def test_batch_with_near_dup_gated_and_served(spark, served, tmp_path):
     top = serve_loop.vector_search_served(spark, base, _emb(100), k=3).collect()
     assert top[0]["doc_id"] == 100 and top[0]["sim"] == 1.0
     assert 101 not in {r["doc_id"] for r in top}
+    # a query of another length than the build dim fails, never null sims
+    with pytest.raises(ValueError, match="query dim"):
+        serve_loop.vector_search_served(spark, base, _emb(100)[:10], k=3)
 
 
 def test_replace_by_id_update_tombstones_old_postings(spark, served):
@@ -226,6 +229,20 @@ def test_read_served_index_job_count(spark, served):
     with profiled("resolve one served snapshot") as led:
         idx = serve_loop.read_served_index(spark, base)
     assert idx.corpus_values[0] == len(DOCS)
+    assert led.jobs == 3
+
+
+def test_vector_search_served_job_count(spark, served):
+    """Deterministic cost counter for one served ANN query over two
+    segments and a tombstone: 3 Spark jobs — one collect each of the
+    manifest and the tombstones, and the probed buckets' top-k."""
+    base, prefix = served
+    _serve(spark, _df(spark, [(1, "kubernetes schedules containers onto nodes")]), base, prefix)
+    serve_loop.vector_search_served(spark, base, _emb(1), k=3).collect()  # warm
+    with profiled("one served vector query") as led:
+        top = serve_loop.vector_search_served(spark, base, _emb(1), k=3).collect()
+    # doc 1's replaced vector (the same embedding) is tombstoned
+    assert [r["doc_id"] for r in top].count(1) == 1 and top[0]["sim"] == 1.0
     assert led.jobs == 3
 
 
