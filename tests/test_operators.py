@@ -297,6 +297,53 @@ def test_served_vector_index_prunes_partitions_and_matches(spark, tmp_path):
         assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan[-1500:]
 
 
+def test_ann_lsh_served_vec_matches_dataframe_path(spark, tmp_path):
+    """The driver-side quantize + bucket of ann_lsh_served_vec must agree
+    with the in-plan arithmetic: over the same on-disk index, a read that
+    keeps the query as a DataFrame (quantize_int8 + lsh_bucket_int8 on the
+    query row, probes joined to the bucket column) must return EXACTLY the
+    served rows in both probe modes."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.functions.vectors import (
+        cosine,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "vecidx")
+    similarity.write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    qv = [float(x) for x in q.first()["qv"]]
+
+    qbucket = similarity.lsh_bucket_int8(
+        similarity.quantize_int8(
+            q.select(F.lit(0).alias("vec_id"), F.col("qv").alias("embedding"))
+        ),
+        num_planes=4,
+    )
+    idx = spark.read.parquet(path)
+    for mp in (True, False):
+        probe_cols = [F.col("bucket")]
+        if mp:
+            probe_cols += [F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(4)]
+        qb = qbucket.select(F.explode(F.array(*probe_cols)).alias("qbucket"))
+        want = [
+            (r["vec_id"], r["sim"])
+            for r in idx.join(F.broadcast(qb), idx["bucket"] == F.col("qbucket"))
+            .crossJoin(F.broadcast(q))
+            .select(
+                "vec_id",
+                (F.round(cosine(F.col("embedding"), F.col("qv")), 4) + F.lit(0.0)).alias(
+                    "sim"
+                ),
+            )
+            .orderBy(F.col("sim").desc(), F.col("vec_id"))
+            .limit(5)
+            .collect()
+        ]
+        served = similarity.ann_lsh_served_vec(spark, path, qv, k=5, multiprobe=mp)
+        got = [(r["vec_id"], r["sim"]) for r in served.collect()]
+        assert got == want and len(got) == 5, f"multiprobe={mp}"
+
+
 def test_served_ivf_index_matches_in_session(spark, tmp_path):
     """IVF served tier: on-disk inverted lists (partitioned by cent_id)
     queried with nprobe probes must return exactly the in-session
