@@ -1357,7 +1357,7 @@ def _python_quantize_vec(vec: list[float]) -> list[int]:
 
 def ann_lsh_served_vec(
     spark,
-    index: str | DataFrame,
+    index: DataFrame,
     query_vec: list[float],
     k: int = 5,
     num_planes: int = 4,
@@ -1366,8 +1366,10 @@ def ann_lsh_served_vec(
     multiprobe: bool = True,
     dim: int = 64,
 ) -> DataFrame:
-    """THE int8-LSH read path: serve ANN from the on-disk bucket-partitioned
-    index (:func:`write_vector_index_int8`). The query arrives as a VECTOR
+    """THE int8-LSH read path: serve ANN from a resolved relation over the
+    on-disk bucket-partitioned index (``spark.read.parquet`` of a
+    :func:`write_vector_index_int8` directory, or a served snapshot's
+    ``vectors``, keyed by ``doc_id``). The query arrives as a VECTOR
     and is quantized and bucketed driver-side (pure integer arithmetic,
     zero Spark jobs); the scan reads only the probed ``bucket=`` partitions
     through a static ``isin`` filter (static partition pruning — the same
@@ -1387,13 +1389,6 @@ def ann_lsh_served_vec(
     planned the query subtree five times and pruned through a
     dynamic-partition-pruning subquery, ~2.4 s of per-query fixed cost
     whatever the probes touched.
-
-    ``index``: the index PATH, or — the steady-state serving shape — a
-    PRE-RESOLVED relation reused across queries (``spark.read.parquet``
-    of the index, or a serve loop's tombstone-filtered segment union).
-    At the same 1M-vector index, partition DISCOVERY on a fresh read cost
-    ~1.2-3.3 s per query; against a reused relation the pruned query ran
-    in ~0.14 s (commit a31aae7).
 
     ``dim`` must match :func:`write_vector_index_int8`'s build dim (both
     default 64) and is validated against the query's length: the driver-side
@@ -1420,10 +1415,9 @@ def ann_lsh_served_vec(
         )
     else:
         qlit = F.array(*[F.lit(x).cast("double") for x in fs])
-    base = spark.read.parquet(index) if isinstance(index, str) else index
-    idx = base.filter(F.col("bucket").isin(probes))
     return (
-        idx.select(
+        index.filter(F.col("bucket").isin(probes))
+        .select(
             F.col(id_col),
             (F.round(cosine(F.col(vec_col), qlit), 4) + F.lit(0.0)).alias("sim"),
         )

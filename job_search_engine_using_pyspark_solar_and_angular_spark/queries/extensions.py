@@ -1444,9 +1444,10 @@ def ext_autocomplete(spark, sf_dir):
     """Prefix autocomplete: top-10 corpus tokens starting with 's' (the
     richest prefix in the fixture vocabulary — 6 completions)."""
     from ..search.api import autocomplete
+    from ..search.index import build_index
 
     d = load_table(spark, sf_dir, "documents")
-    return autocomplete(d, "s", k=10)
+    return autocomplete(build_index(d).postings, "s", k=10)
 
 
 @query("ext_pmi_collocations")
@@ -4074,9 +4075,10 @@ def ext_more_like_this(spark, sf_dir):
     is oracle-exact. Target vector broadcast, one doc_id shuffle,
     TakeOrderedAndProject — never doc × doc."""
     from ..search.bm25 import more_like_this
+    from ..search.index import build_index
 
     d = load_table(spark, sf_dir, "documents")
-    return more_like_this(d, target_id=1, k=10)
+    return more_like_this(build_index(d, cache=True), target_id=1, k=10)
 
 
 @query("ext_tpch_q6")

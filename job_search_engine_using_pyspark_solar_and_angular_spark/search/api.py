@@ -135,9 +135,7 @@ def tokenize_query(query: str) -> list[str]:
     return [t for t in (re.sub(r"[^a-z0-9]", "", w) for w in query.lower().split(" ")) if t]
 
 
-def suggest_next_token(
-    docs, prev: str, k: int = 5, id_col: str = "doc_id", text_col: str = "text"
-):
+def suggest_next_token(docs, prev: str, k: int = 5, text_col: str = "text"):
     """Query-completion by bigram conditional probability: the top-``k``
     tokens following ``prev`` in the corpus, with P(next|prev) =
     c(prev next) / c(prev ·). One token-stream pass (bigram counts filtered
@@ -168,22 +166,15 @@ def suggest_next_token(
     )
 
 
-def autocomplete(
-    docs, prefix: str, k: int = 10, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Prefix autocomplete over the corpus vocabulary: top-``k`` tokens
-    starting with ``prefix`` by frequency. A served deployment would read
-    the token-sorted postings (``search.index.write_index``) instead of
-    re-tokenizing: a prefix is a token range in those sorted files."""
-    from ..io import ensure_parallelism
-
-    toks = ensure_parallelism(docs).select(
-        F.explode(tokenize_normalized(text_col)).alias("token")
-    )
+def autocomplete(postings: DataFrame, prefix: str, k: int = 10) -> DataFrame:
+    """Prefix autocomplete over an index's vocabulary: top-``k`` tokens
+    starting with ``prefix`` by corpus frequency, the sum of their
+    postings' ``tf``. Over token-sorted postings (a served snapshot) a
+    prefix is a token range, so the filter prunes files and row groups."""
     return (
-        toks.filter(F.col("token").startswith(prefix))
+        postings.filter(F.col("token").startswith(prefix))
         .groupBy("token")
-        .agg(F.count("*").alias("c"))
+        .agg(F.sum("tf").alias("c"))
         .select("token", F.col("c").cast("long").alias("c"))
         .orderBy(F.col("c").desc(), "token")
         .limit(k)
@@ -256,21 +247,15 @@ def snippets(
 
 
 def related_docs(
-    docs: DataFrame,
-    doc_id,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    index: SearchIndex, docs: DataFrame, doc_id, k: int = 10
 ) -> DataFrame:
     """Related-content endpoint (Solr's MLT handler shape): More-Like-This
-    top-k for a document, joined back to the full doc rows — the same
-    hits-are-tiny broadcast-back pattern as search_keyword."""
+    top-k for a document over ``index``, joined back to the full doc rows —
+    the same hits-are-tiny broadcast-back pattern as search_keyword."""
     from .bm25 import more_like_this
 
-    hits = more_like_this(docs, doc_id, k=k, id_col=id_col, text_col=text_col)
-    return hits.join(docs, id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col)
-    )
+    hits = more_like_this(index, doc_id, k=k)
+    return hits.join(docs, "doc_id").orderBy(F.col("sim").desc(), F.col("doc_id"))
 
 
 def search_facets(
@@ -394,28 +379,28 @@ def _fuse_rrf(keyword: DataFrame, vector: DataFrame, k: int) -> DataFrame:
 
 def search_hybrid_served(
     spark: SparkSession,
-    index_base: str,
-    vector_index_path: str,
+    index: SearchIndex,
     query: str,
     query_vec: list[float],
     k: int = 10,
     pool: int = 20,
     num_planes: int = 4,
 ) -> DataFrame:
-    """The fully-SERVED hybrid front door: BM25 from the on-disk token-sorted
-    postings index (``search.index.read_index``) fused with multiprobe
-    vector search from the on-disk int8-LSH index
+    """The fully-SERVED hybrid front door over one resolved snapshot
+    (``serve_loop.read_served_index``): BM25 from its posting lists fused
+    with multiprobe vector search over its ``vectors``
     (``similarity.ann_lsh_served_vec``) by :func:`search_hybrid`'s fusion.
     Per-request cost is posting-list reads + probed-bucket files — both
     index builds are paid at index time; no corpus scan serves a request."""
     from ..operators.similarity import ann_lsh_served_vec
-    from .index import read_index
 
-    bm = bm25_search(spark, read_index(spark, index_base), tokenize_query(query), k=pool)
+    if index.vectors is None:
+        raise ValueError("the served index has no vector segments")
+    bm = bm25_search(spark, index, tokenize_query(query), k=pool)
     vec = ann_lsh_served_vec(
-        spark, vector_index_path, query_vec, k=pool, num_planes=num_planes
+        spark, index.vectors, query_vec, k=pool, num_planes=num_planes, id_col="doc_id"
     )
-    return _fuse_rrf(bm, vec.withColumnRenamed("vec_id", "doc_id"), k)
+    return _fuse_rrf(bm, vec, k)
 
 
 def search_hybrid(

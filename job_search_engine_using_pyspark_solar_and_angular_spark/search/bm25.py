@@ -119,16 +119,13 @@ def bm25_search(
     return ranked.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k)
 
 
-def _tfidf_weights(docs, id_col: str, text_col: str) -> DataFrame:
-    """Every posting of the in-session index (``build_index(cache=True)``)
-    with its TF-IDF weight ``tfidf = tf · ln(n_docs / df)``: postings ⋈
-    broadcast(term_stats) × the broadcast 1-row document count."""
-    from .index import build_index
-
-    idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
-    n_docs = idx.doc_stats.agg(F.count("*").alias("n"))
+def _tfidf_weights(index: SearchIndex) -> DataFrame:
+    """Every posting of ``index`` with its TF-IDF weight
+    ``tfidf = tf · ln(n_docs / df)``: postings ⋈ broadcast(term_stats) ×
+    the broadcast 1-row document count."""
+    n_docs = index.doc_stats.agg(F.count("*").alias("n"))
     return (
-        idx.postings.join(F.broadcast(idx.term_stats), "token")
+        index.postings.join(F.broadcast(index.term_stats), "token")
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", F.col("tf") * F.log(F.col("n") / F.col("df")))
     )
@@ -148,7 +145,10 @@ def tfidf_keywords(
     sort), then ordered collect. Deterministic: ties break on the term."""
     from pyspark.sql import Window
 
-    scored = _tfidf_weights(docs, id_col, text_col).withColumn(
+    from .index import build_index
+
+    idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)
+    scored = _tfidf_weights(idx).withColumn(
         "score", F.round(F.col("tfidf"), 6)
     )
     w = Window.partitionBy("doc_id").orderBy(
@@ -170,16 +170,10 @@ def tfidf_keywords(
     )
 
 
-def more_like_this(
-    docs,
-    target_id,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = 1000,
-):
+def more_like_this(index: SearchIndex, target_id, k: int = 10, scale: int = 1000):
     """Solr/Lucene "More Like This": top-``k`` documents most similar to
-    ``target_id`` by TF-IDF cosine over the inverted index — the
+    ``target_id`` by TF-IDF cosine over the inverted ``index`` — an
+    in-session ``build_index`` or a served snapshot — the
     related-content surface next to keyword search (Solr exposes it as the
     MLT handler on the same collections the reference builds).
 
@@ -193,9 +187,10 @@ def more_like_this(
     filtered first, broadcast everywhere — so scoring is postings ⋈
     broadcast(target) + one doc_id shuffle; norms reuse the same persisted
     weight table; the final top-k is TakeOrderedAndProject. Never a
-    doc × doc comparison."""
+    doc × doc comparison. The weight table's persist belongs to the
+    enclosing cache owner."""
     w = persist(
-        _tfidf_weights(docs, id_col, text_col).select(
+        _tfidf_weights(index).select(
             "doc_id",
             "token",
             F.round(F.col("tfidf") * scale, 0).cast("long").alias("w"),

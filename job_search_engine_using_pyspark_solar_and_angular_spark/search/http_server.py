@@ -26,8 +26,10 @@ Concurrency: Spark supports concurrent actions from multiple driver
 threads (each HTTP handler thread submits independent jobs scheduled by
 the DAG scheduler), so the threading server needs no request lock. At
 scale the natural deployment is this server on the driver of a long-lived
-session over the token-sorted on-disk index (``search.index.read_index`` /
-``serve_loop``) — requests read their posting lists, never the corpus.
+session over a served snapshot (``serve_loop.read_served_index``): every
+route that reads the index — keyword, facets, vector, related, complete —
+reads that one resolved snapshot, never the corpus, and
+:meth:`SearchService.refresh` swaps all of them at once.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import scope
 from ..operators.similarity import ann_lsh_served_vec
 from .api import (  # noqa: F401 (search_keyword: the one-plan form of /query)
     autocomplete,
@@ -174,7 +177,6 @@ class SearchService:
         user_name_col: str | None = None,
         doc_time_col: str = "doc_id",
         tags_col: str = "hashtags",
-        vector_index_path: str | None = None,
         k: int = 10,
     ) -> None:
         self.spark = spark
@@ -189,7 +191,6 @@ class SearchService:
         self.user_name_col = user_name_col
         self.doc_time_col = doc_time_col
         self.tags_col = tags_col
-        self.vector_index_path = vector_index_path
         self.k = k
 
     # Read-only views of the CURRENT generation (bench/probes/tests peek at
@@ -328,13 +329,14 @@ class SearchService:
 
     # -- extension routes (capabilities the engine adds) ----------------
     def vector(self, vec: list[float], k: int | None = None) -> dict[str, Any]:
-        """Top-k (vec_id, sim) from the on-disk int8-LSH index
+        """Top-k (doc_id, sim) from the snapshot's int8-LSH ``vectors``
         (``similarity.ann_lsh_served_vec``). A query whose length is not
         the index's build dim raises, so it gets the error envelope."""
-        if self.vector_index_path is None:
+        vectors = getattr(self._snap.index, "vectors", None)
+        if vectors is None:
             raise ValueError("vector route not configured (no vector index)")
         data = _rows(
-            ann_lsh_served_vec(self.spark, self.vector_index_path, vec, k=k or self.k)
+            ann_lsh_served_vec(self.spark, vectors, vec, k=k or self.k, id_col="doc_id")
         )
         return _ok({COUNT: len(data), DATA: data})
 
@@ -349,8 +351,11 @@ class SearchService:
         return _ok({COUNT: len(data), DATA: data})
 
     def related(self, doc_id: int, k: int | None = None) -> dict[str, Any]:
-        """More-Like-This: top-k docs related to ``doc_id``."""
-        data = _rows(related_docs(self._snap.docs, doc_id, k=k or self.k))
+        """More-Like-This over the index: top-k docs related to ``doc_id``.
+        The request owns its weight-table persist and releases it."""
+        snap = self._snap
+        with scope():
+            data = _rows(related_docs(snap.index, snap.docs, doc_id, k=k or self.k))
         return _ok({COUNT: len(data), DATA: data})
 
     def facets(
@@ -386,7 +391,7 @@ class SearchService:
         return _ok({COUNT: len(data), DATA: data})
 
     def complete(self, prefix: str, k: int = 10) -> dict[str, Any]:
-        data = _rows(autocomplete(self._snap.docs, prefix, k=k))
+        data = _rows(autocomplete(self._snap.index.postings, prefix, k=k))
         return _ok({COUNT: len(data), DATA: data})
 
 

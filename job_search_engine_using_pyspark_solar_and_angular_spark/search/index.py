@@ -45,6 +45,9 @@ class SearchIndex:
     # is resolved (serve_loop.read_served_index): bm25_search then scores
     # with literals instead of joining the 1-row corpus table per request
     corpus_values: tuple[int, float | None] | None = None
+    # the tombstone-filtered int8-LSH vectors (doc_id, embedding, seg,
+    # bucket) of a served snapshot; None when it has no vector segments
+    vectors: DataFrame | None = None
 
     def corpus_stats(self) -> DataFrame:
         """1-row DataFrame (n_docs, avg_dl) — kept in-plan, never collected."""

@@ -51,7 +51,7 @@ the doc's latest ``before_seg``) with a literal filter built from the
 collected tombstones — churn-sized until :func:`compact_segments` folds
 everything back into one base segment. :func:`read_served_index` resolves
 a snapshot once: it collects the tombstones and the corpus partials, so a
-request only ranks its posting lists.
+request only ranks its posting lists or its probed vector buckets.
 Compaction deletes nothing; :func:`vacuum_segments` reclaims unreferenced
 segments and inert tombstones after the read grace window, so a reader
 that resolved the previous manifest mid-query stays consistent.
@@ -476,7 +476,8 @@ def _read_segments(
 
 
 def _resolve(spark: SparkSession, p: dict, rows: list) -> tuple[SearchIndex, dict]:
-    """The SearchIndex over a manifest's ``rows``, and its tombstone cuts."""
+    """The SearchIndex over a manifest's ``rows``, vectors included, and its
+    tombstone cuts."""
     segs = [r["seg"] for r in rows]
     cuts = _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1])
     # the token filter prunes the segments' token-sorted files through their
@@ -491,12 +492,14 @@ def _resolve(spark: SparkSession, p: dict, rows: list) -> tuple[SearchIndex, dic
     avg_dl = float(s) / float(n) if n else None  # an empty corpus has none
     corpus = spark.createDataFrame([(n, avg_dl)], "n_docs long, avg_dl double")
     term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
+    vecs = _read_segments(spark, p, "vectors", segs)
     idx = SearchIndex(
         postings=alive,
         doc_stats=doc_stats,
         term_stats=term_stats,
         corpus=corpus,
         corpus_values=(n, avg_dl),
+        vectors=None if vecs is None else _alive(vecs, cuts),
     )
     return idx, cuts
 
@@ -519,6 +522,10 @@ def read_served_index(
       with the declared schema; the query-term filter prunes the
       token-sorted files. Any process can resolve a snapshot that another
       process wrote.
+    - Vectors: the vector segments, filtered by the same tombstone cuts,
+      as ``vectors`` (None when the loop ran without ``vec_col``) — the
+      relation ``similarity.ann_lsh_served_vec`` serves with
+      ``id_col="doc_id"``.
 
     doc_stats and term_stats stay lazy (BM25 never touches them — per-term
     df comes from the pruned posting lists). Call again after a publish:
@@ -534,40 +541,6 @@ def read_served_index(
     if not rows:
         raise FileNotFoundError(f"no serving manifest committed under {base}")
     return _resolve(spark, p, rows)[0]
-
-
-def vector_search_served(
-    spark: SparkSession,
-    base: str,
-    query_vec: list[float],
-    k: int = 5,
-    num_planes: int = 4,
-    dim: int = 64,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Served ANN over the segment layout: ``similarity.ann_lsh_served_vec``
-    over the manifest's tombstone-filtered vector segments — static
-    partition pruning on every segment dir, exact cosine rerank of the
-    probed candidates. Returns (doc_id, sim). ``num_planes`` and ``dim``
-    are :func:`serve_batch`'s build parameters; a query of another length
-    raises."""
-    from ..operators.similarity import ann_lsh_served_vec
-
-    p = _paths(base)
-    segs = [r["seg"] for r in _manifest(spark, p)]
-    if not segs:
-        raise FileNotFoundError(f"no serving manifest committed under {base}")
-    vecs = _read_segments(spark, p, "vectors", segs)
-    if vecs is None:
-        raise FileNotFoundError(
-            f"no vector segments under {base}: the serve loop ran without "
-            "vec_col, so there is no ANN tier to query"
-        )
-    alive = _alive(vecs, _tombstone_cuts(_state(spark, p, "tombstones"), segs[-1]))
-    return ann_lsh_served_vec(
-        spark, alive, query_vec, k=k, num_planes=num_planes, id_col="doc_id",
-        multiprobe=multiprobe, dim=dim,
-    )
 
 
 def compact_segments(
@@ -632,11 +605,9 @@ def compact_segments(
     _alive(_read_segments(spark, p, "lsh", old_segs), cuts).withColumn(
         "seg", F.lit(new_seg).cast("int")
     ).write.mode("overwrite").parquet(_seg_path(p, "lsh", new_seg))
-    vecs = _read_segments(spark, p, "vectors", old_segs)
-    if vecs is not None:
-        alive_vecs = _alive(vecs, cuts)
+    if idx.vectors is not None:
         (
-            alive_vecs.select(
+            idx.vectors.select(
                 "doc_id", "embedding", F.lit(new_seg).cast("int").alias("seg"), "bucket"
             )
             .repartition(F.col("bucket"))

@@ -24,7 +24,7 @@ from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import
     build_index,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, persisted_rdd_ids
 
 
 def _get(url: str):
@@ -315,10 +315,13 @@ def test_docs_users_column_overlap_rejected(spark):
 def test_refresh_across_index_publish_without_restart(spark, tmp_path):
     """DEPLOY.md §8's operational claim, pinned end-to-end: the HTTP
     endpoint keeps serving across a serve-loop index publish. Batch 0 is
-    indexed and served; a query for batch-1 vocabulary returns count 0;
-    the serve loop publishes batch 1; ``SearchService.refresh`` swaps the
-    re-resolved served index on the LIVE server (same socket, no
-    restart); the same query now hits."""
+    indexed and served; a query for batch-1 vocabulary returns count 0,
+    and /vector does not find the batch-1 doc's embedding; the serve loop
+    publishes batch 1; ``SearchService.refresh`` swaps the re-resolved
+    served index on the LIVE server (same socket, no restart); both
+    routes now hit — the vector tier is part of the snapshot."""
+    import math
+
     from job_search_engine_using_pyspark_solar_and_angular_spark.search import (
         serve_loop,
     )
@@ -329,24 +332,41 @@ def test_refresh_across_index_publish_without_restart(spark, tmp_path):
     ]
     docs1 = [(3, "zeppelin notebooks orchestrate interactive analysis sessions")]
 
+    def _emb(doc_id):
+        return [math.sin(0.1 * doc_id + 0.3 * d) for d in range(64)]
+
     def _df(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
+        return spark.createDataFrame(
+            [(i, t, _emb(i)) for i, t in rows],
+            "doc_id long, text string, embedding array<double>",
+        )
+
+    def _batch(rows):
+        serve_loop.serve_batch(
+            spark, _df(rows), base, prefix, vec_col="embedding", postings_buckets=4
+        )
 
     base = str(tmp_path / "serving")
     prefix = "http_rt_" + tmp_path.name.replace("-", "_").lower()
-    serve_loop.serve_batch(spark, _df(docs0), base, prefix, postings_buckets=4)
+    _batch(docs0)
 
     svc = SearchService(
         spark, serve_loop.read_served_index(spark, base), _df(docs0), k=5
     )
     with serve(svc) as handle:
         url = handle.url + "/api/search/query?query="
+        vec_url = handle.url + "/api/search/vector?vec=" + ",".join(map(repr, _emb(3)))
         _, _, body = _get(url + "zeppelin")
         assert body["status_code"] == 200 and body["count"] == 0
         _, _, body = _get(url + "pushdown")
         assert body["count"] == 1 and body["data"][0]["tweet"]["doc_id"] == 2
+        _, _, body = _get(vec_url)
+        assert body["status_code"] == 200
+        assert 3 not in {h["doc_id"] for h in body["data"]}
 
-        serve_loop.serve_batch(spark, _df(docs1), base, prefix, postings_buckets=4)
+        _batch(docs1)
+        _, _, body = _get(vec_url)  # published, not yet refreshed
+        assert 3 not in {h["doc_id"] for h in body["data"]}
         svc.refresh(
             index=serve_loop.read_served_index(spark, base),
             docs=_df(docs0 + docs1),
@@ -356,12 +376,17 @@ def test_refresh_across_index_publish_without_restart(spark, tmp_path):
         assert body["count"] == 1 and body["data"][0]["tweet"]["doc_id"] == 3
         _, _, body = _get(url + "pushdown")  # old corpus still served
         assert body["count"] == 1 and body["data"][0]["tweet"]["doc_id"] == 2
+        _, _, body = _get(vec_url)
+        assert body["data"][0]["doc_id"] == 3 and body["data"][0]["sim"] == 1.0
 
 
 @pytest.fixture(scope="module")
 def vector_service(spark, tmp_path_factory):
     """The vector route over a real on-disk LSH index of the embeddings,
-    and the first embedding as a query."""
+    attached to the served index as its ``vectors`` (keyed by doc_id), and
+    the first embedding as a query."""
+    from dataclasses import replace
+
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         write_vector_index_int8,
     )
@@ -370,8 +395,10 @@ def vector_service(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("vec") / "vecidx")
     write_vector_index_int8(emb, path)
     docs = load_table(spark, SF_DIR, "documents")
+    vectors = spark.read.parquet(path).withColumnRenamed("vec_id", "doc_id")
+    index = replace(build_index(docs), vectors=vectors)
     qv = emb.orderBy("vec_id").first()["embedding"]
-    return SearchService(spark, None, docs, vector_index_path=path, k=5), qv
+    return SearchService(spark, index, docs, k=5), qv
 
 
 def test_vector_route(vector_service):
@@ -392,18 +419,29 @@ def test_vector_route(vector_service):
     assert short == {"status_code": 500, "message": "Internal Server Error"}
 
 
-def test_served_vector_request_job_count(vector_service):
+def test_served_vector_request_job_count(spark, vector_service):
     """Deterministic cost counter for one served vector request, like the
-    keyword pin below: 2 Spark jobs — the index relation's parquet schema
-    read and the probed buckets' top-k (the query is bucketed driver-side
-    and pruned statically). Bucketing it in-plan, with a dynamic-pruning
-    subquery and a distinct over the candidates, ran 5."""
+    keyword pin below: 1 Spark job — the probed buckets' top-k (the query
+    is bucketed driver-side and pruned statically, and the snapshot holds
+    the resolved relation). Reading the index by path per request ran 2;
+    bucketing the query in-plan ran 5. A query of the wrong length is
+    rejected before any job, and still gets the error envelope."""
     svc, qv = vector_service
     svc.vector(qv)  # warm: the same jobs, first-call planning
     with profiled("one served vector request") as led:
         body = svc.vector(qv)
     assert body["count"] == 5 and body["data"][0]["sim"] >= 0.99
-    assert led.jobs == 2
+    assert led.jobs == 1
+
+    # the handler thread is outside any job group: count the scheduler's jobs
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    with serve(svc) as handle:
+        first_job = scheduler.nextJobId()
+        _, _, short = _get(
+            handle.url + "/api/search/vector?vec=" + ",".join(map(repr, qv[:10]))
+        )
+        assert scheduler.nextJobId() == first_job
+    assert short == {"status_code": 500, "message": "Internal Server Error"}
 
 
 def test_failed_request_is_logged_and_keeps_the_envelope(server, caplog):
@@ -540,3 +578,41 @@ def test_served_keyword_request_job_count(spark, tmp_path):
         body = svc.query("kafka stream")
     assert body["count"] == 3 and body["data"][0]["user"] is not None
     assert led.jobs == 6
+
+
+def test_related_and_complete_answer_from_the_snapshot(spark, tmp_path):
+    """/related and /autocomplete read the served snapshot's postings:
+    their rows equal more_like_this and autocomplete over build_index of
+    the same docs (doc 1's replacing text included). Cost, each under its
+    own job group: a related request runs at most 19 Spark jobs and
+    leaves no persisted RDD behind (it owns its weight table and releases
+    it); a complete request runs 2 (the prefix-pruned aggregate and its
+    top-k). Rebuilding the index from the docs per request ran 25 and
+    leaked 3 persisted RDDs."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.cache import scope
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
+        autocomplete,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
+        more_like_this,
+    )
+
+    svc = _served_two_phase(spark, tmp_path)
+    rebuilt = build_index(svc.docs)
+
+    before = persisted_rdd_ids(spark)
+    with profiled("one served related request") as led:
+        body = svc.related(2, k=4)
+    assert not persisted_rdd_ids(spark) - before
+    assert led.jobs <= 19
+    with scope():
+        want = [tuple(r) for r in more_like_this(rebuilt, 2, k=4).collect()]
+    assert [(h["doc_id"], h["sim"]) for h in body["data"]] == want and len(want) == 4
+    assert all(h["text"] == dict(_SEG1 + _SEG2)[h["doc_id"]] for h in body["data"])
+
+    svc.complete("k")  # warm: the same jobs, first-call planning
+    with profiled("one served complete request") as led:
+        body = svc.complete("k", k=3)
+    assert led.jobs == 2
+    want = [tuple(r) for r in autocomplete(rebuilt.postings, "k", k=3).collect()]
+    assert [(h["token"], h["c"]) for h in body["data"]] == want and want[0][0] == "kafka"

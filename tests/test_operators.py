@@ -281,9 +281,10 @@ def test_served_vector_index_prunes_partitions_and_matches(spark, tmp_path):
     path = str(tmp_path / "vecidx")
     similarity.write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    idx = spark.read.parquet(path)
 
     for mp, twin in ((True, "ext_ann_lsh_multiprobe"), (False, "ext_ann_lsh_quantized")):
-        served = similarity.ann_lsh_served_vec(spark, path, qv, k=5, multiprobe=mp)
+        served = similarity.ann_lsh_served_vec(spark, idx, qv, k=5, multiprobe=mp)
         got = [(r["vec_id"], r["sim"]) for r in served.collect()]
         want = [
             (r["vec_id"], r["sim"]) for r in QUERIES[twin](spark, SF_DIR).collect()
@@ -339,7 +340,7 @@ def test_ann_lsh_served_vec_matches_dataframe_path(spark, tmp_path):
             .limit(5)
             .collect()
         ]
-        served = similarity.ann_lsh_served_vec(spark, path, qv, k=5, multiprobe=mp)
+        served = similarity.ann_lsh_served_vec(spark, idx, qv, k=5, multiprobe=mp)
         got = [(r["vec_id"], r["sim"]) for r in served.collect()]
         assert got == want and len(got) == 5, f"multiprobe={mp}"
 
@@ -1626,9 +1627,10 @@ def test_ann_lsh_served_vec_rejects_wrong_dim(spark, tmp_path):
     path = str(tmp_path / "vecidx")
     write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assert ann_lsh_served_vec(spark, path, qv, k=5).count() == 5
+    idx = spark.read.parquet(path)
+    assert ann_lsh_served_vec(spark, idx, qv, k=5).count() == 5
     with pytest.raises(ValueError, match="query dim"):
-        ann_lsh_served_vec(spark, path, qv[:-1], k=5)
+        ann_lsh_served_vec(spark, idx, qv[:-1], k=5)
 
 
 def test_graph_ops_reject_both_pairs_and_edges(spark):

@@ -260,7 +260,7 @@ def test_related_docs_envelope(spark):
     """MLT endpoint: related docs for doc 1 — k rows, full doc columns, the
     target itself excluded."""
     docs = load_table(spark, SF_DIR, "documents")
-    env = SearchService(spark, None, docs).related(1, k=5)
+    env = SearchService(spark, build_index(docs), docs).related(1, k=5)
     assert env["count"] == 5 and env["status_code"] == 200
     assert all(row["doc_id"] != 1 for row in env["data"])
     assert all("text" in row and "sim" in row for row in env["data"])
@@ -290,9 +290,12 @@ def test_search_hybrid_contains_both_modalities(spark):
     assert all(d in fused_ids for d in both_top3)
 
 def test_search_vector_served_envelope(spark, tmp_path):
-    """Vector search request path: on-disk LSH index -> multiprobe query ->
+    """Vector search request path: on-disk LSH index, attached to the
+    served index as its ``vectors`` keyed by doc_id -> multiprobe query ->
     top-k -> REST envelope; its rows must equal the in-session
     ext_ann_lsh_multiprobe registry query (same probes, same ranking)."""
+    from dataclasses import replace
+
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         write_vector_index_int8,
     )
@@ -305,11 +308,12 @@ def test_search_vector_served_envelope(spark, tmp_path):
     write_vector_index_int8(emb.filter(F.col("vec_id") != 0), path)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
-    svc = SearchService(spark, None, load_table(spark, SF_DIR, "documents"),
-                        vector_index_path=path, k=5)
+    docs = load_table(spark, SF_DIR, "documents")
+    vectors = spark.read.parquet(path).withColumnRenamed("vec_id", "doc_id")
+    svc = SearchService(spark, replace(build_index(docs), vectors=vectors), docs, k=5)
     env = svc.vector(qvec)
     assert env["status_code"] == 200 and env["count"] == 5
-    got = [(r["vec_id"], r["sim"]) for r in env["data"]]
+    got = [(r["doc_id"], r["sim"]) for r in env["data"]]
     want = [
         (r["vec_id"], r["sim"])
         for r in QUERIES["ext_ann_lsh_multiprobe"](spark, SF_DIR).collect()
@@ -318,43 +322,41 @@ def test_search_vector_served_envelope(spark, tmp_path):
 
 
 def test_search_hybrid_served_from_both_indexes(spark, tmp_path):
-    """The fully-served hybrid: BM25 from the on-disk postings index fused
-    with multiprobe vector search from the on-disk LSH index. RRF scores
-    and ranks must equal a manual recomputation from the two served
-    rankings, and the result must be non-trivial on both legs."""
-    import pyspark.sql.functions as F
-
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
+    """The fully-served hybrid over one resolved snapshot: BM25 from its
+    posting lists fused with multiprobe vector search over its vectors.
+    RRF scores and ranks must equal a manual recomputation from the two
+    rankings of the same snapshot, the result must be non-trivial on both
+    legs, and a request runs at most 4 Spark jobs (re-reading both
+    indexes by path per request ran 10)."""
     from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
         ann_lsh_served_vec,
-        write_vector_index_int8,
     )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search import serve_loop
     from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
         search_hybrid_served,
-    )
-    from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
-        bm25_search,
-    )
-    from job_search_engine_using_pyspark_solar_and_angular_spark.search.index import (
-        build_index,
-        read_index,
-        write_index,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
     emb = load_table(spark, SF_DIR, "embeddings")
-    base = str(tmp_path / "postings")
-    write_index(build_index(docs, cache=True), base)
-    vpath = str(tmp_path / "vecidx")
-    write_vector_index_int8(emb.filter(F.col("vec_id") != 0), vpath)
+    batch = docs.select("doc_id", "text").join(
+        emb.select(
+            F.col("vec_id").alias("doc_id"),
+            F.col("embedding").cast("array<double>").alias("embedding"),
+        ),
+        "doc_id",
+    )
+    base = str(tmp_path / "serving")
+    serve_loop.serve_batch(spark, batch, base, "hybrid", vec_col="embedding", postings_buckets=4)
+    idx = serve_loop.read_served_index(spark, base)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
 
-    fused = search_hybrid_served(
-        spark, base, vpath, "spark join", qvec, k=10, pool=20
-    ).collect()
+    search_hybrid_served(spark, idx, "spark join", qvec, k=10, pool=20).collect()  # warm
+    with profiled("one served hybrid request") as led:
+        fused = search_hybrid_served(spark, idx, "spark join", qvec, k=10, pool=20).collect()
     assert len(fused) == 10
+    assert led.jobs <= 4
 
-    idx = read_index(spark, base)
     bm_rank = {
         r["doc_id"]: i
         for i, r in enumerate(
@@ -362,9 +364,10 @@ def test_search_hybrid_served_from_both_indexes(spark, tmp_path):
         )
     }
     v_rank = {
-        r["vec_id"]: i
+        r["doc_id"]: i
         for i, r in enumerate(
-            ann_lsh_served_vec(spark, vpath, qvec, k=20).collect(), start=1
+            ann_lsh_served_vec(spark, idx.vectors, qvec, k=20, id_col="doc_id").collect(),
+            start=1,
         )
     }
     for r in fused:

@@ -12,6 +12,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
+    ann_lsh_served_vec,
+)
 from job_search_engine_using_pyspark_solar_and_angular_spark.profiling import profiled
 from job_search_engine_using_pyspark_solar_and_angular_spark.search import serve_loop
 from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
@@ -54,6 +57,12 @@ def _serve(spark, batch, base, prefix):
     )
 
 
+def _ann(spark, base, query_vec, k):
+    """Served ANN over the live snapshot's tombstone-filtered vectors."""
+    vectors = serve_loop.read_served_index(spark, base).vectors
+    return ann_lsh_served_vec(spark, vectors, query_vec, k=k, id_col="doc_id")
+
+
 def _bm25_rows(spark, idx, terms, k=5):
     return [tuple(r) for r in bm25_search(spark, idx, terms, k=k).collect()]
 
@@ -89,12 +98,12 @@ def test_batch_with_near_dup_gated_and_served(spark, served, tmp_path):
     assert idx.corpus.collect() == rebuilt.corpus_stats().collect()
 
     # served ANN: the new doc's vector is retrievable, the suppressed one not
-    top = serve_loop.vector_search_served(spark, base, _emb(100), k=3).collect()
+    top = _ann(spark, base, _emb(100), k=3).collect()
     assert top[0]["doc_id"] == 100 and top[0]["sim"] == 1.0
     assert 101 not in {r["doc_id"] for r in top}
     # a query of another length than the build dim fails, never null sims
     with pytest.raises(ValueError, match="query dim"):
-        serve_loop.vector_search_served(spark, base, _emb(100)[:10], k=3)
+        _ann(spark, base, _emb(100)[:10], k=3)
 
 
 def test_replace_by_id_update_tombstones_old_postings(spark, served):
@@ -127,9 +136,9 @@ def test_replace_by_id_update_tombstones_old_postings(spark, served):
         postings_buckets=4,
     )
     assert s2["indexed"] == 1
-    top = serve_loop.vector_search_served(spark, base, vec_new, k=2).collect()
+    top = _ann(spark, base, vec_new, k=2).collect()
     assert top[0]["doc_id"] == 1 and top[0]["sim"] == 1.0
-    old_hits = serve_loop.vector_search_served(spark, base, _emb(1), k=6).collect()
+    old_hits = _ann(spark, base, _emb(1), k=6).collect()
     assert all(not (r["doc_id"] == 1 and r["sim"] == 1.0) for r in old_hits)
 
 
@@ -228,22 +237,24 @@ def test_read_served_index_job_count(spark, served):
     serve_loop.read_served_index(spark, base)  # warm: the same jobs
     with profiled("resolve one served snapshot") as led:
         idx = serve_loop.read_served_index(spark, base)
-    assert idx.corpus_values[0] == len(DOCS)
+    assert idx.corpus_values[0] == len(DOCS) and idx.vectors is not None
     assert led.jobs == 3
 
 
 def test_vector_search_served_job_count(spark, served):
     """Deterministic cost counter for one served ANN query over two
-    segments and a tombstone: 3 Spark jobs — one collect each of the
-    manifest and the tombstones, and the probed buckets' top-k."""
+    segments and a tombstone: the snapshot resolved the manifest and the
+    tombstones once, so the query runs 1 Spark job — the probed buckets'
+    top-k. Resolving them per query ran 3."""
     base, prefix = served
     _serve(spark, _df(spark, [(1, "kubernetes schedules containers onto nodes")]), base, prefix)
-    serve_loop.vector_search_served(spark, base, _emb(1), k=3).collect()  # warm
+    vectors = serve_loop.read_served_index(spark, base).vectors
+    ann_lsh_served_vec(spark, vectors, _emb(1), k=3, id_col="doc_id").collect()  # warm
     with profiled("one served vector query") as led:
-        top = serve_loop.vector_search_served(spark, base, _emb(1), k=3).collect()
+        top = ann_lsh_served_vec(spark, vectors, _emb(1), k=3, id_col="doc_id").collect()
     # doc 1's replaced vector (the same embedding) is tombstoned
     assert [r["doc_id"] for r in top].count(1) == 1 and top[0]["sim"] == 1.0
-    assert led.jobs == 3
+    assert led.jobs == 1
 
 
 def test_delta_serve_batch_job_count(spark, served):
@@ -316,8 +327,8 @@ def test_crash_before_manifest_publish_retry_converges(spark, tmp_path):
     assert ik.corpus.collect() == ic.corpus.collect()
     for terms in (["adaptive"], ["spark", "executors"]):
         assert _bm25_rows(spark, ik, terms) == _bm25_rows(spark, ic, terms)
-    assert [tuple(r) for r in serve_loop.vector_search_served(spark, crashy, _emb(100), k=3).collect()] == [
-        tuple(r) for r in serve_loop.vector_search_served(spark, clean, _emb(100), k=3).collect()
+    assert [tuple(r) for r in _ann(spark, crashy, _emb(100), k=3).collect()] == [
+        tuple(r) for r in _ann(spark, clean, _emb(100), k=3).collect()
     ]
 
 
@@ -336,7 +347,7 @@ def test_compaction_preserves_served_results(spark, served):
     }
     before_vec = [
         tuple(r)
-        for r in serve_loop.vector_search_served(spark, base, _emb(100), k=4).collect()
+        for r in _ann(spark, base, _emb(100), k=4).collect()
     ]
     serve_loop.compact_segments(spark, base, prefix, postings_buckets=4)
 
@@ -352,7 +363,7 @@ def test_compaction_preserves_served_results(spark, served):
         assert _bm25_rows(spark, idx, [t]) == want
     assert [
         tuple(r)
-        for r in serve_loop.vector_search_served(spark, base, _emb(100), k=4).collect()
+        for r in _ann(spark, base, _emb(100), k=4).collect()
     ] == before_vec
 
 
@@ -405,7 +416,7 @@ def test_serve_loop_sink_streaming(spark, tmp_path):
         map(tuple, i_seq.postings.select(cols).collect())
     )
     assert _bm25_rows(spark, i_stream, ["adaptive"])[0][0] == 100
-    top = serve_loop.vector_search_served(spark, base, _emb(100), k=2).collect()
+    top = _ann(spark, base, _emb(100), k=2).collect()
     assert top[0]["doc_id"] == 100 and top[0]["sim"] == 1.0
 
 
@@ -423,8 +434,7 @@ def test_text_only_loop_has_no_vector_tier(spark, tmp_path):
     idx = serve_loop.read_served_index(spark, base)
     before = _bm25_rows(spark, idx, ["spark"])
     assert before[0][0] == 1
-    with pytest.raises(FileNotFoundError, match="no vector segments"):
-        serve_loop.vector_search_served(spark, base, _emb(1), k=2)
+    assert idx.vectors is None
     serve_loop.compact_segments(spark, base, prefix, postings_buckets=4)
     idx2 = serve_loop.read_served_index(spark, base)
     assert _bm25_rows(spark, idx2, ["spark"]) == before
@@ -564,7 +574,7 @@ def _served_fingerprint(spark, base):
         },
         "vec": [
             tuple(r)
-            for r in serve_loop.vector_search_served(spark, base, _emb(100), k=3).collect()
+            for r in _ann(spark, base, _emb(100), k=3).collect()
         ],
     }
 
