@@ -118,8 +118,10 @@ def search_user(
 ) -> DataFrame:
     """User page (reference R4: ``SolrRanker.java:120-160``): look up the user
     by exact name, then their items time-desc. The 1-row user lookup is
-    broadcast into the items scan — a semi-join point lookup, not a collect."""
-    u = users.filter(F.col(name_col) == name).limit(1)
+    broadcast into the items scan — a semi-join point lookup, not a collect.
+    Several users sharing the name resolve to the lowest ``user_key``, the
+    one the served route (``http_server.SearchService.user``) fetches."""
+    u = users.filter(F.col(name_col) == name).orderBy(F.col(user_key)).limit(1)
     return (
         items.join(F.broadcast(u), items[item_user_key] == u[user_key])
         .orderBy(F.col(time_col).desc(), items[item_user_key])

@@ -13,16 +13,28 @@ identically in the DuckDB oracle (generated from the same Python constants via
 repr), the fold over query terms is a sum of <= a handful of doubles, and ties
 break on doc_id — so scores hash-match exactly at ROUND(...,4).
 
-Scale: query terms and term_stats-for-the-query are tiny -> broadcast; the only
-shuffle is the per-doc score aggregation, keyed by doc_id. Over the
-token-sorted on-disk postings (index.write_index) the postings lookup prunes
-to the query terms' row groups — the Spark analog of reading a few posting
+Scale — two cost models, one per kind of index. Either way the postings are
+first filtered to the query terms; over token-sorted on-disk postings that
+prunes to the terms' row groups, the Spark analog of reading a few posting
 lists.
+
+- In-session index (``index.build_index``): the postings are derived in-plan
+  from the whole corpus, so the rank stays parallel — the per-term df is an
+  aggregate broadcast back to the postings, the corpus constants a broadcast
+  1-row table, and the only shuffle is the per-doc score sum keyed by
+  doc_id. Cost grows with the corpus; it is spread over every core.
+- Resolved snapshot (``serve_loop.read_served_index``, ``corpus_values``
+  set): the pruned posting lists are coalesced into ONE partition, df is a
+  count window over it and the corpus constants are literals, so the df,
+  the per-doc sum and the top-k run in one task — one job, no Exchange, no
+  broadcast. A request costs in proportion to its terms' posting-list
+  lengths and holds one core, like a Solr searcher thread reading its
+  query's posting lists.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist
@@ -75,19 +87,26 @@ def bm25_search(
     # filter prunes to the query terms' row groups, the Spark analog of
     # reading a few posting lists.
     q_postings = index.postings.filter(F.col("token").isin(uniq))
-    q_stats = q_postings.groupBy("token").agg(F.count("*").alias("df"))
-
+    if index.corpus_values is None:
+        # in-session: df aggregated in parallel and broadcast back; the
+        # 1-row corpus constants cross-joined in-plan
+        q_stats = q_postings.groupBy("token").agg(F.count("*").alias("df"))
+        scored = q_postings.join(F.broadcast(q_stats), "token").crossJoin(
+            F.broadcast(index.corpus_stats())
+        )
+        n_docs, avg_dl = F.col("n_docs"), F.col("avg_dl")
+    else:
+        # a resolved snapshot: the pruned posting lists in ONE partition, so
+        # the df window and the per-doc sum below need no Exchange and the
+        # rank is one task; the corpus constants are literals
+        scored = q_postings.coalesce(1).withColumn(
+            "df", F.count("*").over(Window.partitionBy("token"))
+        )
+        n, avg = index.corpus_values
+        n_docs, avg_dl = F.lit(n).cast("long"), F.lit(avg).cast("double")
     # doc_len: denormalized into the postings at build time (Lucene-norms
     # analog) — the query touches ONLY its pruned posting lists, never the
     # corpus-sized doc_stats table.
-    scored = q_postings.join(F.broadcast(q_stats), "token")
-    if index.corpus_values is None:
-        scored = scored.crossJoin(F.broadcast(index.corpus_stats()))  # 1 row
-        n_docs, avg_dl = F.col("n_docs"), F.col("avg_dl")
-    else:
-        # a resolved snapshot: the same long and double, as literals
-        n, avg = index.corpus_values
-        n_docs, avg_dl = F.lit(n).cast("long"), F.lit(avg).cast("double")
     scored = scored.withColumn(
         "partial",
         bm25_score_terms(

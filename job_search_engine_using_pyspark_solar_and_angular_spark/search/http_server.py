@@ -17,19 +17,25 @@ fetches — the way Solr reads the stored fields of its ``rows`` hits: the
 (``search.api.rank_keyword``) and collected, then the doc and user tables
 are filtered to the page's ids (:func:`_fetch_rows`). Over a served index
 (``serve_loop.read_served_index``) the snapshot constants are already
-resolved, so a request reads only its posting lists and k stored rows.
-That replaces the reference's Solr query plus an N+1 per-row user lookup
-loop (``Main/SolrRanker.java:80-84,107-110``); only the ≤k result rows
-ever cross the driver boundary.
+resolved, so a request reads only its posting lists and k stored rows,
+and the rank is one Spark task (``bm25.bm25_search``): a ``/query``
+request — unpaged, ``start`` or ``after`` — runs 3 Spark jobs (rank, doc
+fetch, user fetch). ``/user`` is rank-then-fetch too: the users row with
+the name, then one filter of the items to its key (2 jobs; 1 for an
+unknown name). That replaces the reference's Solr query plus an N+1
+per-row user lookup loop (``Main/SolrRanker.java:80-84,107-110``); only
+the ≤k result rows ever cross the driver boundary.
 
 Concurrency: Spark supports concurrent actions from multiple driver
 threads (each HTTP handler thread submits independent jobs scheduled by
-the DAG scheduler), so the threading server needs no request lock. At
-scale the natural deployment is this server on the driver of a long-lived
-session over a served snapshot (``serve_loop.read_served_index``): every
-route that reads the index — keyword, facets, vector, related, complete —
-reads that one resolved snapshot, never the corpus, and
-:meth:`SearchService.refresh` swaps all of them at once.
+the DAG scheduler), so the threading server needs no request lock. A
+served keyword rank holds one core for its one task, so N concurrent
+requests rank on at most N cores. At scale the natural deployment is
+this server on the driver of a long-lived session over a served snapshot
+(``serve_loop.read_served_index``): every route that reads the index —
+keyword, facets, vector, related, complete — reads that one resolved
+snapshot, never the corpus, and :meth:`SearchService.refresh` swaps all
+of them at once.
 """
 
 from __future__ import annotations
@@ -46,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..cache import scope
 from ..operators.similarity import ann_lsh_served_vec
-from .api import (  # noqa: F401 (search_keyword: the one-plan form of /query)
+from .api import (  # noqa: F401 (search_keyword, search_user: one-plan forms)
     autocomplete,
     rank_keyword,
     related_docs,
@@ -73,6 +79,8 @@ HTTP_SUCCESS = 200
 HTTP_ERROR = 500
 SUCCESS_MESSAGE = "Success"
 ERROR_MESSAGE = "Internal Server Error"
+# a user page's item rows (SolrRanker.java:120-160 asks Solr for rows=1000)
+USER_ITEMS = 1000
 
 
 def _rows(df: DataFrame) -> list[dict[str, Any]]:
@@ -301,31 +309,31 @@ class SearchService:
 
     def user(self, name: str) -> dict[str, Any]:
         """``GET /api/search/user?id=`` (Handler.java:119-161): the user
-        object once, their items time-desc under ``tweets``."""
+        object once, their items time-desc under ``tweets``. Rank, then
+        fetch, like :meth:`query`: the users row with the name is collected
+        (several share it: the lowest user key wins), then ONE filter of
+        the items to that key reads the time-desc top-k — the rows and
+        envelope of :func:`search_user`'s one-plan join, which also
+        answers ``user: None`` for a user without items. An unknown name
+        costs one Spark job, a known one two."""
         snap = self._snap
         if snap.users is None or self.doc_user_key is None or self.user_name_col is None:
             raise ValueError("user route not configured (users table required)")
         dcol, ucol = self.doc_user_key
-        rows = _rows(
-            search_user(
-                snap.users,
-                snap.docs,
-                name,
-                name_col=self.user_name_col,
-                user_key=ucol,
-                item_user_key=dcol,
-                time_col=self.doc_time_col,
-            )
+        found = _rows(
+            snap.users.filter(F.col(self.user_name_col) == name)
+            .orderBy(F.col(ucol))
+            .limit(1)
         )
-        user_obj = None
-        tweets = []
-        for r in rows:
-            if user_obj is None:
-                user_obj = {k: v for k, v in r.items() if k in (snap.user_cols or ())}
-            tweets.append(
-                {k: v for k, v in r.items() if k not in (snap.user_cols or ())}
-            )
-        return _ok({USER: user_obj, COUNT: len(tweets), TWEETS: tweets})
+        if not found:
+            return _ok({USER: None, COUNT: 0, TWEETS: []})
+        user_obj = found[0]
+        tweets = _rows(
+            snap.docs.filter(F.col(dcol) == user_obj[ucol])
+            .orderBy(F.col(self.doc_time_col).desc())
+            .limit(USER_ITEMS)
+        )
+        return _ok({USER: user_obj if tweets else None, COUNT: len(tweets), TWEETS: tweets})
 
     # -- extension routes (capabilities the engine adds) ----------------
     def vector(self, vec: list[float], k: int | None = None) -> dict[str, Any]:

@@ -38,12 +38,10 @@ class SearchIndex:
     postings: DataFrame
     doc_stats: DataFrame
     term_stats: DataFrame
-    # precomputed 1-row (n_docs, avg_dl), set by read_index: a served query
-    # must not re-aggregate the corpus-sized doc_stats table per request.
-    corpus: DataFrame | None = None
-    # the same (n_docs, avg_dl) as Python values, set when a served snapshot
-    # is resolved (serve_loop.read_served_index): bm25_search then scores
-    # with literals instead of joining the 1-row corpus table per request
+    # (n_docs, avg_dl) as Python values, set when a served index is
+    # resolved (read_index, serve_loop.read_served_index): a request never
+    # re-aggregates the corpus-sized doc_stats table, and bm25_search
+    # scores with literals and ranks in one task
     corpus_values: tuple[int, float | None] | None = None
     # the tombstone-filtered int8-LSH vectors (doc_id, embedding, seg,
     # bucket) of a served snapshot; None when it has no vector segments
@@ -51,8 +49,6 @@ class SearchIndex:
 
     def corpus_stats(self) -> DataFrame:
         """1-row DataFrame (n_docs, avg_dl) — kept in-plan, never collected."""
-        if self.corpus is not None:
-            return self.corpus
         return self.doc_stats.agg(
             F.count("*").alias("n_docs"),
             F.avg(F.col("doc_len").cast("double")).alias("avg_dl"),
@@ -201,11 +197,15 @@ def write_index(index: SearchIndex, base_path: str, buckets: int = 64) -> None:
 
 
 def read_index(spark: SparkSession, base_path: str) -> SearchIndex:
+    """The index :func:`write_index` wrote, resolved once like a served
+    snapshot: the 1-row corpus constants are collected here (one Spark
+    job), so ``bm25_search`` scores with literals and ranks in one task."""
+    n, avg_dl = spark.read.parquet(f"{base_path}/corpus_stats").first()
     return SearchIndex(
         postings=spark.read.parquet(f"{base_path}/postings"),
         doc_stats=spark.read.parquet(f"{base_path}/doc_stats"),
         term_stats=spark.read.parquet(f"{base_path}/term_stats"),
-        corpus=spark.read.parquet(f"{base_path}/corpus_stats"),
+        corpus_values=(n, avg_dl),
     )
 
 

@@ -490,14 +490,12 @@ def _resolve(spark: SparkSession, p: dict, rows: list) -> tuple[SearchIndex, dic
     n = sum(r["n_new"] for r in parts) - sum(r["n_rep"] for r in parts)
     s = sum(r["sum_new"] for r in parts) - sum(r["sum_rep"] for r in parts)
     avg_dl = float(s) / float(n) if n else None  # an empty corpus has none
-    corpus = spark.createDataFrame([(n, avg_dl)], "n_docs long, avg_dl double")
     term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
     vecs = _read_segments(spark, p, "vectors", segs)
     idx = SearchIndex(
         postings=alive,
         doc_stats=doc_stats,
         term_stats=term_stats,
-        corpus=corpus,
         corpus_values=(n, avg_dl),
         vectors=None if vecs is None else _alive(vecs, cuts),
     )
@@ -513,8 +511,8 @@ def read_served_index(
     - Corpus constants: the <= n_segments scalar PARTIAL rows are collected
       and folded in Python — exact integer sums, one double division,
       bit-identical to an in-plan long-to-double divide. ``corpus_values``
-      carries the pair (bm25_search scores with literals); ``corpus`` keeps
-      it as a 1-row DataFrame.
+      carries the pair: bm25_search scores with literals and ranks a
+      request's posting lists in one task.
     - Tombstones: collected once (clamped to this manifest) and applied as
       literal filters (:func:`_alive`), so the snapshot no longer
       reads the tombstone state after this call returns.

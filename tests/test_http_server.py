@@ -568,16 +568,92 @@ def test_two_phase_envelope_equals_one_plan_join(spark, tmp_path):
 def test_served_keyword_request_job_count(spark, tmp_path):
     """Deterministic cost counter for one served keyword request (the way
     plan_baseline_declared.json pins plans): under its own job group, the
-    request runs 6 Spark jobs — the ranking plan (df aggregate, its
-    broadcast, per-doc aggregate, top-k) plus one fetch each of the page's
-    doc rows and user rows. The one-plan join over an unresolved snapshot
-    ran 12."""
+    request runs 3 Spark jobs — the rank (the query's posting lists scored
+    in one task: no shuffle, no broadcast) plus one fetch each of the
+    page's doc rows and user rows — for an unpaged request, a ``start``
+    page and an ``after`` page alike. The batch-shaped rank (df aggregate,
+    its broadcast, per-doc aggregate, top-k) ran 6; the one-plan join over
+    an unresolved snapshot ran 12."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
+        rank_keyword,
+    )
+
     svc = _served_two_phase(spark, tmp_path)
-    svc.query("kafka stream")  # warm: the same jobs, first-call planning
-    with profiled("one served keyword request") as led:
-        body = svc.query("kafka stream")
-    assert body["count"] == 3 and body["data"][0]["user"] is not None
-    assert led.jobs == 6
+    first = svc.query("kafka stream")
+    cursor = (first["data"][-1]["tweet"]["score"], first["data"][-1]["tweet"]["doc_id"])
+    for kw in ({}, {"start": 3, "rows": 3}, {"rows": 3, "after": cursor}):
+        svc.query("kafka stream", **kw)  # warm: the same jobs, first-call planning
+        with profiled("one served keyword request") as led:
+            body = svc.query("kafka stream", **kw)
+        assert body["count"] == 3 and body["data"][0]["user"] is not None, kw
+        assert led.jobs == 3, kw
+
+        page = rank_keyword(
+            spark, svc.index, "kafka stream", k=3,
+            start=kw.get("start", 0), after=kw.get("after"),
+        )
+        page.collect()
+        # no shuffle or broadcast Exchange, in the initial or final plan
+        assert "Exchange" not in page._jdf.queryExecution().executedPlan().toString(), kw
+
+
+def test_user_route_equals_one_plan_join(spark, service):
+    """SearchService.user collects the users row with the name, then reads
+    that user's items with one filter. Its envelope must be byte-identical
+    to the one built from search_user's one-plan join — for users with
+    items, a user without items, an unknown name and a name two users
+    share (the lowest user key wins in both). A known name costs 2 Spark
+    jobs, an unknown one 1; the one-plan join ran 3 and 1."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.http_server import (
+        _ok,
+        search_user,
+    )
+
+    # customer 120 owns no documents (owner = doc_id % 100 + 1); customer
+    # 140 is renamed to customer 3's name, a higher key than 3's own
+    name = {
+        r["c_custkey"]: r["c_name"]
+        for r in service.users.filter(
+            F.col("c_custkey").isin([1, 2, 3, 7, 42, 100, 120])
+        ).collect()
+    }
+    users = service.users.withColumn(
+        "c_name",
+        F.when(F.col("c_custkey") == 140, F.lit(name[3])).otherwise(F.col("c_name")),
+    )
+    svc = SearchService(
+        spark, service.index, service.docs, users=users,
+        doc_user_key=service.doc_user_key, user_name_col=service.user_name_col,
+        doc_time_col=service.doc_time_col,
+    )
+
+    def one_plan(n):
+        rows = [
+            r.asDict(recursive=True)
+            for r in search_user(
+                users, svc.docs, n, name_col="c_name", user_key="c_custkey",
+                item_user_key="owner", time_col="doc_id",
+            ).collect()
+        ]
+        cols = set(users.columns)
+        user = {k: v for k, v in rows[0].items() if k in cols} if rows else None
+        tweets = [{k: v for k, v in r.items() if k not in cols} for r in rows]
+        return _ok({"user": user, "count": len(tweets), "tweets": tweets})
+
+    counts = {}
+    for n in [*name.values(), "Customer#nobody"]:
+        got = svc.user(n)
+        assert json.dumps(got, default=str) == json.dumps(one_plan(n), default=str), n
+        counts[n] = got["count"]
+    assert all(counts[name[k]] > 0 for k in (1, 2, 3, 7, 42, 100))
+    assert svc.user(name[3])["user"]["c_custkey"] == 3
+    assert svc.user(name[120])["user"] is None and counts[name[120]] == 0
+
+    for n, jobs in ((name[42], 2), ("Customer#nobody", 1)):
+        svc.user(n)  # warm: the same jobs, first-call planning
+        with profiled("one served user request") as led:
+            svc.user(n)
+        assert led.jobs == jobs, n
 
 
 def test_related_and_complete_answer_from_the_snapshot(spark, tmp_path):

@@ -95,7 +95,7 @@ def test_batch_with_near_dup_gated_and_served(spark, served, tmp_path):
     assert sorted(
         map(tuple, idx.postings.select("token", "doc_id", "doc_len", "tf").collect())
     ) == sorted(map(tuple, rebuilt.postings.collect()))
-    assert idx.corpus.collect() == rebuilt.corpus_stats().collect()
+    assert [idx.corpus_values] == [tuple(r) for r in rebuilt.corpus_stats().collect()]
 
     # served ANN: the new doc's vector is retrievable, the suppressed one not
     top = _ann(spark, base, _emb(100), k=3).collect()
@@ -120,7 +120,7 @@ def test_replace_by_id_update_tombstones_old_postings(spark, served):
     rebuilt = build_index(_df(spark, [updated] + DOCS[1:]), cache=True)
     for terms in (["kubernetes"], ["shuffles", "executors"], ["documents"]):
         assert _bm25_rows(spark, idx, terms) == _bm25_rows(spark, rebuilt, terms)
-    assert idx.corpus.collect() == rebuilt.corpus_stats().collect()
+    assert [idx.corpus_values] == [tuple(r) for r in rebuilt.corpus_stats().collect()]
 
     # vector replace-by-id: doc 1 serves its NEW embedding only
     vec_new = [float((d * 7) % 13 - 6) for d in range(64)]
@@ -241,6 +241,53 @@ def test_read_served_index_job_count(spark, served):
     assert led.jobs == 3
 
 
+def test_served_rank_equals_in_session_rank(spark, tmp_path):
+    """The served rank (the query's pruned posting lists scored in one
+    task, df a window count over them) must give the in-session rank's
+    rows over the same live docs, for an unpaged request, a ``start`` page
+    and an ``after`` page. The snapshot has two segments, a replaced doc
+    whose old text holds both query terms (df counting its tombstoned
+    postings changes every idf), a term whose postings span both segments
+    and two docs that tie on score (the cursor sits between them)."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
+        rank_keyword,
+    )
+
+    seg1 = [
+        (1, "kafka stream ingest kafka offsets commit"),
+        (2, "kafka offsets commit quickly"),
+        (3, "kafka brokers replicate logs"),
+        (4, "stream joins need watermarks"),
+        (5, "batch jobs read parquet files"),
+    ]
+    seg2 = [
+        (1, "kafka replaced text for the first doc"),
+        (6, "kafka stream sinks exactly once"),
+    ]
+    base, prefix = str(tmp_path / "serving"), _prefix(tmp_path)
+
+    def text_df(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    for seg in (seg1, seg2):
+        serve_loop.serve_batch(spark, text_df(seg), base, prefix, postings_buckets=4)
+    served = serve_loop.read_served_index(spark, base)
+    live = dict(seg1)
+    live.update(seg2)
+    in_session = build_index(text_df(sorted(live.items())), cache=True)
+
+    def rank(idx, **kw):
+        return [tuple(r) for r in rank_keyword(spark, idx, "kafka stream", **kw).collect()]
+
+    full = rank(in_session, k=10)
+    assert [d for d, _ in full] == [6, 4, 2, 3, 1]
+    assert full[2][1] == full[3][1]  # docs 2 and 3 tie
+    cursor = (full[2][1], full[2][0])  # (score, doc_id) of doc 2
+    for kw in ({"k": 10}, {"k": 3}, {"k": 2, "start": 2}, {"k": 2, "after": cursor}):
+        assert rank(served, **kw) == rank(in_session, **kw), kw
+    assert rank(served, k=2, after=cursor) == full[3:]
+
+
 def test_vector_search_served_job_count(spark, served):
     """Deterministic cost counter for one served ANN query over two
     segments and a tombstone: the snapshot resolved the manifest and the
@@ -324,7 +371,7 @@ def test_crash_before_manifest_publish_retry_converges(spark, tmp_path):
     assert sorted(map(tuple, ik.postings.select(cols).collect())) == sorted(
         map(tuple, ic.postings.select(cols).collect())
     )
-    assert ik.corpus.collect() == ic.corpus.collect()
+    assert ik.corpus_values == ic.corpus_values
     for terms in (["adaptive"], ["spark", "executors"]):
         assert _bm25_rows(spark, ik, terms) == _bm25_rows(spark, ic, terms)
     assert [tuple(r) for r in _ann(spark, crashy, _emb(100), k=3).collect()] == [
@@ -567,7 +614,7 @@ def _served_fingerprint(spark, base):
         "postings": sorted(
             map(tuple, idx.postings.select("token", "doc_id", "doc_len", "tf").collect())
         ),
-        "corpus": [tuple(r) for r in idx.corpus.collect()],
+        "corpus": idx.corpus_values,
         "bm25": {
             t: _bm25_rows(spark, idx, [t])
             for t in ("adaptive", "kubernetes", "shuffles", "documents")
