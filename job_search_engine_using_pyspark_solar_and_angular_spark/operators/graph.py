@@ -289,7 +289,7 @@ def bfs_distances(
     components, so the BOUNDED run unrolls to chained SQL CTEs for the
     oracle. Nodes not reached within ``max_hops`` are absent (not null) —
     frontier semantics, not a full outer scan per round. The source is the
-    1-row MIN(doc_a) aggregate kept in-plan (broadcast-joined, never
+    1-row MIN(doc_a) aggregate kept in-plan (joined, never
     collected to the driver); ``lineage_cut`` per round cuts lineage.
     ``edges``: pre-cut symmetric edge table (see :func:`pagerank_int`) —
     the source stays the graph-wide min node either way (a symmetric
@@ -309,7 +309,10 @@ def bfs_distances(
         "node", F.lit(0).cast("long").alias("dist")
     )
     for h in range(max_hops):
-        nxt = dist.join(e, dist.node == e.a).select(
+        # sort-merge, pinned: left to AQE, the frontier join became a
+        # broadcast join whose build side was whichever shuffle finished
+        # first, so a build ran 18 or 19 jobs by timing
+        nxt = dist.join(e.hint("merge"), dist.node == e.a).select(
             F.col("b").alias("node"), (F.col("dist") + 1).alias("dist")
         )
         dist = dist.unionByName(nxt).groupBy("node").agg(

@@ -12,6 +12,11 @@ Opt-in only: the bench, the tests and the tools wrap their own calls; no
 library path profiles itself. Jobs started on worker threads are counted
 only if those threads inherit the job group (``pyspark.InheritableThread``
 or ``inheritable_thread_target``).
+
+``compiles`` is the one counter that is not per job group: it counts the
+generated classes Janino compiled anywhere in the driver JVM while the block
+ran (Spark's ``CodegenMetrics``), so it also depends on what ran before the
+block, which classes the codegen cache still holds.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ class Ledger:
     shuffle_read_bytes: int = 0
     shuffle_write_bytes: int = 0
     spill_bytes: int = 0
+    compiles: int = 0  # process-wide, not per job group (see the module docstring)
 
     @property
     def shuffle_mb(self) -> float:
@@ -48,6 +54,12 @@ class Ledger:
     @property
     def spill_mb(self) -> float:
         return round(self.spill_bytes / _MB, 3)
+
+
+def _compiles(sc: SparkContext) -> int:
+    """Janino compiles so far in this JVM (Spark's CodegenMetrics)."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _read(sc: SparkContext, group: str, led: Ledger) -> None:
@@ -91,11 +103,13 @@ def profiled(name: str):
     group = f"profiled-{next(_SEQ)}-{name}"
     led = Ledger(name)
     sc.setJobGroup(group, name)
+    compiles0 = _compiles(sc)
     t0 = time.perf_counter()
     try:
         yield led
     finally:
         led.wall_s = round(time.perf_counter() - t0, 3)
+        led.compiles = _compiles(sc) - compiles0
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
         _read(sc, group, led)
