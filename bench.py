@@ -360,66 +360,6 @@ def bench_http_served(spark, sf_dir: str) -> float:
         return timed_min("http_query_served", lambda: None, one)
 
 
-def bench_ann_pq_served(spark, sf_dir: str) -> float:
-    """The IVFPQ served deployment shape beside ann_lsh_served_vec: ADC
-    query against the on-disk PQ index — driver-side LUT from the bounded
-    stats/codebook components, static partition pruning to the probe
-    buckets, m table lookups per candidate (embeddings never read).
-
-    r7 measurement change (mirrors ann_lsh_served_vec's contract): queries
-    run against a PRE-RESOLVED PQIndexHandle — meta/stats/codebook
-    collected and the codes relation resolved ONCE per index generation,
-    as a serving loop actually operates. The old per-call shape re-ran 3
-    driver collects + a fresh parquet resolution per query (~1.2 s fixed
-    cost at sf0.1 — the r6 'slowest serving entry' was mostly that, not
-    ADC). The handle resolution cost is paid in the warm call, outside
-    the timed region, exactly like ann_lsh_served_vec's 'resolve + list
-    once'. Index cached under .bench/ per sf."""
-    from job_search_engine_using_pyspark_solar_and_angular_spark.io import load_table
-    from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
-        ann_pq_served,
-        resolve_pq_index,
-        write_vector_index_pq,
-    )
-
-    import inspect
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    # cache key carries the build parameters, and the persisted meta row is
-    # verified against the current defaults before reuse — a default or
-    # layout change in write_vector_index_pq must rebuild, never silently
-    # bench a stale index written by older code
-    sig = inspect.signature(write_vector_index_pq)
-    params = {
-        k: sig.parameters[k].default for k in ("m", "ksub", "dim", "num_planes")
-    }
-    tag = "_".join(f"{k}{v}" for k, v in sorted(params.items()))
-    path = os.path.join(BENCH_DIR, f"pqidx_{sf_tag}_{tag}")
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def _cache_valid() -> bool:
-        if not (
-            os.path.exists(os.path.join(path, "codes", "_SUCCESS"))
-            and os.path.exists(os.path.join(path, "meta", "_SUCCESS"))
-        ):
-            return False
-        try:
-            meta = spark.read.parquet(f"{path}/meta").collect()[0]
-            return all(meta[k] == v for k, v in params.items())
-        except Exception:
-            # torn/empty/old-layout meta: self-heal by rebuilding, never
-            # abort the bench (matching the stated cache contract)
-            return False
-
-    if not _cache_valid():
-        shutil.rmtree(path, ignore_errors=True)
-        write_vector_index_pq(emb.filter(F.col("vec_id") != 0), path)
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    handle = resolve_pq_index(spark, path)  # once per index generation
-    force(ann_pq_served(spark, handle, qv, k=5))  # warm
-    return timed_min("ann_pq_served", lambda: ann_pq_served(spark, handle, qv, k=5))
-
-
 def bench_ann_served_vec(spark, sf_dir: str) -> float:
     """The served ANN deployment shape beside q20_bm25_served: the one
     int8-LSH read path (``similarity.ann_lsh_served_vec``) — the query
@@ -849,7 +789,6 @@ LADDER_SERVED = {
         bench_bm25_served,
         bench_http_served,
         bench_ann_served_vec,
-        bench_ann_pq_served,
         bench_bucketed_layout,
         bench_served_refresh,
     )
@@ -989,7 +928,6 @@ def main(argv: list[str] | None = None) -> None:
     timings["q20_bm25_served"] = bench_bm25_served(spark, sf_dir)
     timings["http_query_served"] = bench_http_served(spark, sf_dir)
     timings["ann_lsh_served_vec"] = bench_ann_served_vec(spark, sf_dir)
-    timings["ann_pq_served"] = bench_ann_pq_served(spark, sf_dir)
     if sf_dir.rstrip("/").endswith("sf0.1"):
         # the 1M-vector replication probe only makes sense at the full
         # bench scale (its index replicates the sf0.1 corpus)

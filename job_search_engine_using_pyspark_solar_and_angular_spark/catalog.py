@@ -55,12 +55,6 @@ def delete_field(df: DataFrame, name: str) -> DataFrame:
     return df.drop(name)
 
 
-def cast_field(df: DataFrame, name: str, new_type: str | T.DataType) -> DataFrame:
-    """Field re-type (Solr required a delete+re-add + full re-index; here a
-    projection — the scan still prunes/pushes down on the raw column)."""
-    return df.withColumn(name, F.col(name).cast(new_type))
-
-
 def schema_diff(a: DataFrame, b: DataFrame) -> dict[str, list[str]]:
     """Added/removed/retyped fields between two schemas — the check a
     latest-wins merge (D2) should run before unioning existing ∪ incoming."""

@@ -9,7 +9,7 @@ Reference parity notes (file:line into /root/reference):
 - classic whitespace tokenization ~ Solr ClassicTokenizer configured at
   ``Ranking Model/src/main/java/Utils/SolrFieldType.java:39-45``.
 - clean_text chain ~ notebook cell 7 of ``Spark/Word_cloud_evaluation.ipynb``
-  (entity/url/mention/hashtag strip + whitespace collapse).
+  (lowercase + non-alphanumeric strip + whitespace collapse).
 - twitter timestamp parse ~ ``Spark/Tweets_preprocessing.py:124-128,451-455``.
 """
 
@@ -17,10 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Default stopword list used by the declared queries (Q18) — deliberately tiny
-# and explicit so the DuckDB oracle states the identical list.
-BASIC_STOPWORDS = ("the", "a", "of", "and", "to")
 
 
 def tokenize_ws(col: Column | str) -> Column:
@@ -45,13 +41,6 @@ def tokenize_normalized(col: Column | str) -> Column:
     return F.filter(toks, lambda t: t != F.lit(""))
 
 
-def remove_stopwords(tokens: Column, stopwords=BASIC_STOPWORDS) -> Column:
-    """array_except-based stopword removal (reference N4). Preserves order and
-    duplicates of non-stopword tokens (unlike array_except, which dedups)."""
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    return F.filter(tokens, lambda t: ~F.array_contains(sw, t))
-
-
 def clean_text(col: Column | str) -> Column:
     """Aggressive clean chain (Q06 / notebook cell 7 analog):
     lower -> strip non [a-z0-9 ] -> collapse spaces -> trim."""
@@ -59,20 +48,6 @@ def clean_text(col: Column | str) -> Column:
     c = F.lower(c)
     c = F.regexp_replace(c, "[^a-z0-9 ]", "")
     c = F.regexp_replace(c, " +", " ")
-    return F.trim(c)
-
-
-def clean_tweet_text(col: Column | str) -> Column:
-    """Tweet-domain clean chain mirroring notebook cell 7 exactly:
-    &amp;-entities -> 'and', em-dash -> space, URLs, @mentions, #hashtags
-    stripped, whitespace collapsed."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, "&amp;", "and")
-    c = F.regexp_replace(c, "—", " ")
-    c = F.regexp_replace(c, r"https?://\S+", "")
-    c = F.regexp_replace(c, r"@\w+", "")
-    c = F.regexp_replace(c, r"#\w+", "")
-    c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
 
 
@@ -99,11 +74,3 @@ def csv_safe(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(F.regexp_replace(c, "\n", "|"), '"', "'")
 
-
-def tokenize_url_aware(col: Column | str) -> Column:
-    """URL/email-preserving tokenizer ~ Solr's UAX29URLEmailTokenizer
-    (``SolrFieldType.java:34,43``): URLs and emails survive as single tokens;
-    everything else splits on non-word chars."""
-    c = F.col(col) if isinstance(col, str) else col
-    pattern = r"(https?://\S+|[\w.+-]+@[\w-]+\.[\w.-]+|\w+)"
-    return F.regexp_extract_all(c, F.lit(pattern), 1)

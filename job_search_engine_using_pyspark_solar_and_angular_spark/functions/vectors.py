@@ -34,6 +34,3 @@ def norm(a: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
-
-def as_double_array(a: Column | str) -> Column:
-    return _c(a).cast("array<double>")

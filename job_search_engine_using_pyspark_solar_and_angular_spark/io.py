@@ -125,17 +125,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view so ``spark.sql`` works as a
-    first-class front door (reference parity: SURVEY.md §3.3 notebook cell 4)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def observe_metrics(df: DataFrame, name: str, **metrics):
     """Attach in-flight pipeline metrics to a plan (Spark's Observation
     API): named aggregate expressions evaluated DURING the job's single

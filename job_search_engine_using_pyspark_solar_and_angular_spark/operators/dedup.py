@@ -16,7 +16,7 @@ Scale notes:
 - minhash_lsh: the O(n^2) candidate explosion is bounded by banding — pairs
   are only generated within (band, bucket) groups. Bucket sizes are data-
   dependent; the band-hash groupBy is the only wide shuffle.
-- exact_dedup groups on md5(text), not text — 16-byte shuffle keys instead of
+- exact_dup_groups groups on md5(text), not text — 16-byte shuffle keys instead of
   multi-KB documents at 100 TB.
 """
 
@@ -133,12 +133,6 @@ def exact_dup_groups(
         .filter(F.col("cnt") > 1)
         .select("min_doc_id", "cnt")
     )
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the lowest-id row per distinct text (canonical exact dedup)."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def minhash_signatures(

@@ -1,12 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Three tiers, one API:
+In-plan tiers (registry queries; the query vector is a literal or a
+one-row DataFrame):
 - brute-force cosine top-k (exact baseline; X2) — per-row HOF math + one
-  TakeOrderedAndProject. At 100 TB use this per-partition as the rerank stage.
-- random-hyperplane LSH bucketing (scale path) — deterministic planes derived
-  from md5 of (plane_index, dimension), so signatures are reproducible across
-  runs/partitions; candidates only compare within a bucket.
-- embedding near-dup pairs (cosine >= threshold) via the same LSH buckets.
+  TakeOrderedAndProject (``cosine_topk``, ``cosine_topk_df``,
+  ``cosine_topk_np``).
+- IVF (``ivf_topk_df`` over ``ivf_centroids`` / ``ivf_train_kmeans``).
+- int8: per-vector quantization + coarse-then-rerank
+  (``quantized_rerank_topk``), integer-exact LSH buckets
+  (``lsh_bucket_int8``), product quantization with ADC scoring
+  (``pq_adc_topk``), leader clustering (``cluster_assign_int8``).
+- embedding near-dup pairs (cosine >= threshold) via random-hyperplane LSH
+  buckets — deterministic planes derived from md5 of (plane_index,
+  dimension), so signatures are reproducible across runs/partitions.
+
+One served tier: ``ann_lsh_served_vec`` reads float64 embeddings written
+partitioned by int8-LSH bucket (``write_vector_index_int8``, or a served
+snapshot's ``vectors``) and prunes to the query's probed buckets.
 
 No MLlib dependency: MLlib's LSH uses Vector UDTs and private seeds; plain
 arrays + md5-derived planes keep everything oracle-testable and
@@ -113,28 +123,6 @@ def lsh_bucket(
     for b in bits[1:]:
         bucket = bucket + b
     return embeddings.withColumn(bucket_col, bucket.cast("int"))
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: list[int] | None = None,
-) -> DataFrame:
-    """Approximate top-k: restrict the exact scorer to the query's LSH bucket.
-    At 100 TB, write the corpus partitioned by bucket so this prunes files."""
-    dim = len(query_vec)
-    bucketed = lsh_bucket(embeddings, num_planes, dim, vec_col)
-    qbits = 0
-    for j in range(num_planes):
-        s = sum(query_vec[d] * _plane_component(j, d) for d in range(dim))
-        if s >= 0:
-            qbits |= 1 << j
-    cand = bucketed.filter(F.col("bucket") == qbits)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col, exclude_ids)
 
 
 def ivf_centroids(
@@ -257,36 +245,6 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: list[int] | None = None,
-    assigned: DataFrame | None = None,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: probe the ``nprobe`` centroids nearest the
-    query, exact-score only their inverted lists. Pass a prebuilt
-    (assigned, centroids) pair to amortize the index across queries."""
-    if centroids is None:
-        centroids = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    if assigned is None:
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    probes = (
-        centroids.select("cent_id", cosine(F.col("centroid"), q).alias("qsim"))
-        .orderBy(F.col("qsim").desc(), F.col("cent_id"))
-        .limit(nprobe)
-        .select("cent_id")
-    )
-    cand = assigned.join(F.broadcast(probes), "cent_id")
-    return cosine_topk(cand, query_vec, k, id_col, vec_col, exclude_ids)
-
-
 def ivf_topk_df(
     embeddings: DataFrame,
     query: DataFrame,
@@ -297,7 +255,6 @@ def ivf_topk_df(
     vec_col: str = "embedding",
     query_vec_col: str = "qv",
     exclude_ids: list[int] | None = None,
-    assigned: DataFrame | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k with the query vector kept IN-PLAN: ``query`` is
@@ -307,8 +264,7 @@ def ivf_topk_df(
     (mirrors x2_cosine_topk)."""
     if centroids is None:
         centroids = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    if assigned is None:
-        assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
     probes = (
         centroids.crossJoin(F.broadcast(query))
         .select(
@@ -660,29 +616,10 @@ def quantized_rerank_topk(
     )
 
 
-def corpus_scales(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Per-dimension corpus min/max packed into ONE row (__mns, __mxs) —
-    the shared-space quantization scales of :func:`quantize_int8_corpus`,
-    exposed so a persisted index can store them and quantize queries in
-    the exact space it was built in."""
-    dims = embeddings.select(F.posexplode(vec_col).alias("pos", "x"))
-    stats = dims.groupBy("pos").agg(
-        F.min(F.col("x").cast("double")).alias("mn"),
-        F.max(F.col("x").cast("double")).alias("mx"),
-    )
-    return stats.agg(
-        F.array_sort(F.collect_list(F.struct("pos", "mn", "mx"))).alias("s")
-    ).select(
-        F.transform("s", lambda t: t.mn).alias("__mns"),
-        F.transform("s", lambda t: t.mx).alias("__mxs"),
-    )
-
-
 def quantize_int8_corpus(
     embeddings: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scales: DataFrame | None = None,
 ) -> DataFrame:
     """CORPUS-quantization: int8 codes in one SHARED space, scaled by
     per-DIMENSION corpus min/max (unlike :func:`quantize_int8`, whose
@@ -698,14 +635,20 @@ def quantize_int8_corpus(
     Scale shape: one posexplode + (dim) min/max agg — dim-count rows —
     re-packed into two arrays in a 1-ROW frame that broadcast-crossJoins
     back into the corpus; the corpus itself never shuffles and the stats
-    stay in-plan (no driver collect).
-
-    ``scales``: a precomputed :func:`corpus_scales` frame (e.g. read back
-    from a persisted index's stats file) — lets an index SERVE path and
-    later encodes share the exact scales the index was built with."""
+    stay in-plan (no driver collect)."""
     from ..io import ensure_parallelism
 
-    arrs = corpus_scales(embeddings, vec_col) if scales is None else scales
+    dims = embeddings.select(F.posexplode(vec_col).alias("pos", "x"))
+    stats = dims.groupBy("pos").agg(
+        F.min(F.col("x").cast("double")).alias("mn"),
+        F.max(F.col("x").cast("double")).alias("mx"),
+    )
+    arrs = stats.agg(
+        F.array_sort(F.collect_list(F.struct("pos", "mn", "mx"))).alias("s")
+    ).select(
+        F.transform("s", lambda t: t.mn).alias("__mns"),
+        F.transform("s", lambda t: t.mx).alias("__mxs"),
+    )
     # the per-row zip_with encode (and every integer-geometry consumer
     # downstream: PQ argmin, cluster assignment, int-L2) is CPU-bound HOF
     # math — spread a narrow scan first (no-op once the input has >= cores
@@ -730,9 +673,9 @@ def quantize_int8_corpus(
     return with_stats.select(F.col(id_col), codes.alias("codes"))
 
 
-# PQ tier defaults — ONE definition shared by pq_adc_topk,
-# write_vector_index_pq, the rerank funnel's shortlist width, the DuckDB
-# oracles (interpolated at import), and the tests.
+# PQ tier defaults — ONE definition shared by pq_adc_topk, the rerank
+# funnel's shortlist width, the DuckDB oracles (interpolated at import),
+# and the tests.
 # r5 recall study (1 query, top-5): ksub 8 -> 16 lifted the rerank funnel
 # from 0.6/0.2 to 0.8/0.6 at sf0.01/sf0.1 while widening the shortlist
 # alone did nothing; ksub=32 AT m=8 measured worse.
@@ -742,7 +685,7 @@ def quantize_int8_corpus(
 # recall@5 to 1.00 / 0.95 / 0.90 mean at sf0.001/0.01/0.1 (query-0 leg,
 # the ladder's gate: 1.0 / 1.0 / 0.8) vs 0.75 / 0.75 / 0.65 for the r5
 # (m=8, ksub=16) point. Costs (r6, recorded in CHANGES.md):
-# encode work x4 (corpus x m x ksub sub-distances), ADC serving does m=16
+# encode work x4 (corpus x m x ksub sub-distances), ADC scoring does m=16
 # lookups per candidate instead of 8, per-vector code is 16 bytes instead
 # of 8 — still 32x smaller than the float64 row. PQ_SHORTLIST stays 100:
 # widening to 200/400 bought +0.0-0.10 mean recall at 2-4x rerank cost
@@ -767,9 +710,8 @@ def _int_l2_sql(a: str, b: str) -> str:
     many of these per query: every Python-side HOF lambda costs a batch
     of py4j round trips (_create_lambda), and pq_adc_topk's m=16 argmin
     lambdas each embedding one measured ~1.7 s of DRIVER-side plan
-    construction PER QUERY — the ann_pq_served lesson (r7) applied
-    in-plan. One F.expr parse is a single round trip with the identical
-    resulting expression tree."""
+    construction PER QUERY (r7). One F.expr parse is a single round trip
+    with the identical resulting expression tree."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST((x - y) * (x - y) AS BIGINT)), "
@@ -783,9 +725,8 @@ def _pq_subs_sql(col: str, m: int, dsub: int) -> str:
     in their 1-row frames; corpus: once per row in a staged projection).
     Re-slicing inside the per-entry lambdas instead ran the PQ query 3x
     slower: every (row, codebook-entry, subspace) evaluation allocated
-    fresh slices. Shared by :func:`pq_adc_topk` and
-    :func:`write_vector_index_pq` so the in-plan tier and the persisted
-    index can never drift in sub-slice layout."""
+    fresh slices. Shared by the codebook, query and corpus sides of
+    :func:`pq_adc_topk` so they can never drift in sub-slice layout."""
     return "array(%s)" % ",".join(
         f"slice({col}, {j * dsub + 1}, {dsub})" for j in range(m)
     )
@@ -895,8 +836,8 @@ def pq_adc_topk(
     # transforms each wrapping a _int_l2 fold measured ~1.7 s of py4j
     # plan-construction latency per query (the dominant cost of
     # ext_ann_pq at sf0.1 — build, not execution); one F.expr parse per
-    # column yields the identical expression tree (r7, the ann_pq_served
-    # lesson applied in-plan; equality pinned by the unchanged oracle).
+    # column yields the identical expression tree (r7, see _int_l2_sql;
+    # equality pinned by the unchanged oracle).
     def _best_sql(jj: int) -> str:
         d = _int_l2_sql(
             f"element_at(__subs, {jj + 1})", f"element_at(e.subs, {jj + 1})"
@@ -929,276 +870,6 @@ def pq_adc_topk(
             F.expr(code_sql).alias("pq_code"),
             (F.col("__g") + F.expr(adc_sql)).alias("adc_dist2"),
         )
-        .orderBy(F.col("adc_dist2").asc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def write_vector_index_pq(
-    embeddings: DataFrame,
-    path: str,
-    num_planes: int = 4,
-    m: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVFPQ-style SERVED tier (FAISS's IVF+PQ layout in
-    Spark tables): integer-LSH coarse buckets give the partition layout
-    (a query reads only its probed partitions) and each vector's payload
-    is its m PQ sub-codebook POSITIONS — m small ints per candidate, the
-    bytes/candidate that serve ANN when even int8 full codes blow the RAM
-    budget. Three components under ``path``:
-
-    - ``meta``     — ONE row (m, ksub, dim, num_planes): the build
-      parameters; :func:`ann_pq_served` READS these instead of trusting
-      caller arguments (an m or num_planes mismatch would otherwise
-      silently NULL-poison ADC or probe the wrong buckets)
-    - ``stats``    — ONE row (__mns, __mxs): the shared-space scales;
-      queries must quantize with these to score in the index's space
-    - ``codebook`` — ``ksub`` rows (pos, cid, cc): canonical (md5, cid)
-      order, pos 1-based (the tiny window runs over ksub rows only)
-    - ``codes``    — (id, pq positions, bucket) partitioned by bucket
-
-    Codes derive from the PERSISTED stats read back (bit-identical to the
-    in-plan stats — exact double arithmetic either way — but reading them
-    back makes the build/serve contract self-evident). The codes frame is
-    lineage_cut: codebook selection and the encode pass both consume it,
-    and an uncut plan re-quantized the whole corpus for each."""
-    from pyspark.sql import Window
-
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible into m={m} subspaces")
-    dsub = dim // m
-    spark = embeddings.sparkSession
-    spark.createDataFrame(
-        [(m, ksub, dim, num_planes)],
-        "m int, ksub int, dim int, num_planes int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    corpus_scales(embeddings, vec_col).write.mode("overwrite").parquet(
-        f"{path}/stats"
-    )
-    scales = spark.read.parquet(f"{path}/stats")
-    codes = lineage_cut(
-        quantize_int8_corpus(embeddings, id_col, vec_col, scales=scales)
-    )
-    cb = (
-        _pq_leader_rows(codes, ksub, id_col)
-        # ksub rows total — the single-partition window is bounded
-        .withColumn("pos", F.row_number().over(Window.orderBy("__h", "cid")))
-        .select("pos", "cid", "cc")
-    )
-    cb.write.mode("overwrite").parquet(f"{path}/codebook")
-    cb_row = (
-        spark.read.parquet(f"{path}/codebook")
-        .agg(F.collect_list(F.struct("pos", "cid", "cc")).alias("__cb0"))
-        .select(
-            F.expr(
-                "transform(__cb0, e -> struct(e.pos AS pos, e.cid AS cid, "
-                f"{_pq_subs_sql('e.cc', m, dsub)} AS subs))"
-            ).alias("__cb")
-        )
-    )
-    pre = codes.crossJoin(F.broadcast(cb_row)).select(
-        F.col(id_col),
-        "__cb",
-        F.expr(_pq_subs_sql("codes", m, dsub)).alias("__subs"),
-        F.col("codes").alias("__codes"),
-    )
-
-    # SQL-string assembly for the m argmin transforms — see pq_adc_topk
-    # (identical expression tree, one parse instead of ~10k py4j calls)
-    def _best_sql(jj: int) -> str:
-        d = _int_l2_sql(
-            f"element_at(__subs, {jj + 1})", f"element_at(e.subs, {jj + 1})"
-        )
-        return (
-            f"array_min(transform(__cb, e -> struct({d} AS d, "
-            f"e.cid AS cid, e.pos AS pos))).pos"
-        )
-
-    encoded = pre.select(
-        F.col(id_col),
-        F.expr("array(%s)" % ",".join(_best_sql(j) for j in range(m))).alias(
-            "pq"
-        ),
-        F.col("__codes").alias("codes"),
-    )
-    b = lsh_bucket_int8(encoded, num_planes=num_planes, dim=dim)
-    (
-        b.select(id_col, "pq", "bucket")
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/codes")
-    )
-
-
-def _python_quantize_shared(
-    vec: list[float], mns: list[float], mxs: list[float]
-) -> list[int]:
-    """Shared-space int8 quantization of one query vector, driver-side —
-    the exact arithmetic of :func:`quantize_int8_corpus` (floor on doubles;
-    Python floats ARE IEEE doubles, so codes are bit-identical — pinned by
-    test_pq_served_matches_python_reference)."""
-    import math
-
-    out = []
-    for x, mn, mx in zip(vec, mns, mxs):
-        out.append(
-            0
-            if mx == mn
-            else int(math.floor((float(x) - mn) * 255.0 / (mx - mn) + 0.5)) - 128
-        )
-    return out
-
-
-def _python_bucket_int8(
-    codes: list[int], num_planes: int, dim: int, multiprobe: bool
-) -> list[int]:
-    """Integer-LSH bucket of pre-quantized codes, driver-side — same
-    Rademacher planes and >=0 convention as :func:`lsh_bucket_int8`;
-    multiprobe adds every Hamming-1 neighbor."""
-    if len(codes) != dim:
-        raise ValueError(f"query dim {len(codes)} != index dim {dim}")
-    bucket = 0
-    for j in range(num_planes):
-        if (
-            sum(c * _rademacher_component(j, d) for d, c in enumerate(codes))
-            >= 0
-        ):
-            bucket |= 1 << j
-    probes = [bucket]
-    if multiprobe:
-        probes += [bucket ^ (1 << j) for j in range(num_planes)]
-    return probes
-
-
-class PQIndexHandle:
-    """A RESOLVED PQ index — the steady-state serving shape for
-    :func:`ann_pq_served`, twin of the pre-resolved relation contract of
-    :func:`ann_lsh_served_vec`.
-
-    Resolving collects the bounded driver-side components ONCE per index
-    generation (meta + stats: 1 row each; codebook: ksub rows) and resolves
-    the ``codes`` relation ONCE (partition discovery on a fresh
-    ``spark.read.parquet`` costs whole seconds at large partition counts —
-    the r6 1M-vector probe measured 1.2-3.3 s/fresh read vs 0.14-0.27 s
-    reused). A serving loop holds one handle and serves many queries;
-    per-query cost is then the probed buckets' scan plus driver-side
-    integer LUT arithmetic — zero query-side Spark jobs before the scan."""
-
-    def __init__(self, spark, path: str):
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        self.path = path
-        self.m = meta["m"]
-        self.dim = meta["dim"]
-        self.num_planes = meta["num_planes"]
-        stats = spark.read.parquet(f"{path}/stats").collect()[0]
-        self.mns = stats["__mns"]
-        self.mxs = stats["__mxs"]
-        self.codebook = sorted(
-            spark.read.parquet(f"{path}/codebook").collect(),
-            key=lambda r: r["pos"],
-        )
-        self.codes = spark.read.parquet(f"{path}/codes")
-
-
-def resolve_pq_index(spark, path: str) -> PQIndexHandle:
-    """Resolve an on-disk IVFPQ index (written by
-    :func:`write_vector_index_pq`) into a reusable serving handle."""
-    return PQIndexHandle(spark, path)
-
-
-def ann_pq_served(
-    spark,
-    index: str | PQIndexHandle,
-    query_vec: list[float],
-    k: int = 5,
-    multiprobe: bool = True,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Serve PQ-ADC ANN from the on-disk IVFPQ index: quantize the query
-    into the index's persisted shared space, compute its probe buckets, and
-    build the classic ADC LOOKUP TABLE — lut[j][pos] = integer L2 between
-    the query's j-th sub-code and sub-codebook entry ``pos`` — all
-    driver-side from the bounded index components (meta + stats: 1 row
-    each; codebook: ksub rows — the same serving-envelope class as the
-    manifest collect). The scan then reads ONLY the probed ``bucket=``
-    partitions (static partition pruning, pinned by PartitionFilters plan
-    test) and scores each candidate with m array lookups on its m stored
-    positions — never touching embeddings or even full int8 codes.
-    Returns (id, adc_dist2) ascending, id tie-break.
-
-    ``index``: the index PATH, or — the steady-state serving shape — a
-    :class:`PQIndexHandle` from :func:`resolve_pq_index` reused across
-    queries. A path re-collects meta/stats/codebook and re-resolves the
-    codes relation on EVERY call (3 driver jobs + partition discovery —
-    measured ~1.2 s of per-query fixed cost at sf0.1); the handle pays
-    that once per index generation, identical results.
-
-    The build parameters (m, dim, num_planes) come from the index's
-    persisted ``meta`` row, never from caller arguments: a trusted-caller
-    mismatch would silently NULL-poison every ADC sum (element_at past the
-    pq array returns NULL and NULLs sort first) or probe the wrong bucket
-    set — the contract is the index's to enforce. The query vector's
-    length is still validated against the persisted dim."""
-    h = index if isinstance(index, PQIndexHandle) else PQIndexHandle(spark, index)
-    m, dim, num_planes = h.m, h.dim, h.num_planes
-    if len(query_vec) != dim:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {dim}")
-    cb = h.codebook
-    qc = _python_quantize_shared(query_vec, h.mns, h.mxs)
-    probes = _python_bucket_int8(qc, num_planes, dim, multiprobe)
-    dsub = dim // m
-    lut = [
-        [
-            sum(
-                (qc[j * dsub + i] - row["cc"][j * dsub + i]) ** 2
-                for i in range(dsub)
-            )
-            for row in cb
-        ]
-        for j in range(m)
-    ]
-    idx = h.codes.filter(F.col("bucket").isin(probes))
-    # Corrupt-row guard: a stored pq position outside [1, ksub] (torn or
-    # mismatched index) would make element_at return NULL, NULL-poison
-    # adc_dist2, and — NULLs sorting FIRST under asc — silently TOP the
-    # k results. Fail loudly instead: assert_true on the position range,
-    # folded into the sum as a NULL-coalesced zero (the same ~0-cost shape
-    # as lsh_bucket_int8's dim guard — a when/otherwise(raise_error) wrap
-    # of the lookups would block subexpression reuse).
-    ksub = len(cb)
-    pos_ok = F.assert_true(
-        F.forall("pq", lambda p: (p >= 1) & (p <= F.lit(ksub)))
-        & (F.size("pq") == m),
-        F.concat(
-            F.lit(f"pq positions out of [1, {ksub}] or length != {m} "
-                  f"for {id_col}="),
-            F.col(id_col).cast("string"),
-        ),
-    )
-    # The m LUT lookups are assembled as ONE parsed SQL expression, not m
-    # chained Column ops over nested F.array literals: each F.lit / Column
-    # operator is a py4j round trip, and the m x ksub literal table costs
-    # ~1,100 of them — measured 1.1 s of DRIVER-side per-query latency at
-    # m=16/ksub=32 (the r6 'slowest serving entry' was expression
-    # construction, not ADC). One F.expr string is a single round trip and
-    # parses in ~2 ms; the resulting plan is identical (integer literals,
-    # same element_at lookups).
-    adc_sql = " + ".join(
-        "element_at(array({vals}), element_at(pq, {j}))".format(
-            vals=",".join(f"{int(v)}L" for v in lut[j]), j=j + 1
-        )
-        for j in range(m)
-    )
-    adc = F.coalesce(pos_ok.cast("long"), F.lit(0).cast("long")) + F.expr(
-        adc_sql
-    )
-    return (
-        idx.select(F.col(id_col), adc.alias("adc_dist2"))
         .orderBy(F.col("adc_dist2").asc(), F.col(id_col))
         .limit(k)
     )
@@ -1324,9 +995,10 @@ def write_vector_index_int8(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> None:
-    """Materialize the SERVED ANN tier: full-precision vectors + their int8
-    codes, written partitioned by integer-LSH bucket — the layout where a
-    query reads ONLY its bucket's files (partition pruning IS the index).
+    """Materialize the SERVED ANN tier: full-precision vectors, written
+    partitioned by the integer-LSH bucket of their int8 codes (the codes
+    themselves are not stored) — the layout where a query reads ONLY its
+    bucket's files (partition pruning IS the index).
     ``repartition(bucket)`` first so each bucket directory is written by
     the tasks owning it (no files-per-task × buckets explosion).
     ``dim`` must match the embedding length (enforced per-row by
@@ -1355,6 +1027,27 @@ def _python_quantize_vec(vec: list[float]) -> list[int]:
     ]
 
 
+def _python_bucket_int8(
+    codes: list[int], num_planes: int, dim: int, multiprobe: bool
+) -> list[int]:
+    """Integer-LSH bucket of pre-quantized codes, driver-side — same
+    Rademacher planes and >=0 convention as :func:`lsh_bucket_int8`;
+    multiprobe adds every Hamming-1 neighbor."""
+    if len(codes) != dim:
+        raise ValueError(f"query dim {len(codes)} != index dim {dim}")
+    bucket = 0
+    for j in range(num_planes):
+        if (
+            sum(c * _rademacher_component(j, d) for d, c in enumerate(codes))
+            >= 0
+        ):
+            bucket |= 1 << j
+    probes = [bucket]
+    if multiprobe:
+        probes += [bucket ^ (1 << j) for j in range(num_planes)]
+    return probes
+
+
 def ann_lsh_served_vec(
     spark,
     index: DataFrame,
@@ -1372,12 +1065,11 @@ def ann_lsh_served_vec(
     ``vectors``, keyed by ``doc_id``). The query arrives as a VECTOR
     and is quantized and bucketed driver-side (pure integer arithmetic,
     zero Spark jobs); the scan reads only the probed ``bucket=`` partitions
-    through a static ``isin`` filter (static partition pruning — the same
-    route :func:`ann_pq_served` takes), and candidates rank by round-4
-    cosine, id tie-break. Returns (id, sim). Rows equal the in-session
-    registry twins, ``ext_ann_lsh_multiprobe`` and (``multiprobe=False``)
-    ``ext_ann_lsh_quantized``: same integer bucket arithmetic, same
-    ranking (pinned by test).
+    through a static ``isin`` filter (static partition pruning), and
+    candidates rank by round-4 cosine, id tie-break. Returns (id, sim).
+    Rows equal the in-session registry twins, ``ext_ann_lsh_multiprobe``
+    and (``multiprobe=False``) ``ext_ann_lsh_quantized``: same integer
+    bucket arithmetic, same ranking (pinned by test).
 
     ``multiprobe=True`` (the default) probes the query's bucket plus every
     Hamming-1 neighbor (Lv et al., multi-probe LSH): 1+num_planes of the
@@ -1401,10 +1093,10 @@ def ann_lsh_served_vec(
         raise ValueError(f"query dim {len(query_vec)} != index dim {dim}")
     codes = _python_quantize_vec(query_vec)
     probes = _python_bucket_int8(codes, num_planes, dim, multiprobe)
-    # One parsed expression instead of dim F.lit round trips (the ADC
-    # lesson — see ann_pq_served): Python repr is the shortest round-trip
-    # form, and Java's correctly-rounded parse recovers the identical
-    # double, so the literal array is bit-equal to the F.lit path.
+    # One parsed expression instead of dim F.lit round trips (see
+    # _int_l2_sql): Python repr is the shortest round-trip form, and
+    # Java's correctly-rounded parse recovers the identical double, so
+    # the literal array is bit-equal to the F.lit path.
     # Non-finite components (never produced by the writer) keep the
     # Column-literal path rather than relying on string spellings of
     # NaN/Infinity surviving the SQL parser's cast.
@@ -1420,69 +1112,6 @@ def ann_lsh_served_vec(
         .select(
             F.col(id_col),
             (F.round(cosine(F.col(vec_col), qlit), 4) + F.lit(0.0)).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def write_vector_index_ivf(
-    embeddings: DataFrame,
-    path: str,
-    centroids: DataFrame | None = None,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The IVF twin of :func:`write_vector_index_int8`: vectors written
-    partitioned by their inverted-list id (``cent_id``), so a query scans
-    only its probed lists. Returns nothing; pair with
-    :func:`ivf_topk_served`. Centroids default to the deterministic
-    lowest-id codebook (pass a k-means codebook for production)."""
-    if centroids is None:
-        centroids = ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-    assigned.repartition(F.col("cent_id")).write.mode("overwrite").partitionBy(
-        "cent_id"
-    ).parquet(path)
-
-
-def ivf_topk_served(
-    spark,
-    path: str,
-    query: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """Serve IVF ANN from the on-disk inverted lists: pick the ``nprobe``
-    centroids nearest the query (broadcast, in-plan), then read ONLY those
-    ``cent_id`` partitions (dynamic partition pruning), exact-score the
-    candidates. The float-tier twin of :func:`ann_lsh_served_vec` —
-    rows-only in the correctness harness like the in-session IVF, recall
-    asserted in tests."""
-    probes = (
-        centroids.crossJoin(F.broadcast(query))
-        .select(
-            "cent_id",
-            cosine(F.col("centroid"), F.col(query_vec_col)).alias("qsim"),
-        )
-        .orderBy(F.col("qsim").desc(), F.col("cent_id"))
-        .limit(nprobe)
-        .select("cent_id")
-    )
-    idx = spark.read.parquet(path)
-    return (
-        idx.join(F.broadcast(probes), "cent_id")
-        .crossJoin(F.broadcast(query.select(query_vec_col)))
-        .select(
-            id_col,
-            (F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 4) + F.lit(0.0)).alias(
-                "sim"
-            ),
         )
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)

@@ -1,9 +1,9 @@
 """Top-k, pagination, and salting helpers (SURVEY.md §2.7).
 
-top_k maps to Spark's TakeOrderedAndProject physical operator — per-partition
-heaps + a k-row driver merge, never a global sort. That is the scale-correct
-replacement for the reference's Solr ``rows=k`` retrievals
-(``Main/SolrRanker.java:77,104,145``).
+``orderBy(...).limit(k)`` maps to Spark's TakeOrderedAndProject physical
+operator — per-partition heaps + a k-row driver merge, never a global sort.
+That is the scale-correct replacement for the reference's Solr ``rows=k``
+retrievals (``Main/SolrRanker.java:77,104,145``).
 """
 
 from __future__ import annotations
@@ -14,26 +14,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """orderBy(...).limit(k) — Catalyst compiles to TakeOrderedAndProject."""
-    return df.orderBy(*order).limit(k)
-
-
 def paginate(df: DataFrame, order: list[Column], offset: int, limit: int) -> DataFrame:
     """Offset/limit pagination (reference O5 — the Angular client's skip/limit
-    that the server ignored, ``api/Handler.java:34``). Uses Spark's native
-    ``offset``/``limit`` (3.4+): Catalyst plans sort+offset+limit as a
-    bounded global-limit — per-partition heaps of offset+limit rows, no
-    single-partition row_number window. Window fallback kept for pre-3.4.
-    For deep offsets prefer keyset pagination on the order columns."""
-    if hasattr(df, "offset"):
-        return df.orderBy(*order).offset(offset).limit(limit)
-    w = Window.orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") > offset) & (F.col("__rn") <= offset + limit))
-        .drop("__rn")
-    )
+    that the server ignored, ``api/Handler.java:34``). Spark's native
+    ``offset``/``limit``: Catalyst plans sort+offset+limit as a bounded
+    global-limit — per-partition heaps of offset+limit rows, no
+    single-partition row_number window. For deep offsets prefer keyset
+    pagination on the order columns."""
+    return df.orderBy(*order).offset(offset).limit(limit)
 
 
 def top_k_per_group(

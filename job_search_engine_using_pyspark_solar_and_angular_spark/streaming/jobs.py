@@ -153,18 +153,13 @@ def streaming_dedup(
     """Watermark-bounded streaming dedup: first-seen wins within the horizon
     (exact-once event processing).
 
-    Uses ``dropDuplicatesWithinWatermark`` (Spark 3.5+): duplicates are
-    collapsed even when retries carry jittered event times, and — the part
-    that matters at 100 TB — per-key state is EVICTED once the key's event
-    time passes the watermark. Plain ``dropDuplicates(keys)`` after a
-    watermark only evicts state when the event-time column is IN the key
-    subset; with bare business keys its state store grows without bound.
-    Fallback for older builds: include ``ts_col`` in the subset (bounded
-    state, but only exact (key, ts) replays dedup)."""
-    wm = df.withWatermark(ts_col, watermark)
-    if hasattr(wm, "dropDuplicatesWithinWatermark"):
-        return wm.dropDuplicatesWithinWatermark(key_cols)
-    return wm.dropDuplicates([*key_cols, ts_col])
+    Uses ``dropDuplicatesWithinWatermark``: duplicates are collapsed even
+    when retries carry jittered event times, and — the part that matters at
+    100 TB — per-key state is EVICTED once the key's event time passes the
+    watermark. Plain ``dropDuplicates(keys)`` after a watermark only evicts
+    state when the event-time column is IN the key subset; with bare
+    business keys its state store grows without bound."""
+    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 
 
 def stream_stream_join(

@@ -213,8 +213,7 @@ def test_summary_line_carries_per_query_timings(monkeypatch, capsys, tmp_path):
     monkeypatch.setattr(declared, "release_query_caches", lambda name: False)
     for name, value in [
         ("bench_bm25_served", 0.1), ("bench_http_served", 0.2),
-        ("bench_ann_served_vec", 0.4),
-        ("bench_ann_pq_served", 0.5), ("bench_served_refresh", 0.6),
+        ("bench_ann_served_vec", 0.4), ("bench_served_refresh", 0.6),
     ]:
         monkeypatch.setattr(bench, name, lambda *a, v=value: v)
     monkeypatch.setattr(bench, "bench_bucketed_layout", lambda *a: {
@@ -231,7 +230,7 @@ def test_summary_line_carries_per_query_timings(monkeypatch, capsys, tmp_path):
     assert first == last
     want = {
         "q_a": 1.25, "q_b": 1.25, "q20_bm25_served": 0.1, "http_query_served": 0.2,
-        "ann_lsh_served_vec": 0.4, "ann_pq_served": 0.5,
+        "ann_lsh_served_vec": 0.4,
         "ext_tpch_q18_bucketed": 0.7, "ext_tpch_q21_bucketed": 0.7,
     }
     assert last["queries"] == want, "summary line no longer carries the per-query timings map"

@@ -28,20 +28,6 @@ def test_approx_distinct_within_5pct(spark):
     assert abs(approx - exact) <= 0.05 * exact
 
 
-def test_ann_recall_vs_exact(spark):
-    """LSH ANN returns a subset of reasonable similarity: every ANN hit's
-    cosine must be >= the 10th-best exact score (weak but deterministic), and
-    the buckets must prune (candidates < corpus)."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).collect()[0]
-    qvec = [float(x) for x in qrow["embedding"]]
-    exact = similarity.cosine_topk(emb, qvec, k=10, exclude_ids=[0]).collect()
-    floor = exact[-1]["sim"]
-    ann = similarity.ann_topk(emb, qvec, k=5, exclude_ids=[0]).collect()
-    assert ann, "query bucket empty at test sf — lower num_planes"
-    assert all(r["sim"] >= floor or r["sim"] >= 0 for r in ann)
-
-
 def test_lsh_buckets_prune(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     b = similarity.lsh_bucket(emb, num_planes=8)
@@ -206,20 +192,41 @@ def test_merge_latest_idempotent(spark):
 
 
 def test_ivf_topk_df_matches_list_variant(spark):
-    """ivf_topk_df (in-plan query vector) must return exactly what ivf_topk
-    (literal query vector) returns — same codebook, same probes, same scores."""
+    """ivf_topk_df must equal exact cosine top-k over the inverted lists of
+    the nprobe centroids nearest the query, with the probes chosen here in
+    Python (same left-to-right double arithmetic as functions.vectors)."""
+    import math
+
+    def _cos(a, b):
+        d = aa = bb = 0.0
+        for x, y in zip(a, b):
+            d += x * y
+            aa += x * x
+            bb += y * y
+        return d / (math.sqrt(aa) * math.sqrt(bb))
+
     emb = load_table(spark, SF_DIR, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    a = [
+    cents = similarity.ivf_centroids(emb, n_centroids=16)
+    rows = cents.collect()
+    assert len(rows) == 16
+    ranked = sorted(
+        rows,
+        key=lambda r: (-_cos([float(x) for x in r["centroid"]], qvec), r["cent_id"]),
+    )
+    probes = [r["cent_id"] for r in ranked[:4]]
+    lists = similarity.ivf_assign(emb, cents).filter(F.col("cent_id").isin(probes))
+    assert 0 < lists.count() < emb.count()
+    want = [
         (r["vec_id"], r["sim"])
-        for r in similarity.ivf_topk(emb, qvec, k=5, nprobe=4, exclude_ids=[0]).collect()
+        for r in similarity.cosine_topk(lists, qvec, k=5, exclude_ids=[0]).collect()
     ]
-    b = [
+    got = [
         (r["vec_id"], r["sim"])
         for r in similarity.ivf_topk_df(emb, q, k=5, nprobe=4, exclude_ids=[0]).collect()
     ]
-    assert a == b
+    assert got == want and len(got) == 5
 
 
 def test_cosine_topk_np_matches_exact(spark):
@@ -343,32 +350,6 @@ def test_ann_lsh_served_vec_matches_dataframe_path(spark, tmp_path):
         served = similarity.ann_lsh_served_vec(spark, idx, qv, k=5, multiprobe=mp)
         got = [(r["vec_id"], r["sim"]) for r in served.collect()]
         assert got == want and len(got) == 5, f"multiprobe={mp}"
-
-
-def test_served_ivf_index_matches_in_session(spark, tmp_path):
-    """IVF served tier: on-disk inverted lists (partitioned by cent_id)
-    queried with nprobe probes must return exactly the in-session
-    ivf_topk_df results, and the scan must go through dynamic partition
-    pruning."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    corpus = emb.filter(F.col("vec_id") != 0)
-    cents = similarity.ivf_centroids(corpus, n_centroids=16)
-    path = str(tmp_path / "ivfidx")
-    similarity.write_vector_index_ivf(corpus, path, centroids=cents)
-
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    served = similarity.ivf_topk_served(spark, path, q, cents, k=5, nprobe=4)
-    got = [(r["vec_id"], r["sim"]) for r in served.collect()]
-    want = [
-        (r["vec_id"], round(r["sim"], 4))
-        for r in similarity.ivf_topk_df(
-            corpus, q, k=5, nprobe=4, centroids=cents
-        ).collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want] and len(got) == 5
-
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruningexpression" in plan, plan[:1500]
 
 
 def test_batch_cosine_matches_single_query_scorer(spark):
@@ -1377,66 +1358,6 @@ def test_pq_adc_exact_for_codebook_exemplars(spark):
     assert n_exact == PQ_KSUB
 
 
-def test_pq_served_matches_python_reference_and_prunes(spark, tmp_path):
-    """IVFPQ served tier end-to-end: (a) ADC scores from the on-disk index
-    match a pure-Python reference computed from the persisted stats +
-    codebook + codes (independent arithmetic: driver-side shared-space
-    quantization, LUT build, per-candidate table lookups); (b) the result
-    set is exactly the probed buckets' members; (c) the scan reaches
-    parquet through STATIC partition pruning on the bucket column."""
-    from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
-        PQ_M,
-        _python_bucket_int8,
-        _python_quantize_shared,
-        ann_pq_served,
-        write_vector_index_pq,
-    )
-
-    dsub = 64 // PQ_M
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    corpus = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "pqidx")
-    write_vector_index_pq(corpus, path)
-    qv = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    ]
-
-    served = ann_pq_served(spark, path, qv, k=10_000)
-    got = [(r["vec_id"], r["adc_dist2"]) for r in served.collect()]
-
-    stats = spark.read.parquet(f"{path}/stats").collect()[0]
-    cb = sorted(
-        spark.read.parquet(f"{path}/codebook").collect(),
-        key=lambda r: r["pos"],
-    )
-    codes_rows = spark.read.parquet(f"{path}/codes").collect()
-    qc = _python_quantize_shared(qv, stats["__mns"], stats["__mxs"])
-    probes = set(_python_bucket_int8(qc, 4, 64, True))
-    want = []
-    for r in codes_rows:
-        if r["bucket"] not in probes:
-            continue
-        adc = 0
-        for j, pos in enumerate(r["pq"]):
-            cc = cb[pos - 1]["cc"]
-            adc += sum(
-                (qc[j * dsub + i] - cc[j * dsub + i]) ** 2
-                for i in range(dsub)
-            )
-        want.append((r["vec_id"], adc))
-    want.sort(key=lambda t: (t[1], t[0]))
-    assert got == want and len(got) > 0
-
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    import re
-
-    pf = re.search(r"PartitionFilters: \[[^\]]*bucket[^\]]*\]", plan)
-    assert pf is not None, plan[:1500]
-
-
 def test_quantize_int8_boundary_parity_spark_vs_duckdb(spark):
     """Boundary sweep of the shared-space int8 quantization
     (floor((x-mn)*255/(mx-mn)+0.5) - 128) on SYNTHETIC vectors engineered
@@ -1535,81 +1456,6 @@ def test_served_lsh_default_recall_floor(spark):
         for r in QUERIES["ext_ann_tier_recall"](spark, SF_DIR).collect()
     }
     assert rows["lsh_served_default"] >= 0.4, rows
-
-
-def test_pq_served_rejects_corrupt_positions(spark, tmp_path):
-    """A torn/mismatched IVFPQ index whose stored pq positions fall outside
-    [1, ksub] must FAIL LOUDLY at serve time, never silently float corrupt
-    candidates to the top: element_at would return NULL for such a
-    position, and NULLs sort FIRST under the ascending adc_dist2 order —
-    the assert_true guard turns that into a per-row error instead."""
-    from py4j.protocol import Py4JJavaError
-
-    from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
-        ann_pq_served,
-        write_vector_index_pq,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    corpus = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "pqidx")
-    write_vector_index_pq(corpus, path)
-    qv = [
-        float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    ]
-    # sanity: intact index serves
-    assert ann_pq_served(spark, path, qv, k=5).count() == 5
-
-    # corrupt EVERY row's first position to 0 (positions are 1-based, so 0
-    # is out of range for ANY ksub) so the bad rows land in the probed
-    # buckets regardless of layout
-    codes = spark.read.parquet(f"{path}/codes")
-    corrupt = codes.withColumn(
-        "pq",
-        F.concat(F.array(F.lit(0)), F.slice("pq", 2, F.size("pq") - 1)),
-    )
-    tmp = str(tmp_path / "codes2")
-    corrupt.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(f"{path}/codes")
-    shutil.move(tmp, f"{path}/codes")
-
-    with pytest.raises((Py4JJavaError, Exception), match="pq positions out of"):
-        ann_pq_served(spark, path, qv, k=5).collect()
-
-
-def test_pq_served_handle_matches_path_and_validates_dim(spark, tmp_path):
-    """The steady-state serving shape — a resolve_pq_index handle reused
-    across queries — must return results IDENTICAL to the per-call path
-    shape (the handle only hoists the bounded meta/stats/codebook collects
-    and the codes-relation resolution out of the query; probes and ADC
-    arithmetic are unchanged), and must keep the persisted-dim validation:
-    a wrong-length query raises loudly, never NULL-poisons the ADC sums."""
-    from job_search_engine_using_pyspark_solar_and_angular_spark.operators.similarity import (
-        ann_pq_served,
-        resolve_pq_index,
-        write_vector_index_pq,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    corpus = emb.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "pqidx")
-    write_vector_index_pq(corpus, path)
-    qvs = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()
-    ]
-
-    handle = resolve_pq_index(spark, path)
-    for qv in qvs:  # one handle, many queries — the serving-loop shape
-        via_handle = ann_pq_served(spark, handle, qv, k=7).collect()
-        via_path = ann_pq_served(spark, path, qv, k=7).collect()
-        assert [tuple(r) for r in via_handle] == [tuple(r) for r in via_path]
-        assert len(via_handle) == 7
-
-    with pytest.raises(ValueError, match="query dim"):
-        ann_pq_served(spark, handle, qvs[0][:10], k=5)
 
 
 def test_ann_lsh_served_vec_rejects_wrong_dim(spark, tmp_path):

@@ -98,13 +98,14 @@ def test_ivf_recall_vs_exact(spark):
     (recall floor for the fixture corpus; exact scorer is the rerank path)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     exact = {
         r["vec_id"]
         for r in similarity.cosine_topk(emb, qvec, k=5, exclude_ids=[0]).collect()
     }
     approx = {
         r["vec_id"]
-        for r in similarity.ivf_topk(emb, qvec, k=5, nprobe=4, exclude_ids=[0]).collect()
+        for r in similarity.ivf_topk_df(emb, q, k=5, nprobe=4, exclude_ids=[0]).collect()
     }
     assert len(exact & approx) >= 2, (exact, approx)
 
